@@ -195,13 +195,12 @@ object Maintain {
     * data files), ONE segment-clustered write of all of them
     * ([[Indexer.writeSegmented]]'s repartition-by-segment +
     * `maxRecordsPerFile` — big segments split automatically, no per-segment
-    * row counting), then a pure-filesystem swap per segment (delete old dir
-    * → rename new in). Never a job per segment: a 1000-segment store
-    * compacts in one Spark job plus metadata renames, where a
-    * segment-at-a-time loop would pay 2000 serial job overheads. A crash
-    * mid-swap leaves untouched segments intact and the in-flight one's data
-    * preserved in the staging dir. Returns (segment, filesBefore,
-    * filesAfter).
+    * row counting), then the [[StoreFs.swapPartitions]] rename-aside swap
+    * per segment. Never a job per segment: a 1000-segment store compacts
+    * in one Spark job plus metadata renames, where a segment-at-a-time
+    * loop would pay 2000 serial job overheads. A crash at any point leaves
+    * every segment's data under a name the next run's entry-time recovery
+    * restores. Returns (segment, filesBefore, filesAfter).
     *
     * The reference has no analog — ES merges Lucene segments internally;
     * a parquet store must do this itself.
@@ -229,6 +228,8 @@ object Maintain {
     def dataFileCount(dir: Path): Int =
       fs.listStatus(dir).count(f => f.isFile &&
         !f.getPath.getName.startsWith("_") && !f.getPath.getName.startsWith("."))
+    // a segment set aside by a crashed swap must be back before the listing
+    StoreFs.recover(spark, tablePath)
     if (!fs.exists(root)) return Seq.empty
     val fragmented = fs.listStatus(root).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith(segmentCol + "="))
@@ -236,116 +237,17 @@ object Maintain {
       .map(st => st.getPath -> dataFileCount(st.getPath))
       .filter(_._2 >= minFilesToCompact)
     if (fragmented.isEmpty) return Seq.empty
-    val tmp = new Path(root, ".compact_tmp")
-    fs.delete(tmp, true)
     // one scan + one clustered write for ALL fragmented segments; basePath
     // keeps the partition column so the staging layout mirrors the store's
-    val df = spark.read.option("basePath", tablePath)
-      .parquet(fragmented.map(_._1.toString): _*)
-    Indexer.writeSegmented(df, tmp.toString, segmentCol, maxRecordsPerFile)
-    val report = fragmented.map { case (dir, before) =>
-      val staged = new Path(tmp, dir.getName)
-      // Hadoop FileSystem signals many failures by RETURNING false, not
-      // throwing — an unchecked false here would leave the segment's only
-      // copy in the staging dir, invisible to reads
-      require(fs.exists(staged), s"staging write produced no $staged")
-      require(fs.delete(dir, true), s"failed to delete $dir before swap")
-      require(fs.rename(staged, dir),
-        s"failed to swap $staged into $dir — data preserved in $staged")
+    StoreFs.swapPartitions(spark, tablePath, fragmented.map(_._1.getName)) { tmp =>
+      val df = spark.read.option("basePath", tablePath)
+        .parquet(fragmented.map(_._1.toString): _*)
+      Indexer.writeSegmented(df, tmp, segmentCol, maxRecordsPerFile)
+    }
+    fragmented.map { case (dir, before) =>
       (unescape(dir.getName.stripPrefix(segmentCol + "=")), before, dataFileCount(dir))
     }
-    fs.delete(tmp, true)
-    report
   }
-
-  /** Atomic overwrite of a store directory whose NEW contents are computed
-    * FROM its current contents (read → merge → rewrite): stage the rewrite
-    * into a sibling temp dir (running the plan — and therefore the read of
-    * the old data — to completion), then delete the original and rename
-    * the staging dir in. Spark cannot `mode("overwrite")` a path that
-    * feeds its own plan; this is the same swap discipline as
-    * [[compactSegments]] / [[TextIndex.compactPostings]], shared by the
-    * store append paths. Same single-writer contract as compactSegments;
-    * READERS must also be excluded during the swap — the store path is
-    * briefly a fresh rename target, and a reader racing it can see a
-    * partial listing. The swap keeps a recoverable copy at every step:
-    * the old data is renamed ASIDE (`.rewrite_old`) before the staging
-    * dir renames in, so a crash at any point leaves either the original
-    * or the fully-written replacement on disk under a recoverable name —
-    * never a window with no copy at the store path's parent. A leftover
-    * `.rewrite_old` from a previous crash is stale (its replacement was
-    * fully staged when it was renamed aside) and is cleared on entry. */
-  private[graft] def stagedRewrite(spark: org.apache.spark.sql.SparkSession,
-                                   path: String)(write: String => Unit): Unit = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(root), s"stagedRewrite target does not exist: $path")
-    val tmp = new Path(root.getParent, root.getName + ".rewrite_tmp")
-    val old = new Path(root.getParent, root.getName + ".rewrite_old")
-    fs.delete(tmp, true)
-    fs.delete(old, true)
-    write(tmp.toString)
-    // crash between these renames: the data survives as .rewrite_old (and
-    // the replacement as .rewrite_tmp) — recover by renaming either back
-    require(fs.rename(root, old), s"staged rewrite rename failed: $root -> $old")
-    require(fs.rename(tmp, root), s"staged rewrite rename failed: $tmp -> $root " +
-      s"— previous contents preserved at $old")
-    fs.delete(old, true)
-  }
-
-  /** Batch-application stamp INSIDE a store directory: a `_graft_applied`
-    * file carrying the last batch id whose merge produced this directory's
-    * contents. Underscore-prefixed, so parquet readers ignore it. Written
-    * into the STAGING dir of a [[stagedRewrite]] before the swap, it makes
-    * the (merge, stamp) pair atomic — the one property the store-group
-    * `_graft_batch` marker (written after ALL of a batch's appends) cannot
-    * give an individual additive store, and exactly what lets an
-    * at-least-once redelivery of a half-applied batch skip the merges that
-    * already landed instead of double-counting them. */
-  private def readLongMarker(spark: org.apache.spark.sql.SparkSession,
-                             dir: String, name: String): Option[Long] = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir, name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                finally in.close()
-      raw.toLongOption
-    }
-  }
-
-  private def writeLongMarker(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, name: String, v: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val p = new Path(dir, name)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  private[graft] def readAppliedStamp(spark: org.apache.spark.sql.SparkSession,
-                                      dir: String): Option[Long] =
-    readLongMarker(spark, dir, "_graft_applied")
-
-  private[graft] def writeAppliedStamp(spark: org.apache.spark.sql.SparkSession,
-                                       dir: String, id: Long): Unit =
-    writeLongMarker(spark, dir, "_graft_applied", id)
-
-  /** Hash-bucket count of a keyed count-store ledger (r15): stamped into
-    * `_graft_buckets` when the ledger is written — the layout is a
-    * write-time property (`graft.countstore.ledgerBuckets` only seeds NEW
-    * stores); absent on a pre-r15 unbucketed ledger, whose delete sweeps
-    * fall back to the whole-ledger rewrite. */
-  private[graft] def readBucketsMarker(spark: org.apache.spark.sql.SparkSession,
-                                       dir: String): Option[Int] =
-    readLongMarker(spark, dir, "_graft_buckets").map(_.toInt)
-
-  private[graft] def writeBucketsMarker(spark: org.apache.spark.sql.SparkSession,
-                                        dir: String, n: Int): Unit =
-    writeLongMarker(spark, dir, "_graft_buckets", n.toLong)
 
   /** M-plane freshness for the phrase-suggester LM store — the sanctioned
     * rebuild for corpora that take EDITS, as a maintenance operator with a
@@ -354,7 +256,7 @@ object Maintain {
     * .upsertStreamServed]] deliberately skips them and an edit-heavy
     * corpus would otherwise serve stale suggestions with no sanctioned
     * freshness path. Rebuilds the unigram/bigram tables from the CURRENT
-    * corpus into a staging sibling and swaps WHOLE (the [[stagedRewrite]]
+    * corpus into a staging sibling and swaps WHOLE (the [[StoreFs.stagedRewrite]]
     * discipline — a reader never sees one rebuilt sub-table next to a
     * stale one, which two independent overwrites would expose), stamping
     * the build time into `_graft_built`.
@@ -389,7 +291,7 @@ object Maintain {
   /** The cadence-gated whole-store rebuild shared by the suggester stores:
     * act only when the `_graft_built` stamp is older than the knob (an
     * unstamped store counts as infinitely old), build into a staging
-    * sibling, swap WHOLE ([[stagedRewrite]] — a reader never sees one
+    * sibling, swap WHOLE ([[StoreFs.stagedRewrite]] — a reader never sees one
     * rebuilt sub-table beside a stale one), stamp the build time. Returns
     * true when rebuilt. */
   private def cadencedRebuild(spark: org.apache.spark.sql.SparkSession,
@@ -400,15 +302,15 @@ object Maintain {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (ifOlderThanSec > 0 && fs.exists(root) &&
-        readLongMarker(spark, path, "_graft_built")
+        StoreFs.readLongMarker(spark, path, "_graft_built")
           .exists(b => nowEpochSec - b < ifOlderThanSec))
       return false
     def buildInto(dir: String): Unit = {
       build(dir)
-      writeLongMarker(spark, dir, "_graft_built", nowEpochSec)
+      StoreFs.writeMarker(spark, dir, "_graft_built", nowEpochSec.toString)
     }
     if (!fs.exists(root)) buildInto(path)
-    else stagedRewrite(spark, path)(buildInto)
+    else StoreFs.stagedRewrite(spark, path)(buildInto)
     true
   }
 
@@ -432,44 +334,24 @@ object Maintain {
     * anti-join to a no-op), so serving is correct through any prefix of
     * the compaction EXCEPT the instant between one list's two swap
     * renames — a crash there hides that single list's live rows until the
-    * next compactAnnIndex run restores the `.compact_old_*` aside copy
-    * (entry-time recovery below). Same single-writer-per-store contract as
-    * [[compactSegments]]. Returns (rows physically removed, partitions
-    * rewritten); (0, 0) with the sidecar cleared when the tombstones
-    * matched nothing. */
+    * next compactAnnIndex run's entry-time [[StoreFs.recover]] restores
+    * them. Same single-writer-per-store contract as [[compactSegments]].
+    * Returns (rows physically removed, partitions rewritten); (0, 0) with
+    * the sidecar cleared when the tombstones matched nothing. */
   def compactAnnIndex(spark: org.apache.spark.sql.SparkSession, path0: String,
                       idCol: String = "vec_id"): (Long, Int) = {
     import org.apache.hadoop.fs.Path
     val path = graft.pipeline.Ivf.resolveStore(spark, path0)
-    val cellsRoot = new Path(s"$path/cells")
+    val cellsRoot = s"$path/cells"
     val delDir = new Path(s"$path/deletes")
-    val fs = cellsRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // Crash recovery from a previous compaction's per-list swap (r14
-    // ADVICE): the swap renames the live partition ASIDE before renaming
-    // the staged one in, so a crash between the two renames leaves that
-    // list's pre-compact rows at `.compact_old_list_id=N` with no live
-    // `list_id=N`. Restore the aside copy (its tombstones are still in
-    // the sidecar — the sidecar clears LAST — so serving stays correct);
-    // an aside dir WITH a live partition means the swap completed and the
-    // aside is stale: drop it. A leftover `.compact_tmp` is all-staged,
-    // uncommitted work from before any swap — safe to discard wholesale.
-    // guard with exists(): Hadoop filesystems (RawLocalFileSystem included)
-    // throw FileNotFoundException for a missing path rather than returning
-    // null, so a store without a cells dir must short-circuit here (r15,
-    // ADVICE — the old null match never fired)
-    if (fs.exists(cellsRoot)) {
-      fs.listStatus(cellsRoot).filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith(".compact_old_")).foreach { s =>
-        val live = new Path(cellsRoot, s.getPath.getName.stripPrefix(".compact_old_"))
-        if (!fs.exists(live))
-          require(fs.rename(s.getPath, live),
-            s"failed to restore ${s.getPath} to $live after a crashed compaction")
-        else fs.delete(s.getPath, true)
-      }
-    }
-    if (!graft.pipeline.Ivf.hasDataFiles(spark, delDir.toString)) return (0L, 0)
+    val fs = delDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // a list set aside by a crashed swap is restored even when there is
+    // nothing to compact (its tombstones are still in the sidecar — the
+    // sidecar clears LAST — so serving stays correct until then)
+    StoreFs.recover(spark, cellsRoot)
+    if (!StoreFs.hasDataFiles(spark, delDir.toString)) return (0L, 0)
     val dels = spark.read.parquet(delDir.toString).select(col(idCol)).distinct()
-    val cells = spark.read.parquet(cellsRoot.toString)
+    val cells = spark.read.parquet(cellsRoot)
     // which lists physically hold tombstoned ids: id + partition column
     // only (column-pruned), output bounded by C
     val affected = cells.join(dels, Seq(idCol), "left_semi")
@@ -477,33 +359,14 @@ object Maintain {
     if (affected.isEmpty) { fs.delete(delDir, true); return (0L, 0) }
     val removed = cells.where(col("list_id").isin(affected: _*))
       .join(dels, Seq(idCol), "left_semi").count()
-    val tmp = new Path(cellsRoot, ".compact_tmp")
-    fs.delete(tmp, true)
     // one job stages every affected list's survivors; basePath keeps the
     // partition column so the staging layout mirrors the store's
-    spark.read.option("basePath", cellsRoot.toString)
-      .parquet(affected.map(l => s"$cellsRoot/list_id=$l"): _*)
-      .join(dels, Seq(idCol), "left_anti")
-      .write.mode("overwrite").partitionBy("list_id").parquet(tmp.toString)
-    affected.foreach { l =>
-      val dir = new Path(cellsRoot, s"list_id=$l")
-      val staged = new Path(tmp, s"list_id=$l")
-      // a fully-tombstoned list stages no output dir — swap in an empty one
-      if (!fs.exists(staged)) fs.mkdirs(staged)
-      // rename-aside swap (r14 ADVICE): the old delete-then-rename pair
-      // left a crash window where the list's survivors existed only under
-      // the dot-prefixed staging dir (invisible to parquet readers). Now
-      // the live partition is renamed aside first and deleted only after
-      // the staged rename lands; the entry-time recovery above repairs
-      // the one remaining (rename, rename) window on the next run.
-      val aside = new Path(cellsRoot, s".compact_old_list_id=$l")
-      fs.delete(aside, true)
-      require(fs.rename(dir, aside), s"failed to set aside $dir before swap")
-      require(fs.rename(staged, dir),
-        s"failed to swap $staged into $dir — pre-compact data preserved at $aside")
-      fs.delete(aside, true)
+    StoreFs.swapPartitions(spark, cellsRoot, affected.map(l => s"list_id=$l")) { tmp =>
+      spark.read.option("basePath", cellsRoot)
+        .parquet(affected.map(l => s"$cellsRoot/list_id=$l"): _*)
+        .join(dels, Seq(idCol), "left_anti")
+        .write.mode("overwrite").partitionBy("list_id").parquet(tmp)
     }
-    fs.delete(tmp, true)
     fs.delete(delDir, true)
     (removed, affected.size)
   }
@@ -515,7 +378,7 @@ object Maintain {
     * agg tables — the Lucene segment-merge analog, r14): appends land as
     * O(|batch|) delta segments; this one O(|store|) pass restores the
     * single sorted table, and with it the serve paths' singleton-prune
-    * parquet pushdown. Idempotent and crash-safe — the [[stagedRewrite]]
+    * parquet pushdown. Idempotent and crash-safe — the [[StoreFs.stagedRewrite]]
     * whole-dir swap carries the delta dirs away with the old base, so a
     * crash leaves either the segmented store or the fully-compacted one,
     * never a double-counted mix. Preserves redelivery protection by
@@ -535,11 +398,12 @@ object Maintain {
       .collect { case n if n.startsWith(".delta_b") =>
         n.stripPrefix(".delta_b").toLong }
       .sorted.lastOption
-      .orElse(readAppliedStamp(spark, path))
+      .orElse(StoreFs.readLongMarker(spark, path, graft.pipeline.TextStats.AppliedMarker))
     val merged = graft.pipeline.TextStats.readCountStore(spark, path, key, cnt)
-    stagedRewrite(spark, path) { tmp =>
+    StoreFs.stagedRewrite(spark, path) { tmp =>
       merged.sort(key).write.parquet(tmp)
-      youngest.foreach(writeAppliedStamp(spark, tmp, _))
+      youngest.foreach(id =>
+        StoreFs.writeMarker(spark, tmp, graft.pipeline.TextStats.AppliedMarker, id.toString))
     }
     deltas.size
   }
@@ -704,7 +568,7 @@ object Maintain {
     val p = graft.pipeline.Ivf.resolveStore(spark, path)
     val lists = spark.read.parquet(s"$p/centroids").count()
     val tombstoned =
-      if (graft.pipeline.Ivf.hasDataFiles(spark, s"$p/deletes"))
+      if (StoreFs.hasDataFiles(spark, s"$p/deletes"))
         spark.read.parquet(s"$p/deletes").distinct().count()
       else 0L
     spark.read.parquet(s"$p/cells")

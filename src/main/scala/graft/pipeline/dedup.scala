@@ -139,7 +139,7 @@ object Dedup {
                             path: String, ids: DataFrame,
                             idCol: String = "id"): Unit = {
     val keys = ids.select(col(idCol).as("id")).distinct()
-    graft.Maintain.stagedRewrite(spark, path) { tmp =>
+    graft.StoreFs.stagedRewrite(spark, path) { tmp =>
       spark.read.parquet(path)
         .join(broadcast(keys), Seq("id"), "left_anti")
         .write.parquet(tmp)

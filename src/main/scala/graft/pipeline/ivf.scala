@@ -114,17 +114,6 @@ object Ivf {
       .orderBy("list_id").collect()
       .map(_.getSeq[Double](1).toArray)
 
-  private[graft] def hasDataFiles(spark: SparkSession, path: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def any(p: Path): Boolean = fs.exists(p) && fs.listStatus(p).exists { st =>
-      if (st.isDirectory) any(st.getPath)
-      else !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
-    }
-    any(root)
-  }
-
   /** Insert-only probe for the ANN cell stores — the
     * [[graft.TextIndex]] `requireInsertOnly` discipline applied to vector
     * ids. Two checks, one append-blocking error each:
@@ -158,7 +147,7 @@ object Ivf {
           "append would serve the same id twice. Deduplicate upstream " +
           "(vectors carry no version column to resolve a winner here).")
     val keys = deltaIds.select(col(idCol)).distinct()
-    if (hasDataFiles(spark, s"$path/deletes")) {
+    if (graft.StoreFs.hasDataFiles(spark, s"$path/deletes")) {
       val shadowed = spark.read.parquet(s"$path/deletes")
         .join(broadcast(keys), Seq(idCol), "left_semi")
         .limit(5).collect().map(_.get(0)).toSeq
@@ -170,7 +159,7 @@ object Ivf {
             "apply the tombstones, then append.")
     }
     val mode = spark.conf.getOption("graft.append.insertCheck").getOrElse("error")
-    if (mode == "off" || !hasDataFiles(spark, s"$path/cells")) return
+    if (mode == "off" || !graft.StoreFs.hasDataFiles(spark, s"$path/cells")) return
     val collided = spark.read.parquet(s"$path/cells")
       .select(col(idCol))
       .join(broadcast(keys), Seq(idCol), "left_semi")
@@ -222,7 +211,7 @@ object Ivf {
   private[graft] def replayNeedsAppend(spark: SparkSession, path: String,
                                        newRows: DataFrame, idCol: String,
                                        vecCol: String): Boolean = {
-    if (!hasDataFiles(spark, s"$path/cells")) return true
+    if (!graft.StoreFs.hasDataFiles(spark, s"$path/cells")) return true
     val centroids = readCentroids(spark, path)
     val cmp = Seq(col(idCol), col(vecCol), col("list_id"))
     val delta = assign(newRows.withColumn(vecCol, col(vecCol).cast("array<double>")),
@@ -256,7 +245,7 @@ object Ivf {
   def deleteFromIndex(spark: SparkSession, path0: String, ids: DataFrame,
                       idCol: String = "vec_id"): Unit = {
     val path = resolveStore(spark, path0)
-    require(hasDataFiles(spark, s"$path/cells"),
+    require(graft.StoreFs.hasDataFiles(spark, s"$path/cells"),
       s"$path/cells has no data — not a materialized ANN index (tombstones " +
         "beside a nonexistent store would never filter anything)")
     ids.select(col(idCol)).distinct()
@@ -268,7 +257,7 @@ object Ivf {
     * existence check, not a join). */
   private[graft] def liveCells(spark: SparkSession, path: String,
                                   cells: DataFrame, idCol: String): DataFrame =
-    if (hasDataFiles(spark, s"$path/deletes"))
+    if (graft.StoreFs.hasDataFiles(spark, s"$path/deletes"))
       cells.join(spark.read.parquet(s"$path/deletes").select(col(idCol)),
         Seq(idCol), "left_anti")
     else cells
@@ -329,9 +318,6 @@ object Ivf {
   // (reference: the `<alias>_index@date` naming convention plays the same
   // role for segments), applied to the ANN store.
 
-  private def currentPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_current")
-
   /** Maintenance-verb path resolution: a versioned ROOT resolves to its
     * servable version directory; a flat store passes through. Every
     * maintenance verb ([[appendToIndex]], [[deleteFromIndex]],
@@ -347,24 +333,11 @@ object Ivf {
     currentVersion(spark, path).fold(path)(v => s"$path/v$v")
 
   /** The servable version number, or None for an unversioned/empty root. */
-  def currentVersion(spark: SparkSession, path: String): Option[Int] = {
-    val p = currentPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                finally in.close()
-      raw.toIntOption
-    }
-  }
+  def currentVersion(spark: SparkSession, path: String): Option[Int] =
+    graft.StoreFs.readMarker(spark, path, "_graft_current").flatMap(_.toIntOption)
 
-  private def writeCurrent(spark: SparkSession, path: String, v: Int): Unit = {
-    val p = currentPath(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
-  }
+  private def writeCurrent(spark: SparkSession, path: String, v: Int): Unit =
+    graft.StoreFs.writeMarker(spark, path, "_graft_current", v.toString)
 
   /** The directory of the currently-servable version. Raises on a root
     * with no `_graft_current` — an unversioned store should be read with

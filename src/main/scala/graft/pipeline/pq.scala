@@ -236,7 +236,7 @@ object Pq {
   private[graft] def ivfPqReplayNeedsAppend(
       spark: org.apache.spark.sql.SparkSession, path: String,
       newRows: DataFrame, idCol: String, vecCol: String): Boolean = {
-    if (!Ivf.hasDataFiles(spark, s"$path/cells")) return true
+    if (!graft.StoreFs.hasDataFiles(spark, s"$path/cells")) return true
     val centroids = Ivf.readCentroids(spark, path)
     val cb = readCodebooks(spark, path)
     val cmp = Seq(col(idCol), col("list_id"), col("code"))

@@ -276,8 +276,7 @@ object TextStats {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) Seq.empty
     else fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(".delta_") &&
-        !s.getPath.getName.startsWith(".delta_tmp"))
+      .filter(s => s.isDirectory && s.getPath.getName.startsWith(".delta_"))
       .map(_.getPath)
       .sortBy { p =>
         val n = p.getName
@@ -302,7 +301,7 @@ object TextStats {
                                     path: String, key: String,
                                     cnt: String): DataFrame = {
     val deltas = listCountDeltas(spark, path)
-      .filter(p => Ivf.hasDataFiles(spark, p.toString))
+      .filter(p => graft.StoreFs.hasDataFiles(spark, p.toString))
     val base = spark.read.parquet(path)
     if (deltas.isEmpty) base
     else base.unionByName(spark.read.parquet(deltas.map(_.toString): _*))
@@ -318,7 +317,15 @@ object TextStats {
   private[graft] def countStoreHoldsBatch(spark: org.apache.spark.sql.SparkSession,
                                           path: String, batchId: Long): Boolean =
     listCountDeltas(spark, path).exists(_.getName == s".delta_b$batchId") ||
-      graft.Maintain.readAppliedStamp(spark, path).contains(batchId)
+      graft.StoreFs.readLongMarker(spark, path, AppliedMarker).contains(batchId)
+
+  /** Batch-application stamp INSIDE a count store directory: the last
+    * batch id whose merge produced this directory's contents. Written into
+    * the STAGING dir of a [[graft.StoreFs.stagedRewrite]] before the swap,
+    * it makes the (merge, stamp) pair atomic — what lets an at-least-once
+    * redelivery of a half-applied batch skip the merges that already
+    * landed instead of double-counting them. */
+  private[graft] val AppliedMarker = "_graft_applied"
 
   /** Commit `delta` as a new delta segment of the store at `path`; the
     * rename is the atomic commit. Auto-compacts when the segment count
@@ -333,16 +340,11 @@ object TextStats {
                               path: String, delta: DataFrame, key: String,
                               batchId: Option[Long],
                               nameSuffix: Option[String] = None): Unit = {
-    val root = new org.apache.hadoop.fs.Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(fs.exists(root), s"count store does not exist: $path")
     val name = nameSuffix.map(s => s".delta_$s")
       .orElse(batchId.map(id => s".delta_b$id"))
       .getOrElse(s".delta_t${System.nanoTime}")
-    val tmp = new org.apache.hadoop.fs.Path(root, s".delta_tmp${System.nanoTime}")
-    delta.sort(key).write.mode("overwrite").parquet(tmp.toString)
-    require(fs.rename(tmp, new org.apache.hadoop.fs.Path(root, name)),
-      s"failed to commit count-store delta $name under $path")
+    graft.StoreFs.commitDir(spark, path, name)(tmp =>
+      delta.sort(key).write.mode("overwrite").parquet(tmp))
     val maxDeltas = spark.conf.getOption("graft.countstore.maxDeltas")
       .map(_.toInt).getOrElse(32)
     if (maxDeltas > 0 && listCountDeltas(spark, path).size >= maxDeltas)
@@ -533,33 +535,32 @@ object TextStats {
   //   path/agg    (g,cg)/(bg,cb) — the serving table; SAME schema as the
   //               flat store, so every FromStore scorer serves it as-is
   //   path/bydoc/bucket=N  (doc_id, gram, c) — per-doc counts, hash-
-  //               bucketed on `pmod(xxhash64(doc_id), B)` (r15; B stamped
-  //               into `_graft_buckets` at write time,
-  //               `graft.countstore.ledgerBuckets` seeds new stores) and
-  //               sorted by doc_id within each bucket.
+  //               bucketed on `pmod(xxhash64(doc_id), B)` (B stamped
+  //               into `_graft_buckets` at write time) and sorted by
+  //               doc_id within each bucket; `_graft_gen` counts the
+  //               keyed appends (the store generation).
   //
-  // Deletes subtract BY KEY, touching only what the keys hash to (r15 —
-  // previously the sweep anti-joined and rewrote the ENTIRE ledger and
-  // rebuilt agg from it: O(|store|) per delete batch, the engine's last
-  // O(|store|)-per-operation path). A sweep now:
-  //   1. derives its touched buckets FROM THE DELETED IDS (bucket =
-  //      hash(id) — no store scan) and reads only those partitions;
+  // Deletes subtract BY KEY, touching only what the keys hash to. A sweep:
+  //   1. casts the deleted ids to the ledger's stored doc_id type (the
+  //      bucket is a hash of the stored value), derives its touched
+  //      buckets FROM THOSE IDS (no store scan) and reads only those
+  //      partitions;
   //   2. commits the agg correction as a NEGATIVE delta segment named by
-  //      a deterministic sweep id (`.delta_s<md5(sorted ids)>`) — the
-  //      atomic-rename idempotence marker: a crash-and-retry (or replay)
-  //      sees the segment and never double-subtracts, and a replay after
-  //      the ledger was already swept computes an EMPTY correction;
+  //      a deterministic sweep id (`.delta_s<md5(generation, sorted ids)>`)
+  //      — the atomic-rename idempotence marker: a crash-and-retry (or
+  //      replay) sees the segment and never double-subtracts, and a replay
+  //      after the ledger was already swept computes an EMPTY correction;
   //      serving nets base + deltas and drops keys that reach zero
-  //      (readCountStore), exactly what a rebuild would hold;
-  //   3. anti-joins and rewrites ONLY the touched buckets, with the
-  //      rename-aside-per-bucket swap (and entry-time crash recovery)
-  //      the ANN compaction uses.
+  //      (readCountStore), exactly what a rebuild would hold. Every keyed
+  //      append bumps the generation, so deleting RE-APPENDED ids is a new
+  //      sweep, never a skipped one; sweeps leave it alone, so a retry
+  //      keeps its id — retry a crashed sweep before the next append;
+  //   3. anti-joins and rewrites ONLY the touched buckets through
+  //      [[graft.StoreFs.swapPartitions]].
   // The agg correction commits BEFORE the bucket rewrite: the one crash
   // window between them re-runs into the sweep-id skip (step 2) and a
   // smaller anti-join (step 3) — both idempotent. Appends stay
   // O(|batch|): a batch's delta rows land only in its own buckets.
-  // Pre-r15 unbucketed ledgers (no `_graft_buckets`) keep the original
-  // whole-ledger rewrite + agg rebuild.
 
   private def byDocCounts(df: DataFrame, idCol: String, gram: Column,
                           key: String): DataFrame =
@@ -568,19 +569,7 @@ object TextStats {
       .groupBy(col("doc_id"), col(key))
       .agg(count(lit(1)).cast("long").as("c"))
 
-  private def rebuildAggFromLedger(spark: org.apache.spark.sql.SparkSession,
-                                   path: String, key: String,
-                                   cnt: String): Unit = {
-    val agg = spark.read.parquet(s"$path/bydoc")
-      .groupBy(col(key)).agg(sum(col("c")).cast("long").as(cnt))
-      .sort(key)
-    if (!new org.apache.hadoop.fs.Path(s"$path/agg")
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(s"$path/agg")))
-      agg.write.parquet(s"$path/agg")
-    else graft.Maintain.stagedRewrite(spark, s"$path/agg")(tmp =>
-      agg.write.parquet(tmp))
-  }
+  private val LedgerBuckets = 32
 
   /** `pmod(xxhash64(doc_id), B)` — the ledger's bucket assignment; always
     * computed IN-PLAN (also for the tiny delete-id frames) so the value
@@ -588,22 +577,33 @@ object TextStats {
   private def ledgerBucket(b: Int): Column =
     pmod(xxhash64(col("doc_id")), lit(b.toLong)).cast("int")
 
+  /** The bucket count the ledger was written with (its `_graft_buckets`
+    * stamp — the layout is a write-time property). */
+  private def stampedBuckets(spark: org.apache.spark.sql.SparkSession,
+                             path: String): Int =
+    graft.StoreFs.readMarker(spark, s"$path/bydoc", "_graft_buckets")
+      .map(_.toInt).getOrElse(throw new IllegalArgumentException(
+        s"$path/bydoc has no _graft_buckets stamp — not a keyed count store " +
+          "(write it with writeNgramCountsKeyed / writeBigramLmKeyed)"))
+
+  private def generation(spark: org.apache.spark.sql.SparkSession,
+                         path: String): Long =
+    graft.StoreFs.readLongMarker(spark, s"$path/bydoc", "_graft_gen").getOrElse(0L)
+
   private def writeKeyedCounts(df: DataFrame, idCol: String, gram: Column,
                                key: String, cnt: String, path: String): Unit = {
     val spark = df.sparkSession
-    val b = spark.conf.getOption("graft.countstore.ledgerBuckets")
-      .map(_.toInt).getOrElse(32)
-    require(b >= 1, s"graft.countstore.ledgerBuckets must be >= 1, got $b")
     // hash repartition on the bucket (not the r14 global sort, whose range
     // partitioner re-executed the gram aggregate for its sampling pass);
     // doc_id order within each bucket keeps the min/max row-group pruning
     // the probes rely on
     byDocCounts(df, idCol, gram, key)
-      .withColumn("bucket", ledgerBucket(b))
+      .withColumn("bucket", ledgerBucket(LedgerBuckets))
       .repartition(col("bucket"))
       .sortWithinPartitions("doc_id", key)
       .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/bydoc")
-    graft.Maintain.writeBucketsMarker(spark, s"$path/bydoc", b)
+    graft.StoreFs.writeMarker(spark, s"$path/bydoc", "_graft_buckets",
+      LedgerBuckets.toString)
     // agg derives from the written ledger — one ledger read instead of a
     // second corpus tokenize
     spark.read.parquet(s"$path/bydoc")
@@ -611,27 +611,50 @@ object TextStats {
       .sort(key).write.mode("overwrite").parquet(s"$path/agg")
   }
 
-  /** The ledger restricted to the buckets that can hold `ids`' rows —
-    * partition-pruned on a bucketed layout (one tiny job computes the id
-    * frame's bucket set; `ids` is batch/sweep-sized by contract), the full
-    * ledger on a legacy unbucketed one. */
+  /** The keyed ledger opened for a probe or a sweep: a previous sweep's
+    * crashed bucket swap is recovered first. */
+  private def openLedger(spark: org.apache.spark.sql.SparkSession,
+                         path: String): DataFrame = {
+    graft.StoreFs.recover(spark, s"$path/bydoc")
+    spark.read.parquet(s"$path/bydoc")
+  }
+
+  /** One-column `doc_id` frame cast to the ledger's STORED doc_id type:
+    * the bucket hashes the value's binary form, so a LongType id frame
+    * against an Int-keyed ledger would hash to the wrong buckets and match
+    * nothing. */
+  private def asLedgerKeys(ledger: DataFrame, ids: DataFrame): DataFrame =
+    ids.select(col("doc_id").cast(ledger.schema("doc_id").dataType).as("doc_id"))
+
+  /** The ledger restricted to the buckets that can hold `ids`' rows (one
+    * tiny job computes the id frame's bucket set; `ids` is batch-sized by
+    * contract). */
   private def ledgerFor(spark: org.apache.spark.sql.SparkSession,
-                        path: String, ids: DataFrame): DataFrame =
-    graft.Maintain.readBucketsMarker(spark, s"$path/bydoc") match {
-      case Some(b) =>
-        val touched = ids.select(ledgerBucket(b).as("_bk")).distinct()
-          .collect().map(_.getInt(0)).toSeq
-        spark.read.parquet(s"$path/bydoc")
-          .where(col("bucket").isin(touched: _*))
-      case None => spark.read.parquet(s"$path/bydoc")
-    }
+                        path: String, ids: DataFrame): DataFrame = {
+    val ledger = openLedger(spark, path)
+    val touched = asLedgerKeys(ledger, ids)
+      .select(ledgerBucket(stampedBuckets(spark, path)).as("_bk")).distinct()
+      .collect().map(_.getInt(0)).toSeq
+    ledger.where(col("bucket").isin(touched: _*))
+  }
 
   private def appendKeyedCounts(newDocs: DataFrame, idCol: String,
                                 gram: Column, key: String, cnt: String,
                                 path: String, batchId: Option[Long],
                                 what: String): Unit = {
     val spark = newDocs.sparkSession
+    val bydoc = s"$path/bydoc"
+    graft.StoreFs.recover(spark, bydoc)
+    val b = stampedBuckets(spark, path)
+    // every append — the replay-converged one included — starts a new
+    // generation, so a later sweep of the same ids is a NEW sweep
+    graft.StoreFs.writeMarker(spark, bydoc, "_graft_gen",
+      (generation(spark, path) + 1).toString)
     val delta = byDocCounts(newDocs, idCol, gram, key)
+    val deltaKeys = delta.select(col("doc_id")).distinct()
+    // the probes scan only the batch's own buckets (r15): the ledger rows
+    // a batch key could collide with live where the key hashes
+    lazy val own = ledgerFor(spark, path, deltaKeys)
     // NEW documents only, enforced on the ledger's doc keys (the strict
     // probe — an edit must subtract first: subtract(ids) then append).
     // With a batchId the append is REPLAY-CONVERGENT (the streamed text
@@ -642,7 +665,7 @@ object TextStats {
     // own half-applied keys; same-key-DIFFERENT-counts still raises —
     // replay tolerance never becomes edit tolerance.
     val ledgerConverged = batchId.isDefined &&
-      keyedLedgerHoldsBatch(spark, path, delta, key, what)
+      keyedLedgerHoldsBatch(spark, path, delta, key, what, own)
     if (ledgerConverged) {
       // The ledger already holds exactly this batch's rows — either the
       // true crash window (ledger append landed, agg delta didn't) or a
@@ -654,32 +677,23 @@ object TextStats {
       // clears any delta segments), then stamp this batch id so an exact
       // same-id replay short-circuits.
       if (!batchId.exists(countStoreHoldsBatch(spark, s"$path/agg", _)))
-        graft.Maintain.stagedRewrite(spark, s"$path/agg") { tmp =>
-          spark.read.parquet(s"$path/bydoc")
+        graft.StoreFs.stagedRewrite(spark, s"$path/agg") { tmp =>
+          spark.read.parquet(bydoc)
             .groupBy(col(key)).agg(sum(col("c")).cast("long").as(cnt))
             .sort(key).write.parquet(tmp)
-          batchId.foreach(graft.Maintain.writeAppliedStamp(spark, tmp, _))
+          batchId.foreach(id =>
+            graft.StoreFs.writeMarker(spark, tmp, AppliedMarker, id.toString))
         }
       return
     }
-    val deltaKeys = delta.select(col("doc_id")).distinct()
-    // the insert-only probe scans only the batch's own buckets (r15):
-    // the ledger rows a batch key could collide with live where the key
-    // hashes, nowhere else
-    graft.TextIndex.requireInsertOnly(spark, s"$path/bydoc", deltaKeys, what,
-      ledgerFor(spark, path, deltaKeys))
-    graft.Maintain.readBucketsMarker(spark, s"$path/bydoc") match {
-      case Some(b) =>
-        delta.withColumn("bucket", ledgerBucket(b))
-          .write.mode("append").partitionBy("bucket").parquet(s"$path/bydoc")
-      case None =>
-        delta.write.mode("append").parquet(s"$path/bydoc")
-    }
+    graft.TextIndex.requireInsertOnly(spark, bydoc, deltaKeys, what, own)
+    delta.withColumn("bucket", ledgerBucket(b))
+      .write.mode("append").partitionBy("bucket").parquet(bydoc)
     if (batchId.exists(countStoreHoldsBatch(spark, s"$path/agg", _)))
       return // replayed batch: the agg fold already landed
     // the agg fold is a batch-sized DELTA segment, not a store rewrite —
     // see the flat-store delta block above; the keyed ledger stays the
-    // source of truth (subtraction rebuilds agg from it, clearing deltas)
+    // source of truth
     writeCountDelta(spark, s"$path/agg",
       delta.groupBy(col(key)).agg(sum(col("c")).cast("long").as(cnt)),
       key, batchId)
@@ -690,16 +704,16 @@ object TextStats {
     * append needed), exactly the delta (true — the atomically-committed
     * ledger append already landed), or different — which no self-replay
     * can produce (per-doc counts are deterministic), so it raises: an
-    * edited doc wearing a replay's batch id. Writes nothing. */
+    * edited doc wearing a replay's batch id. Writes nothing. `own` is the
+    * ledger restricted to the batch's buckets. */
   private def keyedLedgerHoldsBatch(spark: org.apache.spark.sql.SparkSession,
                                     path: String, delta: DataFrame,
-                                    key: String, what: String): Boolean = {
-    if (!graft.pipeline.Ivf.hasDataFiles(spark, s"$path/bydoc")) return false
+                                    key: String, what: String,
+                                    own: => DataFrame): Boolean = {
+    if (!graft.StoreFs.hasDataFiles(spark, s"$path/bydoc")) return false
     val cols = Seq(col("doc_id"), col(key), col("c"))
     val keys = delta.select(col("doc_id")).distinct()
-    // bucket-pruned (r15): the batch's rows can only live in its own
-    // buckets, so the content probe reads those partitions alone
-    val present = ledgerFor(spark, path, keys)
+    val present = own
       .join(broadcast(keys), Seq("doc_id"), "left_semi")
       .select(cols: _*)
     if (present.isEmpty) return false
@@ -715,95 +729,50 @@ object TextStats {
     true
   }
 
+  /** The delete sweep — see the layout block above for the step-by-step
+    * idempotence argument. Cost: O(|touched buckets| + |deleted docs'
+    * vocabulary|), never O(|store|). */
   private def subtractKeyedCounts(spark: org.apache.spark.sql.SparkSession,
                                   path: String, deletedIds: DataFrame,
                                   key: String, cnt: String): Unit = {
-    val ids = deletedIds
-      .select(col(deletedIds.columns.head).as("doc_id")).distinct()
-    graft.Maintain.readBucketsMarker(spark, s"$path/bydoc") match {
-      case Some(b) => subtractBucketed(spark, path, ids, key, cnt, b)
-      case None =>
-        // legacy pre-r15 unbucketed ledger: the original whole-ledger
-        // rewrite + full agg rebuild (rebuild the store with
-        // writeNgramCountsKeyed/writeBigramLmKeyed to adopt the bucketed
-        // layout and per-bucket sweeps)
-        graft.Maintain.stagedRewrite(spark, s"$path/bydoc") { tmp =>
-          spark.read.parquet(s"$path/bydoc")
-            .join(broadcast(ids), Seq("doc_id"), "left_anti")
-            .sort("doc_id", key).write.parquet(tmp)
-        }
-        rebuildAggFromLedger(spark, path, key, cnt)
-    }
-  }
-
-  /** The bucketed delete sweep — see the layout block above for the
-    * step-by-step idempotence argument. Cost: O(|touched buckets| +
-    * |deleted docs' vocabulary|), never O(|store|). */
-  private def subtractBucketed(spark: org.apache.spark.sql.SparkSession,
-                               path: String, ids: DataFrame, key: String,
-                               cnt: String, b: Int): Unit = {
-    import org.apache.hadoop.fs.Path
-    val bydoc = s"$path/bydoc"
-    val root = new Path(bydoc)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // entry-time recovery of a previous sweep's crashed bucket swap (the
-    // compactAnnIndex discipline): an aside dir without a live partner
-    // means the crash hit between the two renames — restore it; with a
-    // live partner the swap completed and the aside is stale.
-    fs.listStatus(root).filter(s => s.isDirectory &&
-        s.getPath.getName.startsWith(".subtract_old_")).foreach { s =>
-      val live = new Path(root, s.getPath.getName.stripPrefix(".subtract_old_"))
-      if (!fs.exists(live))
-        require(fs.rename(s.getPath, live),
-          s"failed to restore ${s.getPath} to $live after a crashed sweep")
-      else fs.delete(s.getPath, true)
-    }
-    // deterministic sweep identity: md5 over the sorted id strings — the
-    // same id set (a crash retry or an at-least-once redelivery) always
-    // names the same agg segment, so the correction can never land twice
-    val idStrs = ids.select(col("doc_id").cast("string"))
-      .collect().map(_.getString(0)).sorted
-    if (idStrs.isEmpty) return
+    val ledger = openLedger(spark, path)
+    val ids = asLedgerKeys(ledger,
+      deletedIds.select(col(deletedIds.columns.head).as("doc_id"))).distinct()
+    // one collect yields both the sweep identity and the touched buckets
+    val swept = ids.select(col("doc_id").cast("string"),
+        ledgerBucket(stampedBuckets(spark, path)))
+      .collect().map(r => (r.getString(0), r.getInt(1)))
+    if (swept.isEmpty) return
+    // deterministic sweep identity: md5 over the store generation and the
+    // sorted id strings — a crash retry or an at-least-once redelivery of
+    // the same ids at the same generation always names the same agg
+    // segment, so the correction can never land twice
     val md = java.security.MessageDigest.getInstance("MD5")
-    idStrs.foreach(s => md.update((s + " ").getBytes("UTF-8")))
+    md.update((generation(spark, path).toString + "\u0000").getBytes("UTF-8"))
+    swept.map(_._1).sorted.foreach(s => md.update((s + "\u0000").getBytes("UTF-8")))
     val sweepId = java.lang.Long.toUnsignedString(
       java.nio.ByteBuffer.wrap(md.digest.take(8)).getLong)
-    val touched = ids.select(ledgerBucket(b).as("_bk")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    val ledger = spark.read.parquet(bydoc)
-      .where(col("bucket").isin(touched: _*))
+    val touched = swept.map(_._2).distinct.sorted.toSeq
+    val rows = ledger.where(col("bucket").isin(touched: _*))
     // 1. agg correction first, as a negative delta segment (atomic rename;
     //    the dir name is the sweep's applied marker). Computed from the
     //    CURRENT ledger: a retry that already swept the buckets nets an
     //    empty segment, a retry that didn't yet hits the name-skip here.
     if (!listCountDeltas(spark, s"$path/agg")
         .exists(_.getName == s".delta_s$sweepId")) {
-      val removed = ledger.join(broadcast(ids), Seq("doc_id"), "left_semi")
+      val removed = rows.join(broadcast(ids), Seq("doc_id"), "left_semi")
         .groupBy(col(key)).agg((-sum(col("c"))).cast("long").as(cnt))
       writeCountDelta(spark, s"$path/agg", removed, key, None,
         Some(s"s$sweepId"))
     }
     // 2. rewrite only the touched buckets: one job stages every survivor,
-    //    then the rename-aside swap per bucket
-    val tmp = new Path(root, ".subtract_tmp")
-    fs.delete(tmp, true)
-    ledger.join(broadcast(ids), Seq("doc_id"), "left_anti")
-      .repartition(col("bucket")).sortWithinPartitions("doc_id", key)
-      .write.mode("overwrite").partitionBy("bucket").parquet(tmp.toString)
-    touched.foreach { t =>
-      val live = new Path(root, s"bucket=$t")
-      val staged = new Path(tmp, s"bucket=$t")
-      // a fully-deleted bucket stages no output — swap in an empty dir
-      if (!fs.exists(staged)) fs.mkdirs(staged)
-      val aside = new Path(root, s".subtract_old_bucket=$t")
-      fs.delete(aside, true)
-      if (fs.exists(live))
-        require(fs.rename(live, aside), s"failed to set aside $live")
-      require(fs.rename(staged, live),
-        s"failed to swap $staged into $live — pre-sweep data at $aside")
-      fs.delete(aside, true)
+    //    then the kernel's per-bucket swap
+    graft.StoreFs.swapPartitions(spark, s"$path/bydoc",
+        touched.map(t => s"bucket=$t")) { tmp =>
+      rows.join(broadcast(ids), Seq("doc_id"), "left_anti")
+        .repartition(col("bucket")).sortWithinPartitions("doc_id", key)
+        .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
     }
-    fs.delete(tmp, true)
   }
 
   /** Doc-keyed twin of [[writeNgramCounts]] — see the layout/contract

@@ -1656,6 +1656,7 @@ object Search {
     * read-back partition types so the merge keys align. */
   def appendCompletionStore(newDocs: DataFrame, field: String, path: String): Unit = {
     val spark = newDocs.sparkSession
+    StoreFs.recover(spark, path) // the layout read below precedes the swap
     val store = spark.read.option("basePath", path).parquet(path)
     require(Set("suggestion", "freq").subsetOf(store.columns.toSet),
       s"$path is not a completion store (needs suggestion/freq columns, " +
@@ -1669,7 +1670,7 @@ object Search {
       .agg(count(lit(1)).as("freq"))
     val delta = contextCols.foldLeft(delta0)((df, c) =>
       df.withColumn(c, col(c).cast(store.schema(c).dataType)))
-    Maintain.stagedRewrite(spark, path) { tmp =>
+    StoreFs.stagedRewrite(spark, path) { tmp =>
       val merged = store.unionByName(delta)
         .groupBy((contextCols :+ "suggestion").map(col): _*)
         .agg(sum(col("freq")).cast("long").as("freq"))

@@ -77,21 +77,15 @@ object StreamingIndexer {
   }
 
   private def readMarker(spark: org.apache.spark.sql.SparkSession,
-                         storePath: String): (Long, Option[String]) = {
-    val p = new org.apache.hadoop.fs.Path(storePath, "_graft_batch")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) (-1L, None)
-    else {
-      val in = fs.open(p)
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                finally in.close()
-      raw.split('|') match {
+                         storePath: String): (Long, Option[String]) =
+    graft.StoreFs.readMarker(spark, storePath, "_graft_batch") match {
+      case None => (-1L, None)
+      case Some(raw) => raw.split('|') match {
         case Array(id, lineage) => (id.toLongOption.getOrElse(-1L), Some(lineage))
         case Array(id) => (id.toLongOption.getOrElse(-1L), None) // pre-r13 marker
         case _ => (-1L, None)
       }
     }
-  }
 
   /** The streaming queryId of the batch being applied, when running inside
     * a streaming query (Spark sets it as a local property on the
@@ -104,11 +98,8 @@ object StreamingIndexer {
     // a direct (non-streaming) apply must not erase a recorded lineage —
     // the protection would silently lapse after one maintenance call
     val lineage = currentQueryId(spark).orElse(readMarker(spark, storePath)._2)
-    val p = new org.apache.hadoop.fs.Path(storePath, "_graft_batch")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write((id.toString + lineage.fold("")("|" + _)).getBytes("UTF-8"))
-    finally out.close()
+    graft.StoreFs.writeMarker(spark, storePath, "_graft_batch",
+      id.toString + lineage.fold("")("|" + _))
     clearPending(spark, storePath)
   }
 
@@ -119,9 +110,7 @@ object StreamingIndexer {
     * called implicitly. */
   def resetBatchMarker(spark: org.apache.spark.sql.SparkSession,
                        storePath: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(storePath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(storePath, "_graft_batch"), false)
+    graft.StoreFs.clearMarker(spark, storePath, "_graft_batch")
     clearPending(spark, storePath)
   }
 
@@ -132,41 +121,30 @@ object StreamingIndexer {
     * half-applied batch — the apply paths switch to their convergent
     * variants for exactly that id. The marker is a SIBLING of the store
     * directory, not a member: merge-shaped appends
-    * ([[graft.Maintain.stagedRewrite]] — the n-gram store, the LM
+    * ([[graft.StoreFs.stagedRewrite]] — the n-gram store, the LM
     * sub-stores) replace the directory wholesale, and an in-dir pending
     * marker would be wiped by the very append it is supposed to witness. */
-  private def pendingPath(storePath: String): org.apache.hadoop.fs.Path = {
+  private def pendingMarker(storePath: String): (String, String) = {
     val root = new org.apache.hadoop.fs.Path(storePath)
-    new org.apache.hadoop.fs.Path(root.getParent,
-      root.getName + ".batch_pending")
+    (root.getParent.toString, root.getName + ".batch_pending")
   }
 
   private[graft] def writePending(spark: org.apache.spark.sql.SparkSession,
                                   storePath: String, id: Long): Unit = {
-    val p = pendingPath(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(id.toString.getBytes("UTF-8")) finally out.close()
+    val (dir, name) = pendingMarker(storePath)
+    graft.StoreFs.writeMarker(spark, dir, name, id.toString)
   }
 
   private[graft] def readPending(spark: org.apache.spark.sql.SparkSession,
                                  storePath: String): Option[Long] = {
-    val p = pendingPath(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-                finally in.close()
-      raw.toLongOption
-    }
+    val (dir, name) = pendingMarker(storePath)
+    graft.StoreFs.readLongMarker(spark, dir, name)
   }
 
   private def clearPending(spark: org.apache.spark.sql.SparkSession,
                            storePath: String): Unit = {
-    val p = pendingPath(storePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(p, false)
+    val (dir, name) = pendingMarker(storePath)
+    graft.StoreFs.clearMarker(spark, dir, name)
   }
 
   /** Continuous inverted-index maintenance: like [[upsertStream]], but each

@@ -300,7 +300,7 @@ object TextIndex {
       newDocs: DataFrame, idCol: String, fields: Seq[String],
       path: String): Boolean = {
     val spark = newDocs.sparkSession
-    if (!hasDataFiles(spark, path)) return true
+    if (!StoreFs.hasDataFiles(spark, path)) return true
     val delta = buildNorms(newDocs, idCol, fields)
       .select(col("doc_id"), col("field"), col("dl"))
     val keys = delta.select(col("doc_id")).distinct()
@@ -334,7 +334,7 @@ object TextIndex {
       newDocs: DataFrame, idCol: String, fields: Seq[String], path: String,
       nBuckets: Int, segmentCol: Option[String] = None): Boolean = {
     val spark = newDocs.sparkSession
-    if (!hasDataFiles(spark, path)) return true
+    if (!StoreFs.hasDataFiles(spark, path)) return true
     val cols = Seq("doc_id", "field", "token", "tf").map(col)
     val delta = buildPostings(newDocs, idCol, fields, nBuckets, segmentCol)
       .select(cols: _*)
@@ -378,7 +378,7 @@ object TextIndex {
                                        deltaKeys: DataFrame, what: String,
                                        store: => DataFrame): Unit = {
     val mode = spark.conf.getOption("graft.append.insertCheck").getOrElse("error")
-    if (mode == "off" || !hasDataFiles(spark, path)) return
+    if (mode == "off" || !StoreFs.hasDataFiles(spark, path)) return
     val collided = store
       .select(col("doc_id"))
       .join(broadcast(deltaKeys.select(col("doc_id"))), Seq("doc_id"), "left_semi")
@@ -410,8 +410,10 @@ object TextIndex {
     val spark = docs.sparkSession
     val delta0 = buildNorms(docs, idCol, fields)
     val delta = gen.map(g => delta0.withColumn("gen", lit(g))).getOrElse(delta0)
-    if (!hasDataFiles(spark, path)) { delta.write.mode("append").parquet(path); return }
-    Maintain.stagedRewrite(spark, path) { tmp =>
+    // a crash-swapped-aside store must be back before the emptiness check
+    StoreFs.recover(spark, path)
+    if (!StoreFs.hasDataFiles(spark, path)) { delta.write.mode("append").parquet(path); return }
+    StoreFs.stagedRewrite(spark, path) { tmp =>
       val store = spark.read.parquet(path)
       val keys = delta.select(col("doc_id")).distinct()
       store.join(broadcast(keys), Seq("doc_id"), "left_anti")
@@ -450,7 +452,7 @@ object TextIndex {
     // table) — record an empty-store sidecar; openPostings/searchStore then
     // fall back to the scan executor, since nothing is indexed
     val meta =
-      if (!hasDataFiles(spark, path))
+      if (!StoreFs.hasDataFiles(spark, path))
         IndexMeta(1, Seq.empty, postings.columns.contains("positions"), segmentCol)
       else {
         val written = spark.read.option("basePath", path).parquet(path)
@@ -462,10 +464,7 @@ object TextIndex {
     val metaJson =
       s"""{"nBuckets":${meta.nBuckets},"fields":[${meta.fields.map("\"" + _ + "\"").mkString(",")}],""" +
       s""""positional":${meta.positional},"segmentCol":${meta.segmentCol.map("\"" + _ + "\"").getOrElse("null")}}"""
-    val p = new org.apache.hadoop.fs.Path(path, MetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(metaJson.getBytes("UTF-8")) finally out.close()
+    StoreFs.writeMarker(spark, path, MetaFile, metaJson)
   }
 
   /** The bucket count is recoverable from any non-empty store because
@@ -490,49 +489,33 @@ object TextIndex {
       "postings bucket column does not match xxhash64 bucketing"))
   }
 
-  private def hasDataFiles(spark: SparkSession, path: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def any(p: Path): Boolean = fs.exists(p) && fs.listStatus(p).exists { st =>
-      if (st.isDirectory) any(st.getPath)
-      else !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
-    }
-    any(root)
-  }
-
   /** Open a written postings store with its own parameters — the
     * mismatch-proof entry point. A data-less store opens as a placeholder
     * with no indexed fields, so every query through it falls back to the
     * scan executor (the placeholder frame is never evaluated). */
   def openPostings(spark: SparkSession, path: String): (DataFrame, IndexMeta) = {
     val df =
-      if (hasDataFiles(spark, path))
+      if (StoreFs.hasDataFiles(spark, path))
         spark.read.option("basePath", path).parquet(path)
       else spark.emptyDataFrame
-    val p = new org.apache.hadoop.fs.Path(path, MetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val meta =
-      if (fs.exists(p)) {
-        val in = fs.open(p)
-        val raw = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                  finally in.close()
+    val meta = StoreFs.readMarker(spark, path, MetaFile) match {
+      case Some(raw) =>
         val node = dslMapper.readTree(raw)
         import scala.jdk.CollectionConverters._
         IndexMeta(node.get("nBuckets").asInt,
           node.get("fields").elements.asScala.map(_.asText).toSeq,
           node.get("positional").asBoolean,
           Option(node.get("segmentCol")).filter(!_.isNull).map(_.asText))
-      } else if (df.columns.isEmpty) {
+      case None if df.columns.isEmpty =>
         // data-less AND sidecar-less: nothing indexed, nothing to infer
         IndexMeta(1, Seq.empty, positional = false, None)
-      } else {
+      case None =>
         // stores written before the sidecar (or by hand): reconstruct from
         // the data — exact for nBuckets/fields/positional, unknown segment
         IndexMeta(inferBuckets(df),
           df.select("field").distinct().collect().map(_.getString(0)).sorted.toSeq,
           df.columns.contains("positions"), None)
-      }
+    }
     (df, meta)
   }
 
@@ -613,8 +596,8 @@ object TextIndex {
   }
 
   /** Optional size reclaim after many appends: global dedup + rewrite,
-    * atomic per the same staging-dir pattern as
-    * [[Maintain.compactSegments]]. Returns (files before, files after). */
+    * swapped in whole by [[StoreFs.stagedRewrite]]. Returns (files
+    * before, files after). */
   def compactPostings(spark: SparkSession, path: String): (Int, Int) =
     rewritePostings(spark, path)(_.distinct())
 
@@ -638,7 +621,7 @@ object TextIndex {
   def deleteDocs(spark: SparkSession, normsPath: String, ids: DataFrame,
                  idCol: String = "doc_id"): Unit = {
     val keys = ids.select(col(idCol).as("doc_id")).distinct()
-    Maintain.stagedRewrite(spark, normsPath) { tmp =>
+    StoreFs.stagedRewrite(spark, normsPath) { tmp =>
       spark.read.parquet(normsPath)
         .join(broadcast(keys), Seq("doc_id"), "left_anti")
         .write.parquet(tmp)
@@ -669,42 +652,28 @@ object TextIndex {
         else if (!st.getPath.getName.startsWith("_") &&
                  !st.getPath.getName.startsWith(".")) 1 else 0
       }.sum
+    // the layout reads below must see a store a crashed swap set aside
+    StoreFs.recover(spark, path)
     val before = dataFiles(root)
-    // the sidecars must survive the swap — read them before the root
-    // delete: the schema/options meta, AND the streaming `_graft_batch`
-    // marker (r13): compaction used to wipe it, silently discarding both
-    // the redelivery skip (a crash-then-replay right after compaction
-    // re-applied its batch) and the queryId lineage guard
-    def slurp(name: String): Option[String] = {
-      val p = new Path(root, name)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
-        finally in.close()
-      }
-    }
-    val sidecar = slurp(MetaFile)
-    val batchMarker = slurp("_graft_batch")
+    // the sidecars travel with the data, written into the staging dir: the
+    // schema/options meta, AND the streaming `_graft_batch` marker (r13) —
+    // losing it would discard both the redelivery skip (a crash-then-replay
+    // right after compaction re-applied its batch) and the queryId lineage
+    // guard
+    val sidecars = Seq(MetaFile, "_graft_batch")
+      .flatMap(n => StoreFs.readMarker(spark, path, n).map(n -> _))
     // a segmented store keeps its segment partition through the rewrite
-    val segCol = sidecar.flatMap { raw =>
+    val segCol = sidecars.collectFirst { case (MetaFile, raw) => raw }.flatMap { raw =>
       Option(dslMapper.readTree(raw).get("segmentCol")).filter(!_.isNull).map(_.asText)
     }
     val parts = segCol.toSeq :+ "bucket"
-    val tmp = new Path(root.getParent, root.getName + ".compact_tmp")
-    fs.delete(tmp, true)
-    val deduped = transform(spark.read.option("basePath", path).parquet(path))
-    deduped.repartition(parts.map(col): _*)
-      .sortWithinPartitions("token", "field")
-      .write.mode("overwrite").partitionBy(parts: _*).parquet(tmp.toString)
-    fs.delete(root, true)
-    require(fs.rename(tmp, root), s"compaction rename failed: $tmp -> $root")
-    def restore(name: String, raw: String): Unit = {
-      val out = fs.create(new Path(root, name), true)
-      try out.write(raw.getBytes("UTF-8")) finally out.close()
+    StoreFs.stagedRewrite(spark, path) { tmp =>
+      transform(spark.read.option("basePath", path).parquet(path))
+        .repartition(parts.map(col): _*)
+        .sortWithinPartitions("token", "field")
+        .write.mode("overwrite").partitionBy(parts: _*).parquet(tmp)
+      sidecars.foreach { case (n, raw) => StoreFs.writeMarker(spark, tmp, n, raw) }
     }
-    sidecar.foreach(restore(MetaFile, _))
-    batchMarker.foreach(restore("_graft_batch", _))
     (before, dataFiles(root))
   }
 

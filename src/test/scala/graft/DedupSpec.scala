@@ -1008,27 +1008,46 @@ class DedupSpec extends AnyFunSuite {
       m(TextStats.dupNgramFraction(keep, "text", "id", 3)))
   }
 
-  test("r15: a legacy UNBUCKETED ledger (no _graft_buckets) still subtracts " +
-       "via the whole-ledger rewrite and serves correctly") {
-    import graft.functions.TextSketchFunctions.word_grams
-    val dir = java.nio.file.Files.createTempDirectory("graft_legacy_ledger").toString
-    val docs = Seq((1, "the quick brown fox"), (2, "the quick brown cat"),
-      (3, "the quick brown rat"), (4, "a a a a a")).toDF("id", "text")
-    // the pre-r15 layout: flat (doc_id, g, c) parquet + derived agg,
-    // no bucket partitions, no marker
-    val toks = filter(split(lower(trim(col("text"))), "\\s+"), t => length(t) > 0)
-    val ledger = docs.select(col("id").as("doc_id"),
-        explode(word_grams(toks, 3)).as("g"))
-      .groupBy("doc_id", "g").agg(count(lit(1)).cast("long").as("c"))
-    ledger.sort("doc_id", "g").write.parquet(s"$dir/ng/bydoc")
-    ledger.groupBy("g").agg(sum("c").cast("long").as("cg"))
-      .sort("g").write.parquet(s"$dir/ng/agg")
-    TextStats.subtractNgramCounts(spark, s"$dir/ng", Seq(3).toDF("id"))
-    val keep = docs.where(col("id") =!= 3)
+  private def keyedServesLive(dir: String, live: org.apache.spark.sql.DataFrame): Unit = {
     def m(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getDouble(1), r.getLong(2))).toSet
-    assert(m(TextStats.dupNgramFractionFromKeyedStore(
-        keep, "text", "id", 3, s"$dir/ng")) ==
-      m(TextStats.dupNgramFraction(keep, "text", "id", 3)))
+    assert(m(TextStats.dupNgramFractionFromKeyedStore(live, "text", "id", 3, s"$dir/ng")) ==
+      m(TextStats.dupNgramFraction(live, "text", "id", 3)))
+  }
+
+  // doc 3 shares its first gram with doc 4 only, so whether doc 3 still
+  // counts shows in doc 4's served score
+  private def sharedGramDocs = Seq((1, "the quick brown fox one"),
+    (2, "the quick brown fox two"), (3, "red green blue three"),
+    (4, "red green blue four"), (5, "lorem ipsum dolor five"),
+    (6, "red green blue six")).toDF("id", "text")
+
+  test("keyed ledger: subtract → re-append the same ids → subtract serves " +
+       "exactly the live docs (the sweep id is salted by the store generation)") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_resweep").toString
+    val docs = sharedGramDocs
+    TextStats.writeNgramCountsKeyed(docs, "text", "id", 3, s"$dir/ng")
+    val doomed = Seq(3, 6).toDF("id")
+    TextStats.subtractNgramCounts(spark, s"$dir/ng", doomed)
+    TextStats.appendNgramCountsKeyed(docs.where(col("id").isin(3, 6)),
+      "text", "id", 3, s"$dir/ng")
+    keyedServesLive(dir, docs)
+    TextStats.subtractNgramCounts(spark, s"$dir/ng", doomed)
+    keyedServesLive(dir, docs.where(!col("id").isin(3, 6)))
+  }
+
+  test("keyed ledger: LongType delete ids (spark.range) against an " +
+       "Int-keyed ledger really remove the docs") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_idtype").toString
+    val docs = sharedGramDocs
+    TextStats.writeNgramCountsKeyed(docs, "text", "id", 3, s"$dir/ng")
+    TextStats.subtractNgramCounts(spark, s"$dir/ng", spark.range(2, 5).toDF("id"))
+    assert(spark.read.parquet(s"$dir/ng/bydoc").where(col("doc_id").isin(2, 3, 4))
+      .count() == 0, "the deleted docs' ledger rows survived the sweep")
+    keyedServesLive(dir, docs.where(!col("id").isin(2, 3, 4)))
+    // a ledger without its bucket stamp is refused, never swept blind
+    assert(new java.io.File(s"$dir/ng/bydoc/_graft_buckets").delete())
+    intercept[IllegalArgumentException](
+      TextStats.subtractNgramCounts(spark, s"$dir/ng", Seq(1).toDF("id")))
   }
 }

@@ -6,6 +6,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Physical maintenance plane: partitioned layout + directory drops. */
 class MaintainSpec extends AnyFunSuite {
+  import MaintainSpec._
   private lazy val spark = SparkSpecBase.spark
   import spark.implicits._
 
@@ -394,4 +395,147 @@ class MaintainSpec extends AnyFunSuite {
       nowEpochSec = 1500L, ifOlderThanSec = 3600L, contextCols = Seq("lang")))
     assert(served() == Set("scala", "scatter"))
   }
+
+  // ---- crash states of the store-swap kernel (StoreFs) ----
+  //
+  // Each swap walks: staged → live renamed aside → staged renamed in →
+  // aside deleted. A crash can stop it after any of the first three steps.
+  // Every row below builds its store, puts it into each crash state with
+  // plain file operations (the staged copy is junk that would break a read
+  // if it were ever promoted), runs the operation again, and compares the
+  // answer with a run that never crashed.
+
+  private def crashRows: Seq[CrashRow] = {
+    val segDocs = (1 to 300).map(i => (i.toLong, s"seg${i % 3}", s"v$i"))
+      .toDF("id", "segment", "v")
+    val textDocs = (1 to 40).map(i => (i, s"tok$i the quick brown fox tok${i % 7}"))
+      .toDF("doc_id", "text")
+    val vecs = (0 until 40).map { i =>
+      val base = if (i % 2 == 0) Array(1.0, 0.0, 0.0) else Array(0.0, 1.0, 0.0)
+      (i.toLong, base.zipWithIndex.map { case (x, d) => x + 0.01 * (((i * 7 + d * 3) % 5) - 2) })
+    }.toDF("vec_id", "embedding")
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.mkString("|")).toSeq.sorted
+    def dataFiles(dir: java.io.File): Int =
+      dir.listFiles.count(f => f.isFile && !f.getName.startsWith("_") &&
+        !f.getName.startsWith("."))
+    Seq(
+      CrashRow("compactSegments",
+        b => segDocs.repartition(4).write.partitionBy("segment").parquet(s"$b/t"),
+        b => Maintain.compactSegments(spark, s"$b/t", "segment"),
+        b => (rows(spark.read.parquet(s"$b/t")),
+          new java.io.File(s"$b/t").listFiles.filter(_.getName.startsWith("segment="))
+            .map(d => d.getName -> dataFiles(d)).toMap),
+        b => partition(s"$b/t", "segment=seg1")),
+      CrashRow("compactPostings",
+        { b =>
+          val p = TextIndex.buildPostings(textDocs, "doc_id", Seq("text"), 4)
+          TextIndex.writePostings(p.unionByName(p), s"$b/p")
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(s"$b/p/_graft_batch"), "7|q")
+        },
+        b => TextIndex.compactPostings(spark, s"$b/p"),
+        { b =>
+          val (df, meta) = TextIndex.openPostings(spark, s"$b/p")
+          (rows(df.select("doc_id", "field", "token", "tf", "bucket")), meta,
+            java.nio.file.Files.readString(java.nio.file.Paths.get(s"$b/p/_graft_batch")))
+        },
+        b => wholeDir(s"$b/p")),
+      CrashRow("compactAnnIndex",
+        { b =>
+          graft.pipeline.Ivf.writeIndex(vecs, c = 2, s"$b/a", iters = 2)
+          graft.pipeline.Ivf.deleteFromIndex(spark, s"$b/a", Seq(2L, 5L).toDF("vec_id"))
+        },
+        b => Maintain.compactAnnIndex(spark, s"$b/a"),
+        b => (rows(spark.read.parquet(s"$b/a/cells").select("vec_id", "list_id")),
+          new java.io.File(s"$b/a/deletes").exists),
+        { b =>
+          val l = spark.read.parquet(s"$b/a/cells").where(col("vec_id") === 2L)
+            .select("list_id").head.getInt(0)
+          partition(s"$b/a/cells", s"list_id=$l")
+        }),
+      CrashRow("subtractNgramCounts",
+        b => graft.pipeline.TextStats.writeNgramCountsKeyed(textDocs, "text", "doc_id", 3, s"$b/ng"),
+        b => graft.pipeline.TextStats.subtractNgramCounts(spark, s"$b/ng", Seq(3, 17).toDF("id")),
+        b => (rows(graft.pipeline.TextStats.dupNgramFractionFromKeyedStore(
+            textDocs.where(!col("doc_id").isin(3, 17)), "text", "doc_id", 3, s"$b/ng")),
+          rows(spark.read.parquet(s"$b/ng/bydoc"))),
+        { b =>
+          val nb = java.nio.file.Files.readString(
+            java.nio.file.Paths.get(s"$b/ng/bydoc/_graft_buckets")).trim.toLong
+          val bk = Seq(3).toDF("doc_id").select(pmod(xxhash64(col("doc_id")), lit(nb)))
+            .head.getLong(0)
+          partition(s"$b/ng/bydoc", s"bucket=$bk")
+        }),
+      CrashRow("deleteFromSketchStore",
+        b => graft.pipeline.Dedup.writeSketchStore(textDocs, s"$b/s", "text", "doc_id"),
+        b => graft.pipeline.Dedup.deleteFromSketchStore(spark, s"$b/s", Seq(3, 17).toDF("id")),
+        b => rows(spark.read.parquet(s"$b/s").select("id")),
+        b => wholeDir(s"$b/s"))
+    )
+  }
+
+  test("store-swap kernel: every caller's next run recovers a crash at " +
+       "each swap step and answers as if it never crashed") {
+    import org.apache.commons.io.FileUtils
+    def fresh(tag: String) =
+      java.nio.file.Files.createTempDirectory(s"graft_crash_$tag").toString
+    def junkStaged(d: SwapDirs): Unit = {
+      assert(d.staged.mkdirs() || d.staged.isDirectory)
+      java.nio.file.Files.writeString(
+        new java.io.File(d.staged, "part-00000-junk.parquet").toPath, "not parquet")
+    }
+    val failures = for {
+      row <- crashRows
+      expected = { val b = fresh("ref"); row.setup(b); row.op(b); row.answer(b) }
+      step <- Seq("staged", "aside", "renamed")
+      problem <- {
+        val b = fresh(step)
+        row.setup(b)
+        val d = row.swap(b)
+        assert(d.live.isDirectory, s"${row.name}: no live ${d.live}")
+        try {
+          step match {
+            case "staged" => junkStaged(d)
+            case "aside" => assert(d.live.renameTo(d.aside)); junkStaged(d)
+            case "renamed" =>
+              val old = new java.io.File(b, "pre_op_copy")
+              FileUtils.copyDirectory(d.live, old)
+              row.op(b)
+              assert(old.renameTo(d.aside))
+          }
+          row.op(b)
+          val got = row.answer(b)
+          val left = Seq(d.staged, d.aside).filter(_.exists)
+          (if (got != expected) Seq(s"${row.name}/$step: answer $got != $expected")
+           else Nil) ++
+            (if (left.nonEmpty) Seq(s"${row.name}/$step: left behind $left") else Nil)
+        } catch {
+          case e: Exception => Seq(s"${row.name}/$step: ${e.getClass.getSimpleName}: ${e.getMessage}")
+        }
+      }
+    } yield problem
+    assert(failures.isEmpty, failures.mkString("\n"))
+  }
+}
+
+object MaintainSpec {
+  /** Where one swap of a caller lives on disk. */
+  final case class SwapDirs(live: java.io.File, staged: java.io.File,
+                            aside: java.io.File)
+
+  def wholeDir(path: String): SwapDirs = {
+    val d = new java.io.File(path)
+    SwapDirs(d, new java.io.File(d.getParent, d.getName + ".swap_tmp"),
+      new java.io.File(d.getParent, d.getName + ".swap_old"))
+  }
+
+  def partition(root: String, name: String): SwapDirs =
+    SwapDirs(new java.io.File(root, name),
+      new java.io.File(root, s".swap_tmp/$name"),
+      new java.io.File(root, s".swap_old_$name"))
+
+  final case class CrashRow(name: String, setup: String => Unit,
+                            op: String => Unit, answer: String => Any,
+                            swap: String => SwapDirs)
 }
