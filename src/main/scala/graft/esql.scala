@@ -1178,8 +1178,7 @@ object Esql {
           val mToks = litStr(argInfo(1)._2, "MATCH")
             .split("[ \t\n\f\r]+").filter(_.nonEmpty).toSeq
           require(mToks.nonEmpty, "MATCH needs a non-empty query string")
-          mToks.map(t => lower(a(0)).rlike(
-            QueryCompiler.termPattern(QueryCompiler.escapeTerm(t))))
+          mToks.map(t => QueryCompiler.termMatch(a(0), QueryCompiler.escapeTerm(t)))
             .reduce(_ || _)
         case "QSTR" =>
           // QSTR("field:term AND other:x") — the full Lucene-lite grammar

@@ -134,7 +134,7 @@ case class SimHash64(child: Expression)
 /** The per-token OSA acceptor shared by [[FuzzyTokenMatch]] (predicate)
   * and [[FuzzyTokenHighlight]] (marker) — one matcher per (term, budget,
   * prefix) spec, DP buffers reused across tokens. */
-private[functions] final class FuzzyMatcher(term: String, maxDist: Int,
+final class FuzzyMatcher(term: String, maxDist: Int,
                                             prefixLen: Int) extends Serializable {
   require(maxDist >= 0 && maxDist <= 2,
     "maxDist must be in [0, 2] (Lucene caps fuzzy edits at 2)")
@@ -205,30 +205,48 @@ private[functions] object FuzzyMatcher {
     c == ' ' || c == '\t' || c == '\n' || c == '\f' || c == '\r'
 }
 
+/** Implements `doGenCode` as a static call (like [[HistL1]]): as a
+  * CodegenFallback it kept every fuzzy Filter out of whole-stage codegen,
+  * splitting the scan of a `term~1 AND field:x` query in two stages. */
 case class FuzzyTokenMatch(child: Expression, term: String, maxDist: Int,
                            prefixLen: Int = 0)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression {
   private val matcher = new FuzzyMatcher(term, maxDist, prefixLen)
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = true
 
-  override protected def nullSafeEval(v: Any): Any = {
-    val text = v.asInstanceOf[UTF8String].toString
+  override protected def nullSafeEval(v: Any): Any =
+    FuzzyTokenMatch.matches(matcher, v.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(
+      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
+      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
+      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode = {
+    val m = ctx.addReferenceObj("fuzzyMatcher", matcher, classOf[FuzzyMatcher].getName)
+    defineCodeGen(ctx, ev, c => s"graft.functions.FuzzyTokenMatch.matches($m, $c)")
+  }
+
+  override protected def withNewChildInternal(c: Expression): FuzzyTokenMatch = copy(child = c)
+  override def prettyName: String = "fuzzy_token_match"
+}
+
+object FuzzyTokenMatch {
+  /** Static kernel shared by interpreted and codegen'd paths: any
+    * whitespace token of `v` accepted by `m`. */
+  def matches(m: FuzzyMatcher, v: UTF8String): Boolean = {
+    val text = v.toString
     var start = 0
     val n = text.length
     var i = 0
     while (i <= n) {
       if (i == n || FuzzyMatcher.isWs(text.charAt(i))) {
-        if (i > start && matcher.within(text, start, i)) return java.lang.Boolean.TRUE
+        if (i > start && m.within(text, start, i)) return true
         start = i + 1
       }
       i += 1
     }
-    java.lang.Boolean.FALSE
+    false
   }
-
-  override protected def withNewChildInternal(c: Expression): FuzzyTokenMatch = copy(child = c)
-  override def prettyName: String = "fuzzy_token_match"
 }
 
 /** Search-highlight marker for fuzzy leaves: wraps every whitespace token

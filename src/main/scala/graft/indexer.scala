@@ -419,7 +419,7 @@ object Indexer {
     val shaped = pipeline.map(p => IngestPipeline.compile(p)(filtered))
       .getOrElse(filtered)
     shaped.write.mode("overwrite").parquet(destPath)
-    spark.read.parquet(destPath)
+    StoreFs.read(spark, destPath)
   }
 
   /** S5: delete — drop docs whose key appears in the delete set; a no-op in

@@ -240,8 +240,8 @@ object Maintain {
     // one scan + one clustered write for ALL fragmented segments; basePath
     // keeps the partition column so the staging layout mirrors the store's
     StoreFs.swapPartitions(spark, tablePath, fragmented.map(_._1.getName)) { tmp =>
-      val df = spark.read.option("basePath", tablePath)
-        .parquet(fragmented.map(_._1.toString): _*)
+      val df = StoreFs.read(spark,
+        fragmented.map(_._1.toString), Some(tablePath))
       Indexer.writeSegmented(df, tmp, segmentCol, maxRecordsPerFile)
     }
     fragmented.map { case (dir, before) =>
@@ -350,8 +350,8 @@ object Maintain {
     // sidecar clears LAST — so serving stays correct until then)
     StoreFs.recover(spark, cellsRoot)
     if (!StoreFs.hasDataFiles(spark, delDir.toString)) return (0L, 0)
-    val dels = spark.read.parquet(delDir.toString).select(col(idCol)).distinct()
-    val cells = spark.read.parquet(cellsRoot)
+    val dels = StoreFs.read(spark, delDir.toString).select(col(idCol)).distinct()
+    val cells = StoreFs.read(spark, cellsRoot)
     // which lists physically hold tombstoned ids: id + partition column
     // only (column-pruned), output bounded by C
     val affected = cells.join(dels, Seq(idCol), "left_semi")
@@ -362,8 +362,8 @@ object Maintain {
     // one job stages every affected list's survivors; basePath keeps the
     // partition column so the staging layout mirrors the store's
     StoreFs.swapPartitions(spark, cellsRoot, affected.map(l => s"list_id=$l")) { tmp =>
-      spark.read.option("basePath", cellsRoot)
-        .parquet(affected.map(l => s"$cellsRoot/list_id=$l"): _*)
+      StoreFs.read(spark,
+        affected.map(l => s"$cellsRoot/list_id=$l"), Some(cellsRoot))
         .join(dels, Seq(idCol), "left_anti")
         .write.mode("overwrite").partitionBy("list_id").parquet(tmp)
     }
@@ -390,7 +390,7 @@ object Maintain {
                         path: String): Int = {
     val deltas = graft.pipeline.TextStats.listCountDeltas(spark, path)
     if (deltas.isEmpty) return 0
-    val schema = spark.read.parquet(path).schema
+    val schema = StoreFs.read(spark, path).schema
     require(schema.fields.length == 2,
       s"$path is not a flat count store (schema ${schema.simpleString})")
     val (key, cnt) = (schema.fields(0).name, schema.fields(1).name)
@@ -566,12 +566,12 @@ object Maintain {
                     path: String): DataFrame = {
     val version = graft.pipeline.Ivf.currentVersion(spark, path)
     val p = graft.pipeline.Ivf.resolveStore(spark, path)
-    val lists = spark.read.parquet(s"$p/centroids").count()
+    val lists = StoreFs.read(spark, s"$p/centroids").count()
     val tombstoned =
       if (StoreFs.hasDataFiles(spark, s"$p/deletes"))
-        spark.read.parquet(s"$p/deletes").distinct().count()
+        StoreFs.read(spark, s"$p/deletes").distinct().count()
       else 0L
-    spark.read.parquet(s"$p/cells")
+    StoreFs.read(spark, s"$p/cells")
       .groupBy(col("list_id")).agg(count(lit(1)).as("n"))
       .agg(sum(col("n")).as("rows"),
         count(lit(1)).as("nonempty_lists"),

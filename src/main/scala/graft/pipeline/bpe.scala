@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** BPE tokenizer induction — the tokenizer-training face of the
   * training-data pipeline (Sennrich et al. 2016's corpus algorithm,
@@ -21,6 +22,10 @@ import org.apache.spark.sql.functions._
   * word table (≤ maxWords rows) and the learned rules.
   */
 object Bpe {
+
+  /** Bound on the vocabulary [[encodeToIds]] collects to the driver: the
+    * distinct post-encode tokens, at most alphabet + merges. */
+  private val MaxVocab = 1 << 20
 
   /** Learn `numMerges` merge rules. Returns (rank, left, right, merged,
     * pair_count) — rank 1 is the first (most frequent) merge; pair_count
@@ -208,10 +213,10 @@ object Bpe {
   def encodeToIdsFromStore(df: DataFrame, idCol: String, textCol: String,
                            path: String): DataFrame = {
     val spark = df.sparkSession
-    val rules = spark.read.parquet(s"$path/merges")
+    val rules = graft.StoreFs.read(spark, s"$path/merges")
       .select("rank", "left", "right").collect().sortBy(_.getInt(0))
       .map(r => (r.getString(1), r.getString(2))).toSeq
-    val vocab = spark.read.parquet(s"$path/vocab").collect()
+    val vocab = graft.StoreFs.read(spark, s"$path/vocab").collect()
       .map(r => r.getString(0) -> r.getInt(1)).toMap
     encodeWith(df, idCol, textCol, rules, vocab)
   }
@@ -261,9 +266,15 @@ object Bpe {
     // over one collected distinct pass — same ids as the r14 globalRank,
     // without its range exchange. This corpus pass derives the VOCAB only;
     // the encoding itself is the one narrow pass in [[encodeWith]].
-    val vocab = encode(df, textCol, merges)
+    // ranked in code-point order — the order of the stored vocab's Spark
+    // `asc` sort (UTF-8 bytes); JVM String order (UTF-16 units) puts a
+    // supplementary-plane token before U+E000..U+FFFF and renumbers ids
+    val toks = encode(df, textCol, merges)
       .select(explode(col("tokens")).as("tok")).distinct()
-      .collect().map(_.getString(0)).sorted.zipWithIndex.toMap
+      .limit(MaxVocab + 1).collect().map(_.getString(0))
+    require(toks.length <= MaxVocab,
+      s"vocabulary exceeds $MaxVocab tokens — not a bounded alphabet + merges set")
+    val vocab = toks.sortBy(UTF8String.fromString).zipWithIndex.toMap
     encodeWith(df, idCol, textCol, rules, vocab)
   }
 }

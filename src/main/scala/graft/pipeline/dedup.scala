@@ -140,7 +140,7 @@ object Dedup {
                             idCol: String = "id"): Unit = {
     val keys = ids.select(col(idCol).as("id")).distinct()
     graft.StoreFs.stagedRewrite(spark, path) { tmp =>
-      spark.read.parquet(path)
+      graft.StoreFs.read(spark, path)
         .join(broadcast(keys), Seq("id"), "left_anti")
         .write.parquet(tmp)
     }
@@ -155,7 +155,7 @@ object Dedup {
                             threshold: Double = 0.5): DataFrame = {
     require(bands >= 1 && numHashes % bands == 0,
       s"bands ($bands) must divide numHashes ($numHashes)")
-    val store = spark.read.parquet(path)
+    val store = graft.StoreFs.read(spark, path)
     // 1-row probe; an empty store legitimately yields an empty pair set
     store.select(size(col("sig"))).head(1).foreach { r =>
       require(r.getInt(0) == numHashes,
@@ -189,7 +189,7 @@ object Dedup {
         word_shingles(tokens(col(textCol)), shingleK).as("sh"))
       .withColumn("sig", minhash_sig(col("sh"), numHashes))
       .localCheckpoint(true)
-    val store = spark.read.parquet(path)
+    val store = graft.StoreFs.read(spark, path)
     val out = incrementalPairs(store, fresh, numHashes, bands, threshold)
     if (appendToStore) fresh.sort("id").write.mode("append").parquet(path)
     out

@@ -110,7 +110,7 @@ object Ivf {
     * like model parameters (the same bounded collect the in-memory path's
     * training already does). */
   private[graft] def readCentroids(spark: SparkSession, path: String): Array[Array[Double]] =
-    spark.read.parquet(s"$path/centroids")
+    graft.StoreFs.read(spark, s"$path/centroids")
       .orderBy("list_id").collect()
       .map(_.getSeq[Double](1).toArray)
 
@@ -148,7 +148,7 @@ object Ivf {
           "(vectors carry no version column to resolve a winner here).")
     val keys = deltaIds.select(col(idCol)).distinct()
     if (graft.StoreFs.hasDataFiles(spark, s"$path/deletes")) {
-      val shadowed = spark.read.parquet(s"$path/deletes")
+      val shadowed = graft.StoreFs.read(spark, s"$path/deletes")
         .join(broadcast(keys), Seq(idCol), "left_semi")
         .limit(5).collect().map(_.get(0)).toSeq
       if (shadowed.nonEmpty)
@@ -160,7 +160,7 @@ object Ivf {
     }
     val mode = spark.conf.getOption("graft.append.insertCheck").getOrElse("error")
     if (mode == "off" || !graft.StoreFs.hasDataFiles(spark, s"$path/cells")) return
-    val collided = spark.read.parquet(s"$path/cells")
+    val collided = graft.StoreFs.read(spark, s"$path/cells")
       .select(col(idCol))
       .join(broadcast(keys), Seq(idCol), "left_semi")
       .limit(5).collect().map(_.get(0)).toSeq
@@ -217,7 +217,7 @@ object Ivf {
     val delta = assign(newRows.withColumn(vecCol, col(vecCol).cast("array<double>")),
       centroids, idCol, vecCol).select(cmp: _*)
     val keys = delta.select(col(idCol)).distinct()
-    val present = spark.read.parquet(s"$path/cells")
+    val present = graft.StoreFs.read(spark, s"$path/cells")
       .join(broadcast(keys), Seq(idCol), "left_semi")
       .select(cmp: _*)
     if (present.isEmpty) return true
@@ -258,7 +258,7 @@ object Ivf {
   private[graft] def liveCells(spark: SparkSession, path: String,
                                   cells: DataFrame, idCol: String): DataFrame =
     if (graft.StoreFs.hasDataFiles(spark, s"$path/deletes"))
-      cells.join(spark.read.parquet(s"$path/deletes").select(col(idCol)),
+      cells.join(graft.StoreFs.read(spark, s"$path/deletes").select(col(idCol)),
         Seq(idCol), "left_anti")
     else cells
 
@@ -286,7 +286,7 @@ object Ivf {
     val probeIds = probes.select(col("list_id")).distinct()
       .collect().map(_.getInt(0)).toSeq
     val cells = liveCells(spark, path,
-      spark.read.parquet(s"$path/cells").where(col("list_id").isin(probeIds: _*)),
+      graft.StoreFs.read(spark, s"$path/cells").where(col("list_id").isin(probeIds: _*)),
       idCol)
     val joined = cells.join(broadcast(probes), Seq("list_id"))
     val candidates =

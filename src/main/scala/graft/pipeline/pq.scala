@@ -169,7 +169,7 @@ object Pq {
     * parameters. */
   private[graft] def readCodebooks(spark: org.apache.spark.sql.SparkSession,
                                    path: String): Array[Array[Array[Double]]] =
-    spark.read.parquet(s"$path/codebooks").collect()
+    graft.StoreFs.read(spark, s"$path/codebooks").collect()
       .groupBy(_.getInt(0)).toSeq.sortBy(_._1)
       .map(_._2.sortBy(_.getInt(1))
         .map(_.getSeq[Double](2).toArray))
@@ -243,7 +243,7 @@ object Pq {
     val delta = encode(Ivf.assign(newRows, centroids, idCol, vecCol), cb, vecCol)
       .select(cmp: _*)
     val keys = delta.select(col(idCol)).distinct()
-    val present = spark.read.parquet(s"$path/cells")
+    val present = graft.StoreFs.read(spark, s"$path/cells")
       .join(broadcast(keys), Seq(idCol), "left_semi")
       .select(cmp: _*)
     if (present.isEmpty) return true
@@ -295,7 +295,7 @@ object Pq {
     val probeIds = probes.select(col("list_id")).distinct()
       .collect().map(_.getInt(0)).toSeq
     val cells = Ivf.liveCells(spark, path,
-      spark.read.parquet(s"$path/cells").where(col("list_id").isin(probeIds: _*)),
+      graft.StoreFs.read(spark, s"$path/cells").where(col("list_id").isin(probeIds: _*)),
       idCol)
     val joined = cells.join(broadcast(probes), Seq("list_id"))
     val scored =

@@ -302,9 +302,9 @@ object TextStats {
                                     cnt: String): DataFrame = {
     val deltas = listCountDeltas(spark, path)
       .filter(p => graft.StoreFs.hasDataFiles(spark, p.toString))
-    val base = spark.read.parquet(path)
+    val base = graft.StoreFs.read(spark, path)
     if (deltas.isEmpty) base
-    else base.unionByName(spark.read.parquet(deltas.map(_.toString): _*))
+    else base.unionByName(graft.StoreFs.read(spark, deltas.map(_.toString)))
       .groupBy(col(key)).agg(sum(col(cnt)).cast("long").as(cnt))
       .where(col(cnt) =!= 0L)
   }
@@ -606,7 +606,7 @@ object TextStats {
       LedgerBuckets.toString)
     // agg derives from the written ledger — one ledger read instead of a
     // second corpus tokenize
-    spark.read.parquet(s"$path/bydoc")
+    graft.StoreFs.read(spark, s"$path/bydoc")
       .groupBy(col(key)).agg(sum(col("c")).cast("long").as(cnt))
       .sort(key).write.mode("overwrite").parquet(s"$path/agg")
   }
@@ -616,7 +616,7 @@ object TextStats {
   private def openLedger(spark: org.apache.spark.sql.SparkSession,
                          path: String): DataFrame = {
     graft.StoreFs.recover(spark, s"$path/bydoc")
-    spark.read.parquet(s"$path/bydoc")
+    graft.StoreFs.read(spark, s"$path/bydoc")
   }
 
   /** One-column `doc_id` frame cast to the ledger's STORED doc_id type:
@@ -678,7 +678,7 @@ object TextStats {
       // same-id replay short-circuits.
       if (!batchId.exists(countStoreHoldsBatch(spark, s"$path/agg", _)))
         graft.StoreFs.stagedRewrite(spark, s"$path/agg") { tmp =>
-          spark.read.parquet(bydoc)
+          graft.StoreFs.read(spark, bydoc)
             .groupBy(col(key)).agg(sum(col("c")).cast("long").as(cnt))
             .sort(key).write.parquet(tmp)
           batchId.foreach(id =>

@@ -302,14 +302,36 @@ object QueryCompiler {
     * `src1x` but not `src1-` (raw Lucene `?`, with no analyzer in front,
     * would match both; an analyzer would have stripped the `-` anyway).
     * The same applies to literal terms that start/end with a non-word
-    * character. */
-  private[graft] def termMatch(field: String, term: String): Column =
-    lower(col(field)).rlike(termPattern(term))
+    * character.
+    *
+    * Evaluation: a plain literal or a trailing-`*` prefix (the shapes of
+    * nearly every leaf) runs as the native [[graft.functions.WordMatch]]
+    * kernel, the same answer without the regex on ASCII values; every
+    * other wildcard shape runs `lower(c) RLIKE termPattern(term)`. This is
+    * the one definition of "term matches" — every term/prefix leaf of both
+    * grammars, nested `match` and ES|QL `MATCH` go through it. */
+  private[graft] def termMatch(c: Column, term: String): Column = {
+    val (pattern, word) = termForms(term)
+    word match {
+      case Some((literal, prefix)) => org.apache.spark.sql.graft.Bridge.column(
+        graft.functions.WordMatch(org.apache.spark.sql.graft.Bridge.expression(c),
+          literal, prefix, pattern))
+      case None => lower(c).rlike(pattern)
+    }
+  }
 
   /** The regex [[termMatch]] evaluates, as a string — shared with
     * [[graft.Search.highlight]], which wraps the SAME matches in markup
     * (highlighting diverging from matching would be a lie in the output). */
-  private[graft] def termPattern(term: String): String = {
+  private[graft] def termPattern(term: String): String = termForms(term)._1
+
+  /** One parse of a term into its regex and, for a plain term or a term
+    * whose only wildcard is one trailing `*` (then `prefix`), its
+    * lowercased, unescaped literal: the two shapes whose regex is
+    * `\b<literal>\b` / `\b<literal>[^\s]*`, which
+    * [[graft.functions.WordMatch]] evaluates without the regex. One parse,
+    * so the kernel and the regex cannot disagree. */
+  private def termForms(term: String): (String, Option[(String, Boolean)]) = {
     // a wildcard char is active only when preceded by an even number of
     // backslashes
     def unescapedAt(i: Int): Boolean = {
@@ -320,25 +342,34 @@ object QueryCompiler {
     val hasWildcard = term.indices
       .exists(i => (term(i) == '*' || term(i) == '?') && unescapedAt(i))
     if (hasWildcard) {
-      val body = new StringBuilder
+      // literal runs (Left) and active wildcards (Right), in order
+      val parts = scala.collection.mutable.ListBuffer[Either[String, Char]]()
       val run = new StringBuilder
-      def flush(): Unit =
-        if (run.nonEmpty) { body ++= java.util.regex.Pattern.quote(run.toString); run.clear() }
+      def flush(): Unit = if (run.nonEmpty) { parts += Left(run.toString); run.clear() }
       val t = term.toLowerCase
       var i = 0
       while (i < t.length) {
         t(i) match {
           case '\\' if i + 1 < t.length => run += t(i + 1); i += 2
-          case '*' => flush(); body ++= "[^\\s]*"; i += 1
-          case '?' => flush(); body ++= "[^\\s]"; i += 1
+          case w @ ('*' | '?') => flush(); parts += Right(w); i += 1
           case c   => run += c; i += 1
         }
       }
       flush()
+      val body = parts.map {
+        case Left(s) => java.util.regex.Pattern.quote(s)
+        case Right('*') => "[^\\s]*"
+        case Right(_) => "[^\\s]"
+      }.mkString
       // `?` consumes exactly one non-space char, so token-boundary anchors
       // stay; only a leading/trailing unescaped `*` (zero-or-more) drops its
-      (if (t.startsWith("*")) "" else "\\b") + body +
-        (if (t.endsWith("*") && unescapedAt(t.length - 1)) "" else "\\b")
+      val lead = !t.startsWith("*")
+      val trail = !(t.endsWith("*") && unescapedAt(t.length - 1))
+      val native = parts.toList match {
+        case List(Left(s), Right('*')) if lead && !trail => Some((s, true))
+        case _ => None
+      }
+      ((if (lead) "\\b" else "") + body + (if (trail) "\\b" else ""), native)
     } else {
       val literal = new StringBuilder
       var i = 0
@@ -346,7 +377,8 @@ object QueryCompiler {
         if (term(i) == '\\' && i + 1 < term.length) { literal += term(i + 1); i += 2 }
         else { literal += term(i); i += 1 }
       }
-      "\\b" + java.util.regex.Pattern.quote(literal.toString.toLowerCase) + "\\b"
+      val lit = literal.toString.toLowerCase
+      ("\\b" + java.util.regex.Pattern.quote(lit) + "\\b", Some((lit, false)))
     }
   }
 
@@ -513,7 +545,7 @@ object QueryCompiler {
       // `pos` tracks polarity: only positive leaves contribute to the score
       def toCol(n: Node, pos: Boolean): Column = n match {
         case Term(f, v, boost) =>
-          val c = termMatch(f, v); if (pos) leaves += leaf(c, boost); c
+          val c = termMatch(col(f), v); if (pos) leaves += leaf(c, boost); c
         case Regex(f, pat, boost) =>
           // whole-token regex, same anchor model as the DSL `regexp`
           val c = lower(col(f)).rlike("\\b(?:" + pat + ")\\b")
@@ -1012,8 +1044,8 @@ object QueryCompiler {
           case TermTok(t, _, Some(d)) => graft.functions.TextSketchFunctions
             .fuzzy_token_match(col(f), t, d)
           case TermTok(t, prefix, None) =>
-            termMatch(f, escapeTerm(t) + (if (prefix) "*" else ""))
-          case PhraseTok(p, 0) => termMatch(f, escapeTerm(p))
+            termMatch(col(f), escapeTerm(t) + (if (prefix) "*" else ""))
+          case PhraseTok(p, 0) => termMatch(col(f), escapeTerm(p))
           case PhraseTok(p, s) => proximityMatch(f, p, s)
           case other => throw new IllegalStateException(s"not an atom: $other")
         }
@@ -1374,7 +1406,7 @@ object QueryCompiler {
             case "match" =>
               val toks = text.split("[ \t\n\f\r]+").filter(_.nonEmpty).toSeq
               require(toks.nonEmpty, s"match expects a non-empty string value, got: $v")
-              val cols = toks.map(t => termMatch(f, escapeTerm(t)))
+              val cols = toks.map(t => termMatch(col(f), escapeTerm(t)))
               if (scoring) cols.foreach(tc => leaves += leaf(tc, boost))
               if (matchAnd) cols.reduce(_ && _) else cols.reduce(_ || _)
             case _ =>
@@ -1386,10 +1418,10 @@ object QueryCompiler {
                 // keeps inner spaces inside the \b…\b anchor); with slop,
                 // ordered per-gap proximity
                 case "match_phrase" =>
-                  if (slop == 0) termMatch(f, escapeTerm(text))
+                  if (slop == 0) termMatch(col(f), escapeTerm(text))
                   else proximityMatch(f, text, slop)
-                case "prefix"       => termMatch(f, escapeTerm(text) + "*")
-                case "wildcard"     => termMatch(f, text)       // value carries '*' / '?'
+                case "prefix"       => termMatch(col(f), escapeTerm(text) + "*")
+                case "wildcard"     => termMatch(col(f), text)       // value carries '*' / '?'
               }
               if (scoring) leaves += leaf(c, boost)
               c
@@ -1618,8 +1650,8 @@ object QueryCompiler {
                 require(v.isTextual && v.asText.nonEmpty,
                   s"nested match expects a non-empty string value, got: $v")
                 val toks = v.asText.split("\\s+").filter(_.nonEmpty).toSeq
-                toks.map(t => lower(x.getField(innerField(f)))
-                  .rlike(termPattern(escapeTerm(t)))).reduce(_ || _)
+                toks.map(t => termMatch(x.getField(innerField(f)), escapeTerm(t)))
+                  .reduce(_ || _)
               case "exists" =>
                 val f = Option(ib.get("field")).filter(_.isTextual).map(_.asText)
                   .getOrElse(throw new IllegalArgumentException(
@@ -2000,7 +2032,7 @@ object QueryCompiler {
               val perField = mmFields.map { case (f, b) =>
                 val toks = qv.asText.split("[ \t\n\f\r]+").filter(_.nonEmpty).toSeq
                 require(toks.nonEmpty, s"multi_match expects a non-empty string query")
-                val termCols = toks.map(t => termMatch(f, escapeTerm(t)))
+                val termCols = toks.map(t => termMatch(col(f), escapeTerm(t)))
                 (if (mmAnd) termCols.reduce(_ && _) else termCols.reduce(_ || _), b)
               }
               if (scoring) leaves ++= perField.map { case (c, b) => leaf(c, b) }
@@ -2497,8 +2529,8 @@ object QueryCompiler {
           require(v.isTextual && v.asText.trim.nonEmpty,
             s"match_bool_prefix expects a non-empty string, got: $v")
           val toks = v.asText.split("[ \t\n\f\r]+").filter(_.nonEmpty).toSeq
-          val cols = toks.init.map(t => termMatch(f, escapeTerm(t))) :+
-            termMatch(f, escapeTerm(toks.last) + "*")
+          val cols = toks.init.map(t => termMatch(col(f), escapeTerm(t))) :+
+            termMatch(col(f), escapeTerm(toks.last) + "*")
           if (scoring) cols.foreach(tc => leaves += leaf(tc, boost))
           if (mbpAnd) cols.reduce(_ && _) else cols.reduce(_ || _)
         case "match_phrase_prefix" =>
@@ -2522,7 +2554,7 @@ object QueryCompiler {
             }
           require(v.isTextual && v.asText.nonEmpty,
             s"match_phrase_prefix expects a non-empty string, got: $v")
-          val c = termMatch(f, escapeTerm(v.asText) + "*")
+          val c = termMatch(col(f), escapeTerm(v.asText) + "*")
           if (scoring) leaves += leaf(c, boost)
           c
         case "span_term" =>
@@ -2534,7 +2566,7 @@ object QueryCompiler {
               .getOrElse(throw new IllegalArgumentException(
                 s"span_term expects a string or {value: ...}, got: $v"))
           require(text.nonEmpty, "span_term expects a non-empty term")
-          val c = termMatch(f, escapeTerm(text))
+          val c = termMatch(col(f), escapeTerm(text))
           if (scoring) leaves += leaf(c, 1)
           c
         case "span_field_masking" =>
@@ -2543,7 +2575,7 @@ object QueryCompiler {
           // on the masking field, consistent with its in-compound meaning
           val (mf, mt) = spanTermOf(mapper.createObjectNode()
             .set[JsonNode]("span_field_masking", body))
-          val c = termMatch(mf, escapeTerm(mt))
+          val c = termMatch(col(mf), escapeTerm(mt))
           if (scoring) leaves += leaf(c, 1)
           c
         case "span_near" =>
@@ -2827,7 +2859,7 @@ object QueryCompiler {
                 require(toks.nonEmpty, "intervals match query must be non-empty")
                 val maxGaps = Option(rb.get("max_gaps")).map(_.asInt).getOrElse(-1)
                 val ordered = Option(rb.get("ordered")).exists(_.asBoolean)
-                if (toks.size == 1) termMatch(iF, escapeTerm(toks.head))
+                if (toks.size == 1) termMatch(col(iF), escapeTerm(toks.head))
                 else if (ordered && maxGaps < 0)
                   // in order, any distance: tokens chained by a free gap
                   lower(col(iF)).rlike(toks.map(t => "\\b" + reQuote(t) + "\\b")
@@ -2836,7 +2868,7 @@ object QueryCompiler {
                   proximityMatch(iF, toks.mkString(" "), maxGaps)
                 else if (maxGaps < 0)
                   // any order, any distance = every term present
-                  toks.map(t => termMatch(iF, escapeTerm(t))).reduce(_ && _)
+                  toks.map(t => termMatch(col(iF), escapeTerm(t))).reduce(_ && _)
                 else {
                   require(toks.size == 2,
                     "intervals match unordered with max_gaps supports exactly " +
@@ -2849,13 +2881,13 @@ object QueryCompiler {
                   .getOrElse(throw new IllegalArgumentException(
                     "intervals prefix needs 'prefix'"))
                 require(p.nonEmpty, "intervals prefix must be non-empty")
-                termMatch(iF, escapeTerm(p) + "*")
+                termMatch(col(iF), escapeTerm(p) + "*")
               case "wildcard" =>
                 val p = Option(rb.get("pattern")).filter(_.isTextual).map(_.asText)
                   .getOrElse(throw new IllegalArgumentException(
                     "intervals wildcard needs 'pattern'"))
                 require(p.nonEmpty, "intervals wildcard pattern must be non-empty")
-                termMatch(iF, p)
+                termMatch(col(iF), p)
               case "any_of" =>
                 val cl = Option(rb.get("intervals")).filter(_.isArray)
                   .map(_.elements.asScala.toSeq)
@@ -2980,7 +3012,7 @@ object QueryCompiler {
             "terms_set needs exactly one of minimum_should_match_field / " +
               "minimum_should_match")
           val matchedN = ts
-            .map(t => when(termMatch(f, escapeTerm(t)), 1).otherwise(0))
+            .map(t => when(termMatch(col(f), escapeTerm(t)), 1).otherwise(0))
             .reduce(_ + _)
           // unclamped, like ES: a per-doc threshold larger than terms.size
           // simply matches nothing (ES users clamp via a script; we don't)
@@ -3110,7 +3142,7 @@ object QueryCompiler {
           }.getOrElse(false)
           val toks = qv.asText.split("[ \t\n\f\r]+").filter(_.nonEmpty).toSeq
           val perTerm = toks.map(t =>
-            cfFields.map(f => termMatch(f, escapeTerm(t))).reduce(_ || _))
+            cfFields.map(f => termMatch(col(f), escapeTerm(t))).reduce(_ || _))
           if (scoring) perTerm.foreach(tc => leaves += leaf(tc, 1))
           if (cfAnd) perTerm.reduce(_ && _) else perTerm.reduce(_ || _)
         case "bool" =>

@@ -687,7 +687,7 @@ object Search {
                             cfg: IndexConfig): DataFrame = {
     if (picked.isEmpty) return docs.where(lit(false)).withColumn("_score", lit(0))
     val matched = picked
-      .map(t => QueryCompiler.termMatch(field, QueryCompiler.escapeTerm(t)))
+      .map(t => QueryCompiler.termMatch(col(field), QueryCompiler.escapeTerm(t)))
       .map(c => when(coalesce(c, lit(false)), 1).otherwise(0))
       .reduce(_ + _)
     val msm = math.max(1, minimumShouldMatchPct * picked.size / 100)
@@ -1228,7 +1228,7 @@ object Search {
     import spark.implicits._
     val input = Seq(text).toDF("_txt")
       .select(explode(array_distinct(analyzerTokens(col("_txt")))).as("token"))
-    val store = spark.read.option("basePath", path).parquet(path)
+    val store = StoreFs.read(spark, Seq(path), Some(path))
     require(Set("suggestion", "freq").subsetOf(store.columns.toSet),
       s"$path is not a completion store (needs suggestion/freq columns, " +
         s"found: ${store.columns.mkString(", ")})")
@@ -1657,7 +1657,7 @@ object Search {
   def appendCompletionStore(newDocs: DataFrame, field: String, path: String): Unit = {
     val spark = newDocs.sparkSession
     StoreFs.recover(spark, path) // the layout read below precedes the swap
-    val store = spark.read.option("basePath", path).parquet(path)
+    val store = StoreFs.read(spark, Seq(path), Some(path))
     require(Set("suggestion", "freq").subsetOf(store.columns.toSet),
       s"$path is not a completion store (needs suggestion/freq columns, " +
         s"found: ${store.columns.mkString(", ")})")
@@ -1697,7 +1697,7 @@ object Search {
     require(size >= 1, s"completion suggester size must be >= 1, got $size")
     require(fuzziness >= 0 && fuzziness <= 2,
       s"completion fuzziness must be 0..2, got $fuzziness")
-    val store = spark.read.option("basePath", path).parquet(path)
+    val store = StoreFs.read(spark, Seq(path), Some(path))
     val filtered = contexts.foldLeft(store) { case (df, (c, vs)) =>
       require(vs.nonEmpty, s"completion context '$c' needs at least one value")
       df.where(col(c).isin(vs: _*))

@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The store-lifecycle kernel: the ONE place that knows the on-disk swap
   * protocol every materialized store shares (Krypton's base + deltas +
@@ -10,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   * replaces data goes through [[stagedRewrite]] (a whole directory) or
   * [[swapPartitions]] (named partitions of one), commits new segments
   * through [[commitDir]], and reads or writes its small marker files
-  * through [[readMarker]] / [[writeMarker]].
+  * through [[readMarker]] / [[writeMarker]]. Every store is opened
+  * through [[read]], which resolves the schema with no Spark job.
   *
   * The swap, for each replaced directory `d`:
   *   1. the replacement is written to a staging dir (`d.swap_tmp` for a
@@ -50,6 +53,57 @@ private[graft] object StoreFs {
       else !st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith(".")
     }
     any(root)
+  }
+
+  /** Open the parquet data at `paths` (the `spark.read.parquet` frame, with
+    * `basePath` as that reader option) without the schema-inference job
+    * Spark would launch: the schema comes from one footer read on the
+    * driver — the file Spark's inference itself would pick, the first data
+    * file in path order (`ParquetUtils.splitFiles`) — and is handed to the
+    * reader. Partition columns are still discovered from the directories
+    * (Spark's partitioned writes never repeat them inside the files), so
+    * the frame, its schema and its rows are those of the plain read.
+    * Nothing is kept across calls. */
+  def read(spark: SparkSession, paths: Seq[String],
+           basePath: Option[String] = None): DataFrame = {
+    val reader = basePath.fold(spark.read)(b => spark.read.option("basePath", b))
+    footerSchema(spark, paths)
+      .fold(reader.parquet(paths: _*))(s => reader.schema(s).parquet(paths: _*))
+  }
+
+  def read(spark: SparkSession, path: String): DataFrame = read(spark, Seq(path))
+
+  /** The schema Spark's inference would derive for `paths`, or None where
+    * this shortcut does not mirror the listing exactly and Spark infers as
+    * before: a glob or missing path, no data file, a parquet summary or
+    * hidden file among the leaves, or a subdirectory that is not a
+    * `name=value` partition. */
+  private def footerSchema(spark: SparkSession, paths: Seq[String]): Option[StructType] = {
+    if (paths.exists(_.exists("{}[]*?\\".contains(_)))) return None
+    val leaves = Seq.newBuilder[FileStatus]
+    var partitionDirsOnly = true
+    def walk(fs: FileSystem, dir: Path): Unit =
+      fs.listStatus(dir).filterNot(st => Bridge.hiddenPathName(st.getPath.getName))
+        .foreach { st =>
+          if (!st.isDirectory) leaves += st
+          else {
+            partitionDirsOnly &&= st.getPath.getName.contains('=')
+            walk(fs, st.getPath)
+          }
+        }
+    for (p <- paths) {
+      val path = new Path(p)
+      val fs = fsOf(spark, path)
+      if (!fs.exists(path)) return None
+      val st = fs.getFileStatus(path)
+      if (st.isDirectory) walk(fs, path) else leaves += st
+    }
+    val files = leaves.result()
+    val plain = partitionDirsOnly && !files.exists { f =>
+      val n = f.getPath.getName; n.startsWith("_") || n.startsWith(".")
+    }
+    if (!plain || files.isEmpty) None
+    else Some(Bridge.parquetFileSchema(spark, files.minBy(_.getPath.toString)))
   }
 
   /** A small marker file's trimmed UTF-8 content, None when absent. */

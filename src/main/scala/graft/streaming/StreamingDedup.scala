@@ -39,7 +39,7 @@ object StreamingDedup {
         .withColumn("sig", minhash_sig(col("sh"), numHashes))
         .persist()
       try {
-        val store = spark.read.parquet(storePath)
+        val store = graft.StoreFs.read(spark, storePath)
         onBatch(Dedup.incrementalPairs(store, fresh, numHashes, bands, threshold),
           epoch)
         if (appendToStore) fresh.write.mode("append").parquet(storePath)

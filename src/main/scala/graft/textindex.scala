@@ -304,7 +304,7 @@ object TextIndex {
     val delta = buildNorms(newDocs, idCol, fields)
       .select(col("doc_id"), col("field"), col("dl"))
     val keys = delta.select(col("doc_id")).distinct()
-    val present = spark.read.parquet(path)
+    val present = StoreFs.read(spark, path)
       .join(broadcast(keys), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("field"), col("dl"))
     if (present.isEmpty) return true
@@ -339,7 +339,7 @@ object TextIndex {
     val delta = buildPostings(newDocs, idCol, fields, nBuckets, segmentCol)
       .select(cols: _*)
     val keys = newDocs.select(col(idCol).as("doc_id")).distinct()
-    val present = spark.read.parquet(path)
+    val present = StoreFs.read(spark, path)
       .join(broadcast(keys), Seq("doc_id"), "left_semi")
       .select(cols: _*)
     if (present.isEmpty) return true
@@ -367,7 +367,7 @@ object TextIndex {
   private[graft] def requireInsertOnly(spark: SparkSession, path: String,
                                        deltaKeys: DataFrame,
                                        what: String): Unit =
-    requireInsertOnly(spark, path, deltaKeys, what, spark.read.parquet(path))
+    requireInsertOnly(spark, path, deltaKeys, what, StoreFs.read(spark, path))
 
   /** As above, probing a caller-supplied view of the store instead of the
     * full table — the bucketed keyed ledgers pass their partition-pruned
@@ -414,7 +414,7 @@ object TextIndex {
     StoreFs.recover(spark, path)
     if (!StoreFs.hasDataFiles(spark, path)) { delta.write.mode("append").parquet(path); return }
     StoreFs.stagedRewrite(spark, path) { tmp =>
-      val store = spark.read.parquet(path)
+      val store = StoreFs.read(spark, path)
       val keys = delta.select(col("doc_id")).distinct()
       store.join(broadcast(keys), Seq("doc_id"), "left_anti")
         .unionByName(delta)
@@ -422,10 +422,6 @@ object TextIndex {
     }
   }
 
-  /** Write the postings store: clustered by bucket (one file per partition
-    * dir, not tasks×buckets), sorted by `(token, field)` within files so
-    * parquet min/max stats make the pushed token filter skip most
-    * row groups. */
   /** Store self-description, persisted as `_graft_index.json` next to the
     * data by [[writePostings]]: a probe computed with the wrong bucket
     * count silently prunes the WRONG partitions (wrong results, not an
@@ -436,6 +432,10 @@ object TextIndex {
 
   private val MetaFile = "_graft_index.json"
 
+  /** Write the postings store: clustered by bucket (one file per partition
+    * dir, not tasks×buckets), sorted by `(token, field)` within files so
+    * parquet min/max stats make the pushed token filter skip most
+    * row groups. */
   def writePostings(postings: DataFrame, path: String,
                     segmentCol: Option[String] = None): Unit = {
     // segment (when present) leads the partition path so lifecycle ops stay
@@ -455,7 +455,7 @@ object TextIndex {
       if (!StoreFs.hasDataFiles(spark, path))
         IndexMeta(1, Seq.empty, postings.columns.contains("positions"), segmentCol)
       else {
-        val written = spark.read.option("basePath", path).parquet(path)
+        val written = StoreFs.read(spark, Seq(path), Some(path))
         val fields = written.select("field").distinct()
           .collect().map(_.getString(0)).sorted.toSeq
         IndexMeta(inferBuckets(written), fields,
@@ -496,7 +496,7 @@ object TextIndex {
   def openPostings(spark: SparkSession, path: String): (DataFrame, IndexMeta) = {
     val df =
       if (StoreFs.hasDataFiles(spark, path))
-        spark.read.option("basePath", path).parquet(path)
+        StoreFs.read(spark, Seq(path), Some(path))
       else spark.emptyDataFrame
     val meta = StoreFs.readMarker(spark, path, MetaFile) match {
       case Some(raw) =>
@@ -622,7 +622,7 @@ object TextIndex {
                  idCol: String = "doc_id"): Unit = {
     val keys = ids.select(col(idCol).as("doc_id")).distinct()
     StoreFs.stagedRewrite(spark, normsPath) { tmp =>
-      spark.read.parquet(normsPath)
+      StoreFs.read(spark, normsPath)
         .join(broadcast(keys), Seq("doc_id"), "left_anti")
         .write.parquet(tmp)
     }
@@ -636,7 +636,7 @@ object TextIndex {
     * (files before, files after). */
   def purgeDeadPostings(spark: SparkSession, postingsPath: String,
                         normsPath: String): (Int, Int) = {
-    val live = spark.read.parquet(normsPath).select(col("doc_id")).distinct()
+    val live = StoreFs.read(spark, normsPath).select(col("doc_id")).distinct()
     rewritePostings(spark, postingsPath)(
       _.join(live, Seq("doc_id"), "left_semi"))
   }
@@ -668,7 +668,7 @@ object TextIndex {
     }
     val parts = segCol.toSeq :+ "bucket"
     StoreFs.stagedRewrite(spark, path) { tmp =>
-      transform(spark.read.option("basePath", path).parquet(path))
+      transform(StoreFs.read(spark, Seq(path), Some(path)))
         .repartition(parts.map(col): _*)
         .sortWithinPartitions("token", "field")
         .write.mode("overwrite").partitionBy(parts: _*).parquet(tmp)

@@ -47,4 +47,34 @@ object Bridge {
       : org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[org.apache.spark.sql.Row]]
       .logicalPlan
+
+  /** Spark's hidden-path rule for file listing (names starting with `_`
+    * or `.`, except partition dirs and parquet summary files). */
+  def hiddenPathName(name: String): Boolean =
+    org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(name)
+
+  /** The data schema Spark's parquet schema inference takes from one
+    * file: the Spark row-metadata key of its footer, else the parquet
+    * schema converted under the session's conf — the per-file step of
+    * `ParquetFileFormat.mergeSchemasInParallel`, read here on the driver
+    * with no job. */
+  def parquetFileSchema(spark: org.apache.spark.sql.SparkSession,
+                        file: org.apache.hadoop.fs.FileStatus)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState
+    val sqlConf = state.conf
+    val conf = state.newHadoopConf()
+    val footer = new org.apache.parquet.hadoop.Footer(file.getPath,
+      ParquetFooterReader.readFooter(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(file, conf),
+        org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS))
+    // the converter mergeSchemasInParallel builds, from the same conf
+    ParquetFileFormat.readSchemaFromFooter(footer, new ParquetToSparkSchemaConverter(
+      assumeBinaryIsString = sqlConf.isParquetBinaryAsString,
+      assumeInt96IsTimestamp = sqlConf.isParquetINT96AsTimestamp,
+      inferTimestampNTZ = sqlConf.parquetInferTimestampNTZEnabled,
+      nanosAsLong = sqlConf.legacyParquetNanosAsLong,
+      respectUnknownTypeAnnotation = sqlConf.parquetReaderRespectUnknownTypeAnnotation))
+  }
 }

@@ -130,4 +130,22 @@ class BpeSpec extends AnyFunSuite {
     assert(novelIds.startsWith(lowId + ","), s"frozen id drifted: $o")
     assert(novelIds.split(",").count(_ == "-1") == 3 && n == 4, o.toString)
   }
+
+  test("encodeToIds and the tokenizer store give the same ids on a " +
+       "supplementary-plane corpus (code-point vocab order)") {
+    // U+1F600 sorts after U+FF04 by code point (the store's Spark order)
+    // but before it in UTF-16 units (JVM String order)
+    val dir = java.nio.file.Files.createTempDirectory("graft_bpe_cp").toString
+    val corpus = Seq(
+      (1L, "\uD83D\uDE00a \uD83D\uDE00a \uFF04b \uFF04b"),
+      (2L, "\uFF04\uD83D\uDE00 a\uD83D\uDE00 b\uFF04"),
+      (3L, "\uD83D\uDE03 \uFF04 ab")).toDF("id", "text")
+    Bpe.writeTokenizer(corpus, "text", 2, s"$dir/tok")
+    def ids(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getSeq[Int](1).mkString(","))).toSet
+    val direct = ids(Bpe.encodeToIds(corpus, "id", "text", Bpe.train(corpus, "text", 2)))
+    val served = ids(Bpe.encodeToIdsFromStore(corpus, "id", "text", s"$dir/tok"))
+    assert(served == direct, s"served=$served direct=$direct")
+    assert(!served.exists(_._2.split(",").contains("-1")), served.toString)
+  }
 }

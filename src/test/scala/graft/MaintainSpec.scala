@@ -517,6 +517,113 @@ class MaintainSpec extends AnyFunSuite {
     } yield problem
     assert(failures.isEmpty, failures.mkString("\n"))
   }
+
+  // ---- StoreFs.read: the job-free store open ----
+
+  /** Every directory under `base` that holds data and is not a partition
+    * or hidden dir is opened both ways, plain and with itself as
+    * basePath: StoreFs.read must give Spark's own schema and rows, or
+    * fail where the plain read fails. */
+  private def sameAsSparkRead(base: String, state: String): Seq[String] = {
+    def dirs(d: java.io.File): Seq[java.io.File] =
+      d +: d.listFiles.toSeq.sortBy(_.getName).filter(f => f.isDirectory &&
+        !f.getName.startsWith(".") && !f.getName.startsWith("_") &&
+        !f.getName.contains("=")).flatMap(dirs)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for {
+      d <- dirs(new java.io.File(base)) if StoreFs.hasDataFiles(spark, d.getPath)
+      basePath <- Seq(None, Some(d.getPath))
+      problem <- {
+        val what = s"$state ${d.getPath.stripPrefix(base)} basePath=${basePath.isDefined}"
+        val plainReader = basePath.fold(spark.read)(b => spark.read.option("basePath", b))
+        val want = scala.util.Try(plainReader.parquet(d.getPath))
+        val got = scala.util.Try(StoreFs.read(spark, Seq(d.getPath), basePath))
+        (want, got) match {
+          case (scala.util.Success(w), scala.util.Success(g)) =>
+            (if (w.schema != g.schema) Seq(s"$what: schema ${g.schema} != ${w.schema}") else Nil) ++
+              (if (rows(w) != rows(g)) Seq(s"$what: rows differ") else Nil)
+          case (scala.util.Failure(_), scala.util.Failure(_)) => Nil
+          case (w, g) => Seq(s"$what: plain read $w, StoreFs.read $g")
+        }
+      }
+    } yield problem
+  }
+
+  test("StoreFs.read opens every catalog layout with Spark's own schema and " +
+       "rows — fresh, appended, swept, crashed mid-swap and compacted") {
+    import graft.pipeline.{Bpe, Dedup, Ivf, TextStats}
+    val b = java.nio.file.Files.createTempDirectory("graft_storefs_read").toString
+    val docs = Seq(
+      (1L, "en", "spark runs the fast query engine", "2024-01-15 10:00:00"),
+      (2L, "en", "spark query planner details", "2024-02-15 10:00:00"),
+      (3L, "de", "schnelle abfragen mit spark", "2024-02-16 10:00:00"))
+      .toDF("doc_id", "lang", "text", "ts")
+      .withColumn("ts", col("ts").cast("timestamp"))
+    val more = Seq((4L, "fr", "une requete spark rapide", "2024-02-20 10:00:00"))
+      .toDF("doc_id", "lang", "text", "ts")
+      .withColumn("ts", col("ts").cast("timestamp"))
+    val seg = date_format(col("ts"), "yyyy-MM")
+    val vecs = (0 until 12).map(i => (i.toLong,
+      if (i % 2 == 0) Array(1.0, 0.01 * i) else Array(0.01 * i, 1.0))).toDF("vec_id", "embedding")
+    val failures = Seq.newBuilder[String]
+
+    Indexer.writeSegmented(docs.withColumn("segment", seg), s"$b/docs")
+    TextIndex.writePostings(
+      TextIndex.buildPostings(docs, "doc_id", Seq("text"), 8), s"$b/postings")
+    TextIndex.buildNorms(docs, "doc_id", Seq("text")).write.parquet(s"$b/norms")
+    Search.writeSuggestStore(docs, "text", s"$b/suggest")
+    Search.writeCompletionStore(docs, "text", s"$b/completion", contextCols = Seq("lang"))
+    Dedup.writeSketchStore(docs, s"$b/sketches", "text", "doc_id")
+    Ivf.writeIndex(vecs, c = 2, s"$b/ivf", iters = 2)
+    TextStats.writeBigramLm(docs, "text", s"$b/bigram_lm")
+    TextStats.writeNgramCountsKeyed(docs, "text", "doc_id", 2, s"$b/ngrams")
+    Bpe.writeTokenizer(docs, "text", 4, s"$b/tokenizer")
+    failures ++= sameAsSparkRead(b, "fresh")
+
+    more.withColumn("segment", seg).write.mode("append").partitionBy("segment")
+      .parquet(s"$b/docs")
+    TextIndex.appendPostings(more, "doc_id", Seq("text"), s"$b/postings", nBuckets = 8)
+    TextIndex.appendNorms(more, "doc_id", Seq("text"), s"$b/norms")
+    Search.appendSuggestStore(more, "text", s"$b/suggest")
+    Search.appendCompletionStore(more, "text", s"$b/completion")
+    Ivf.appendToIndex(spark, s"$b/ivf",
+      Seq((100L, Array(0.5, 0.5))).toDF("vec_id", "embedding"))
+    TextStats.appendBigramLm(more, "text", s"$b/bigram_lm")
+    TextStats.appendNgramCountsKeyed(more, "text", "doc_id", 2, s"$b/ngrams")
+    failures ++= sameAsSparkRead(b, "appended")
+
+    val gone = Seq(2L).toDF("id")
+    Dedup.deleteFromSketchStore(spark, s"$b/sketches", gone)
+    Ivf.deleteFromIndex(spark, s"$b/ivf", Seq(2L, 5L).toDF("vec_id"))
+    TextStats.subtractNgramCounts(spark, s"$b/ngrams", gone)
+    TextIndex.deleteDocs(spark, s"$b/norms", gone, "id")
+    TextIndex.upsertNorms(more, "doc_id", Seq("text"), s"$b/norms")
+    failures ++= sameAsSparkRead(b, "swept")
+
+    assert(Maintain.compactSegments(spark, s"$b/docs", "segment").nonEmpty)
+    TextIndex.compactPostings(spark, s"$b/postings")
+    Maintain.compactAnnIndex(spark, s"$b/ivf")
+    Maintain.compactCountStore(spark, s"$b/bigram_lm")
+    failures ++= sameAsSparkRead(b, "compacted")
+
+    // every swap caller's store left in each crash state of its swap
+    for (row <- crashRows; step <- Seq("staged", "aside", "renamed")) {
+      val c = java.nio.file.Files.createTempDirectory(s"graft_storefs_crash").toString
+      row.setup(c)
+      val d = row.swap(c)
+      assert(d.staged.mkdirs() || d.staged.isDirectory)
+      java.nio.file.Files.writeString(
+        new java.io.File(d.staged, "part-00000-junk.parquet").toPath, "not parquet")
+      step match {
+        case "staged" =>
+        case "aside" => assert(d.live.renameTo(d.aside))
+        case "renamed" => org.apache.commons.io.FileUtils.copyDirectory(d.live, d.aside)
+      }
+      failures ++= sameAsSparkRead(c, s"crashed/${row.name}/$step")
+    }
+    val all = failures.result()
+    assert(all.isEmpty, all.mkString("\n"))
+  }
 }
 
 object MaintainSpec {

@@ -136,7 +136,7 @@ class PlanSpec extends AnyFunSuite {
     // predicate evaluated AT the scan (DataFilters), top-k via
     // TakeOrderedAndProject, and no join anywhere
     assert(plan.split("FileScan").length == 2, plan.take(800))
-    assert(plan.contains("DataFilters: [(RLIKE(lower(text"), plan.take(1500))
+    assert(plan.contains("DataFilters: [(word_match(text"), plan.take(1500))
     assert(plan.contains("TakeOrderedAndProject"), plan.take(800))
     assert(!plan.contains("Join"), plan.take(800))
   }

@@ -101,7 +101,7 @@ class PropertySpec extends AnyFunSuite {
     val df = toks.zipWithIndex.map { case (t, i) => (i.toString, s"pre $t post") }
       .toDF("doc_id", "text")
     toks.zipWithIndex.foreach { case (t, i) =>
-      val pred = QueryCompiler.termMatch("text", QueryCompiler.escapeTerm(t))
+      val pred = QueryCompiler.termMatch(col("text"), QueryCompiler.escapeTerm(t))
       val hits = df.where(pred).select("doc_id").collect().map(_.getString(0))
       assert(hits.contains(i.toString),
         s"escaped term '$t' failed to match its own document")
@@ -122,7 +122,7 @@ class PropertySpec extends AnyFunSuite {
       pfx <- Gen.choose(0, 3)
     } yield (term, words, dist, pfx)
     val cases = Iterator.continually(caseGen.sample).flatten.take(60).toSeq
-    cases.zipWithIndex.foreach { case ((term, words, dist, pfx), i) =>
+    inBothModes { _ => cases.zipWithIndex.foreach { case ((term, words, dist, pfx), i) =>
       val text = words.mkString(" ")
       val hl = Seq((i.toString, text)).toDF("doc_id", "text")
         .select(fuzzy_token_highlight(col("text"), Seq((term, dist, pfx)), "<", ">")
@@ -136,18 +136,102 @@ class PropertySpec extends AnyFunSuite {
         assert(isMarked == accepts,
           s"term='$term' dist=$dist pfx=$pfx word='$w': marked=$isMarked accepts=$accepts in '$hl'")
       }
-    }
+    } }
   }
 
   test("fuzzy prefix longer than the term pins it and allows trailing inserts") {
     import graft.functions.TextSketchFunctions.fuzzy_token_match
     def m(text: String) = Seq((1L, text)).toDF("id", "t")
       .where(fuzzy_token_match(col("t"), "spark", 2, prefixLen = 10)).count() == 1
-    assert(m("spark"))   // the whole term is the pinned prefix
-    assert(m("sparked")) // ≤2 trailing insertions
-    assert(!m("spork"))  // an edit inside the pinned region
-    assert(!m("sparkles3")) // 4 insertions > budget
+    inBothModes { _ =>
+      assert(m("spark"))   // the whole term is the pinned prefix
+      assert(m("sparked")) // ≤2 trailing insertions
+      assert(!m("spork"))  // an edit inside the pinned region
+      assert(!m("sparkles3")) // 4 insertions > budget
+    }
   }
+
+  test("fuzzy and word-match scans stay inside one whole-stage codegen stage") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_wscg").toString
+    Seq((1L, "spork runs", "fr"), (2L, "spark", "en")).toDF("doc_id", "text", "lang")
+      .write.mode("overwrite").parquet(dir)
+    val hits = Search.search(spark.read.parquet(dir), "text:spork~1 AND lang:fr", IndexConfig())
+    val plan = hits.queryExecution.executedPlan
+    val filters = plan.collect { case f: org.apache.spark.sql.execution.FilterExec => f }
+    assert(filters.nonEmpty, plan.toString)
+    val staged = plan.collect {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w.child.collect {
+        case f: org.apache.spark.sql.execution.FilterExec => f }
+    }.flatten
+    assert(staged.size == filters.size, s"a filter fell out of whole-stage codegen:\n$plan")
+    assert(filters.exists(_.condition.exists(_.isInstanceOf[graft.functions.FuzzyTokenMatch])))
+    assert(filters.exists(_.condition.exists(_.isInstanceOf[graft.functions.WordMatch])))
+    assert(hits.select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(1L))
+  }
+
+  test("property: word_match ≡ lower(x) RLIKE termPattern(t), interpreted " +
+       "and generated") {
+    // pieces that exercise both paths of the kernel: ASCII words in any
+    // case, word-char edges (_ digits), punctuation, Latin-1, CJK,
+    // combining marks, Turkish dotted/dotless i, empty values and nulls
+    val pieces = Seq("spark", "Spark", "SPARK", "sparks", "x", "X1", "1x", "_",
+      "a_b", "42", "-", "--", ".", ",", "'", "*", "?", "\\", "café", "CAFÉ",
+      "Über", "ß", "数据", "中文spark", "e\u0301", "spark\u0301", "\u0301x",
+      "İ", "ı", "I", "i", "İstanbul", "ISTANBUL", "ıi", "\t", " ")
+    val valueGen = Gen.frequency(
+      (1, Gen.const(null: String)), (1, Gen.const("")),
+      (12, Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, for {
+        p <- Gen.oneOf(pieces)
+        sep <- Gen.oneOf(" ", "", "-", "_", " ", "\n")
+      } yield p + sep).map(_.mkString))))
+    val values = Iterator.continually(valueGen.sample).flatten.take(400).toSeq
+    val terms = Seq("spark", "SPARK", "x", "x1", "1x", "_", "a_b", "42", "i", "I",
+      "-x", "x-", "-spark", "spark-", "-", "spark\\*", "\\*", "a\\-b",
+      "spar*", "SPAR*", "x*", "_*", "-*", "caf*", "spark\\**", "\\\\*",
+      "café", "CAFÉ", "é", "über", "ß", "数据", "数*", "İ", "ı", "i\u0307", "İstanbul",
+      "istanbul", "ıi", "e\u0301", "\u0301")
+    val native = terms.filter(t => org.apache.spark.sql.graft.Bridge.catalystExpression(
+      QueryCompiler.termMatch(col("v"), t)).isInstanceOf[graft.functions.WordMatch])
+    assert(native.size == terms.size, terms.diff(native))
+    val dir = java.nio.file.Files.createTempDirectory("graft_word_match").toString
+    values.zipWithIndex.map { case (v, i) => (i, v) }.toDF("id", "v")
+      .repartition(3).write.mode("overwrite").parquet(dir)
+    val cols = terms.zipWithIndex.flatMap { case (t, i) =>
+      Seq(QueryCompiler.termMatch(col("v"), t).as(s"k$i"),
+        lower(col("v")).rlike(QueryCompiler.termPattern(t)).as(s"r$i"))
+    }
+    inBothModes { mode =>
+      val out = spark.read.parquet(dir).select(col("id") +: col("v") +: cols: _*).collect()
+      assert(out.length == values.size)
+      var hits = 0
+      for (r <- out; (t, i) <- terms.zipWithIndex) {
+        val (k, rx) = (r.getAs[Any](s"k$i"), r.getAs[Any](s"r$i"))
+        assert(k == rx, s"$mode: term '$t' on '${r.getString(1)}': word_match=$k, regex=$rx")
+        if (rx == true) hits += 1
+      }
+      assert(hits > 200, s"$mode: too few matches ($hits) to mean anything")
+      // the same predicate as a pushed scan filter
+      val where = spark.read.parquet(dir).where(QueryCompiler.termMatch(col("v"), "spark"))
+        .select("id").collect().map(_.getInt(0)).sorted.toSeq
+      val whereRx = spark.read.parquet(dir)
+        .where(lower(col("v")).rlike(QueryCompiler.termPattern("spark")))
+        .select("id").collect().map(_.getInt(0)).sorted.toSeq
+      assert(where == whereRx && where.nonEmpty, mode)
+    }
+  }
+
+  /** Run `body` with interpreted expressions (no generated code at all),
+    * then with generated code only, inside whole-stage codegen. */
+  private def inBothModes(body: String => Unit): Unit =
+    Seq("NO_CODEGEN" -> "false", "CODEGEN_ONLY" -> "true").foreach { case (mode, wholeStage) =>
+      spark.conf.set("spark.sql.codegen.factoryMode", mode)
+      spark.conf.set("spark.sql.codegen.wholeStage", wholeStage)
+      try body(mode)
+      finally {
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+      }
+    }
 
   test("property: wildcard-free grouped query ≡ explicit OR of field terms") {
     val wordGen = Gen.listOfN(5, Gen.alphaLowerChar).map(_.mkString)

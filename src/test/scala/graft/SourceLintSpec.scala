@@ -4,9 +4,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Source hygiene gate over `src/main/scala`: no control bytes other than
   * newline, tab and carriage return (a raw NUL makes `grep` treat the file
-  * as binary), and the store swap protocol and marker format stay in ONE
+  * as binary); the store swap protocol and marker format stay in ONE
   * module — renames and raw file opens/creates appear only in the
-  * store-lifecycle kernel ([[StoreFs]]). */
+  * store-lifecycle kernel ([[StoreFs]]); stores open through
+  * [[StoreFs.read]]; and "term matches" has one definition,
+  * [[QueryCompiler.termMatch]]. */
 class SourceLintSpec extends AnyFunSuite {
 
   private val Kernel = "storefs.scala"
@@ -38,6 +40,36 @@ class SourceLintSpec extends AnyFunSuite {
         .map(_.toString).zipWithIndex.toSeq
       token <- banned if line.contains(token)
     } yield s"${f.getPath}:${n + 1}: $token"
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  /** `token` occurrences in the whitespace-collapsed text of every source
+    * (so a call split over lines still counts), as (file, offset, text). */
+  private def calls(token: scala.util.matching.Regex): Seq[(java.io.File, Int, String)] =
+    for {
+      f <- sources
+      text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        .replaceAll("\\s+", " ")
+      m <- token.findAllMatchIn(text).toSeq
+    } yield (f, m.start, text)
+
+  test("parquet stores open through StoreFs.read, not a schema-inferring read") {
+    // besides the kernel, only the fixture loaders; a read given its schema
+    // (scroll's `.read.schema(`) infers nothing and is not matched
+    val allowed = Set(Kernel, "SparkEntry.scala", "Bench.scala", "ScaleUp.scala",
+      "FixtureManifest.scala")
+    val bad = calls("""\.read ?\.(parquet\(|option\( ?"basePath")""".r).collect {
+      case (f, at, text) if !allowed(f.getName) => s"${f.getPath}: ${text.slice(at, at + 60)}"
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("term regexes reach .rlike( only through QueryCompiler.termMatch") {
+    // termMatch applies a term's regex itself (from the same parse as its
+    // native kernel); highlighting uses the pattern via regexp_replace
+    val bad = calls("""\.rlike\( ?(QueryCompiler\.)?termPattern\(""".r).map {
+      case (f, at, text) => s"${f.getPath}: ${text.slice(at, at + 60)}"
+    }
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 }
