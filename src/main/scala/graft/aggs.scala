@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.WordRuns
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -1092,8 +1093,7 @@ object Aggs {
     val size = Option(body.get("size")).map(_.asInt).getOrElse(10)
     def toks(df: DataFrame) = graft.pipeline.Spread
       .scanFloor(df.where(col(f).isNotNull), col(f))
-      .select(explode(array_distinct(
-        filter(split(lower(col(f)), "[^a-z0-9_]+"), t => length(t) > 0))).as("key"))
+      .select(explode(array_distinct(WordRuns.column(col(f)))).as("key"))
     val fgCounts = toks(fg).groupBy("key").agg(count(lit(1)).as("doc_count"))
     val bgCounts = toks(bg).groupBy("key").agg(count(lit(1)).as("bg_count"))
     val fgTotal = fg.where(col(f).isNotNull).agg(count(lit(1)).as("_fg_total"))
@@ -1164,9 +1164,7 @@ object Aggs {
                                size: Int = 10,
                                heuristic: String = "jlh"): DataFrame = {
     val fgCounts = fg.where(col(field).isNotNull)
-      .select(explode(array_distinct(
-        filter(split(lower(col(field)), "[^a-z0-9_]+"),
-          t => length(t) > 0))).as("key"))
+      .select(explode(array_distinct(WordRuns.column(col(field)))).as("key"))
       .groupBy("key").agg(count(lit(1)).as("doc_count"))
     val bgCounts = postings.where(col("field") === field)
       .groupBy(col("token").as("key"))

@@ -460,8 +460,7 @@ object Maintain {
   /** ES `_analyze` analog: how the search analyzer tokenizes a string —
     * the same lowercase/non-alphanumeric-split every match-family
     * operator and the inverted index use. */
-  def analyze(text: String): Seq[String] =
-    text.toLowerCase.split("[^a-z0-9_]+").filter(_.nonEmpty).toSeq
+  def analyze(text: String): Seq[String] = graft.functions.WordRuns.tokens(text)
 
   /** ES `_analyze` with an explicit tokenizer + token-filter chain — the
     * analyzer-preview endpoint for CUSTOM analyzers. Declared subset:

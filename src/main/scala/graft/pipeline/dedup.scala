@@ -138,7 +138,7 @@ object Dedup {
   def deleteFromSketchStore(spark: org.apache.spark.sql.SparkSession,
                             path: String, ids: DataFrame,
                             idCol: String = "id"): Unit = {
-    val keys = ids.select(col(idCol).as("id")).distinct()
+    val keys = ids.select(col(idCol).as("id"))
     graft.StoreFs.stagedRewrite(spark, path) { tmp =>
       graft.StoreFs.read(spark, path)
         .join(broadcast(keys), Seq("id"), "left_anti")

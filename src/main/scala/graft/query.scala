@@ -214,7 +214,7 @@ object QueryCompiler {
     def expandLeaf(op: String, field: String, value: String): JsonNode = {
       val tokens =
         if (op == "term") Seq(value)
-        else value.toLowerCase.split("[^a-z0-9_]+").filter(_.nonEmpty).toSeq
+        else graft.functions.WordRuns.tokens(value)
       def tokenNode(tok: String): JsonNode = synonyms.get(tok) match {
         case Some(syns) =>
           val bool = mapper.createObjectNode()

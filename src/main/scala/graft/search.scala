@@ -1,6 +1,7 @@
 package graft
 
 import com.fasterxml.jackson.databind.JsonNode
+import graft.functions.WordRuns
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -610,7 +611,7 @@ object Search {
     * opaquely, ElasticIndex.java:663-665).
     *
     * Term selection (declared, drift-proof): tokenize the like-source with
-    * the index analyzer (`[^a-z0-9_]+` split on lowercase — the same token
+    * the index analyzer ([[graft.functions.WordRuns]], the same token
     * model as [[TextIndex]]); keep terms with like-tf >= `minTermFreq` and
     * corpus-df >= `minDocFreq`; rank by `tf / (df + 1)` descending, term
     * ascending, keep `maxQueryTerms`. The ranking is a monotone TF-IDF
@@ -646,15 +647,13 @@ object Search {
     require(minimumShouldMatchPct >= 0 && minimumShouldMatchPct <= 100,
       s"minimum_should_match must be a percentage in [0, 100]")
     val spark = docs.sparkSession
-    def toks(c: Column) =
-      filter(split(lower(c), "[^a-z0-9_]+"), t => length(t) > 0)
     val likeToks = likeText match {
       case Some(t) =>
         import spark.implicits._
-        Seq(t).toDF(field).select(explode(toks(col(field))).as("_t"))
+        Seq(t).toDF(field).select(explode(WordRuns.column(col(field))).as("_t"))
       case None =>
         docs.where(col(idCol).isin(likeIds: _*))
-          .select(explode(toks(col(field))).as("_t"))
+          .select(explode(WordRuns.column(col(field))).as("_t"))
     }
     val tf = likeToks.groupBy("_t").agg(count(lit(1)).as("_tf"))
       .where(col("_tf") >= minTermFreq)
@@ -663,7 +662,7 @@ object Search {
     // (guide §2.5, r15) so a single-row-group corpus doesn't pay it on
     // one task (the store-served twin skips this pass entirely)
     val corpusToks = graft.pipeline.Spread.scanFloor(docs, col(idCol))
-      .select(explode(array_distinct(toks(col(field)))).as("_t"))
+      .select(explode(array_distinct(WordRuns.column(col(field)))).as("_t"))
     val picked = corpusToks.join(broadcast(tf), Seq("_t"))
       .groupBy("_t").agg(count(lit(1)).as("_df"), max(col("_tf")).as("_tf"))
       .where(col("_df") >= minDocFreq)
@@ -739,15 +738,13 @@ object Search {
     require(minimumShouldMatchPct >= 0 && minimumShouldMatchPct <= 100,
       s"minimum_should_match must be a percentage in [0, 100]")
     val spark = docs.sparkSession
-    def toks(c: Column) =
-      filter(split(lower(c), "[^a-z0-9_]+"), t => length(t) > 0)
     val likeToks = likeText match {
       case Some(t) =>
         import spark.implicits._
-        Seq(t).toDF(field).select(explode(toks(col(field))).as("_t"))
+        Seq(t).toDF(field).select(explode(WordRuns.column(col(field))).as("_t"))
       case None =>
         docs.where(col(idCol).isin(likeIds: _*))
-          .select(explode(toks(col(field))).as("_t"))
+          .select(explode(WordRuns.column(col(field))).as("_t"))
     }
     // bounded: <= 10 * maxQueryTerms (term, like-tf) pairs
     val cand = likeToks.groupBy("_t").agg(count(lit(1)).as("_tf"))
@@ -1173,9 +1170,6 @@ object Search {
       .select(col("query_id"), col(idCol))
   }
 
-  private def analyzerTokens(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9_]+"), t => length(t) > 0)
-
   /** ES `suggest` term suggester: spelling corrections for each analyzed
     * input token, drawn from the corpus' term dictionary within
     * `max_edits` Levenshtein distance, ranked distance-then-frequency
@@ -1194,9 +1188,9 @@ object Search {
     val spark = docs.sparkSession
     import spark.implicits._
     val input = Seq(text).toDF("_txt")
-      .select(explode(array_distinct(analyzerTokens(col("_txt")))).as("token"))
+      .select(explode(array_distinct(WordRuns.column(col("_txt")))).as("token"))
     val dict = graft.pipeline.Spread.scanFloor(docs, col(field))
-      .select(explode(array_distinct(analyzerTokens(col(field)))).as("cand"))
+      .select(explode(array_distinct(WordRuns.column(col(field)))).as("cand"))
       .groupBy("cand").agg(count(lit(1)).as("freq"))
     val cands = dict.crossJoin(broadcast(input))
       .where(col("cand") =!= col("token"))
@@ -1227,7 +1221,7 @@ object Search {
       s"term suggester max_edits must be 1 or 2, got $maxEdits")
     import spark.implicits._
     val input = Seq(text).toDF("_txt")
-      .select(explode(array_distinct(analyzerTokens(col("_txt")))).as("token"))
+      .select(explode(array_distinct(WordRuns.column(col("_txt")))).as("token"))
     val store = StoreFs.read(spark, Seq(path), Some(path))
     require(Set("suggestion", "freq").subsetOf(store.columns.toSet),
       s"$path is not a completion store (needs suggestion/freq columns, " +
@@ -1356,7 +1350,7 @@ object Search {
     * evaluates once per row, not once per gram family. */
   private def lmGramCounts(docs: DataFrame, field: String): DataFrame =
     graft.pipeline.Spread.scanFloor(docs, col(field))
-      .select(analyzerTokens(col(field)).as("_ts"))
+      .select(WordRuns.column(col(field)).as("_ts"))
       .select(explode(concat(col("_ts"),
         graft.functions.TextSketchFunctions.word_grams(col("_ts"), 2))).as("g"))
       .groupBy("g").agg(count(lit(1)).as("freq"))
@@ -1467,7 +1461,7 @@ object Search {
     val unis = unis0
     val spark = unis.sparkSession
     import spark.implicits._
-    val toks = text.toLowerCase.split("[^a-z0-9_]+").filter(_.nonEmpty).toSeq
+    val toks = WordRuns.tokens(text)
     require(toks.size >= 2 && toks.size <= 6,
       s"phrase suggester supports 2..6 analyzed tokens (declared subset), " +
         s"got ${toks.size}")
@@ -1555,7 +1549,7 @@ object Search {
     require(prefix.nonEmpty, "completion suggester needs a non-empty prefix")
     require(size >= 1, s"completion suggester size must be >= 1, got $size")
     graft.pipeline.Spread.scanFloor(docs, col(field))
-      .select(explode(array_distinct(analyzerTokens(col(field)))).as("suggestion"))
+      .select(explode(array_distinct(WordRuns.column(col(field)))).as("suggestion"))
       .where(col("suggestion").startsWith(prefix.toLowerCase))
       .groupBy("suggestion").agg(count(lit(1)).as("freq"))
       .orderBy(desc("freq"), asc("suggestion"))
@@ -1597,7 +1591,7 @@ object Search {
       df.where(col(c).isin(vs: _*))
     }
     val dict = graft.pipeline.Spread.scanFloor(filtered, col(field))
-      .select(explode(array_distinct(analyzerTokens(col(field)))).as("suggestion"))
+      .select(explode(array_distinct(WordRuns.column(col(field)))).as("suggestion"))
       .groupBy("suggestion").agg(count(lit(1)).as("freq"))
     completionOver(dict, p, size, fuzziness, fuzzyPrefixLength)
   }
@@ -1634,7 +1628,7 @@ object Search {
                            contextCols: Seq[String] = Seq.empty): Unit = {
     val dict = graft.pipeline.Spread.scanFloor(docs, col(field))
       .select(contextCols.map(col) :+
-        explode(array_distinct(analyzerTokens(col(field)))).as("suggestion"): _*)
+        explode(array_distinct(WordRuns.column(col(field)))).as("suggestion"): _*)
       .groupBy((contextCols :+ "suggestion").map(col): _*)
       .agg(count(lit(1)).as("freq"))
     val clustered =
@@ -1665,7 +1659,7 @@ object Search {
       store.columns.filterNot(Set("suggestion", "freq").contains).toSeq
     val delta0 = newDocs
       .select(contextCols.map(col) :+
-        explode(array_distinct(analyzerTokens(col(field)))).as("suggestion"): _*)
+        explode(array_distinct(WordRuns.column(col(field)))).as("suggestion"): _*)
       .groupBy((contextCols :+ "suggestion").map(col): _*)
       .agg(count(lit(1)).as("freq"))
     val delta = contextCols.foldLeft(delta0)((df, c) =>
@@ -1959,7 +1953,7 @@ object Search {
   def termVectors(docs: DataFrame, pkCol: String, field: String,
                   ids: Seq[String]): DataFrame = {
     require(ids.nonEmpty, "_termvectors needs at least one doc id")
-    val toks = analyzerTokens(col(field))
+    val toks = WordRuns.column(col(field))
     val selected = docs.where(col(pkCol).cast("string").isin(ids: _*))
       .select(col(pkCol).cast("string").as("_tv_id"), toks.as("_tv_tokens"))
     val perDoc = selected

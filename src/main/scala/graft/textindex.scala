@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.WordRuns
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -55,10 +56,10 @@ object TextIndex {
   import LuceneLite._
 
   /** Maximal-word-run tokenizer, the `\b`-boundary view of the text (see
-    * class doc). Split on non-word runs; `split` emits empty edge strings,
-    * filtered after the explode. */
+    * class doc): the native [[graft.functions.WordRuns]] analyzer, which
+    * emits no empty tokens. */
   private def tokensOf(c: org.apache.spark.sql.Column) =
-    split(lower(c.cast("string")), "[^a-z0-9_]+")
+    WordRuns.column(c.cast("string"))
 
   /** One probe the postings store can answer with a pushed-down filter. */
   private[graft] sealed trait Probe
@@ -118,7 +119,6 @@ object TextIndex {
             segNames.map(col) :+ explode(col("_ft.toks")).as("token")): _*)
       }
     tokenized
-      .where(col("token") =!= "")
       .groupBy((Seq("token", "field", "doc_id") ++ segNames).map(col): _*)
       .agg(count(lit(1)).cast("int").as("tf"))
       .withColumn("bucket", pmod(xxhash64(col("token")), lit(nBuckets)).cast("int"))
@@ -162,12 +162,11 @@ object TextIndex {
     val tokenized =
       if (fields.size == 1)
         spreadDocs.select((Seq(posexplode(
-          array_remove(tokensOf(col(fields.head)), "")).as(Seq("pos", "token")),
+          tokensOf(col(fields.head))).as(Seq("pos", "token")),
           lit(fields.head).as("field"), col(idCol).as("doc_id")) ++ segSel): _*)
       else {
         val ftArr = array(fields.map(f =>
-          struct(lit(f).as("field"),
-            array_remove(tokensOf(col(f)), "").as("toks"))): _*)
+          struct(lit(f).as("field"), tokensOf(col(f)).as("toks"))): _*)
         spreadDocs
           .select((Seq(col(idCol).as("doc_id")) ++ segSel :+
             explode(ftArr).as("_ft")): _*)
@@ -193,7 +192,7 @@ object TextIndex {
     * recall. */
   def phraseCandidates(postings: DataFrame, field: String, phrase: String,
                        nBuckets: Int = 64): DataFrame = {
-    val toks = "[a-z0-9_]+".r.findAllIn(phrase.toLowerCase).toSeq
+    val toks = WordRuns.tokens(phrase)
     require(toks.nonEmpty, s"phrase has no word runs: '$phrase'")
     val rows = postingsFor(postings,
       toks.distinct.map(EqProbe(field, _)).toSet[Probe], nBuckets)
@@ -223,7 +222,7 @@ object TextIndex {
     if (!positional) return None
     def literalPhrase(v: String): Boolean =
       !v.exists(c => c == '*' || c == '?' || c == '\\') &&
-        "[a-z0-9_]+".r.findAllIn(v.toLowerCase).size >= 2
+        WordRuns.tokens(v).size >= 2
     n match {
       case t: Term if fields.contains(t.field) && literalPhrase(t.value) =>
         Some(phraseCandidates(postings, t.field, t.value, nBuckets))
@@ -250,7 +249,7 @@ object TextIndex {
     val spreadDocs = graft.pipeline.Spread.scanFloor(docs, col(idCol))
     val perField = fields.map { f =>
       spreadDocs.select(col(idCol).as("doc_id"), lit(f).as("field"),
-        size(array_remove(tokensOf(coalesce(col(f).cast("string"), lit(""))), ""))
+        size(tokensOf(coalesce(col(f).cast("string"), lit(""))))
           .as("dl"))
     }
     perField.reduce(_.union(_))
@@ -303,7 +302,7 @@ object TextIndex {
     if (!StoreFs.hasDataFiles(spark, path)) return true
     val delta = buildNorms(newDocs, idCol, fields)
       .select(col("doc_id"), col("field"), col("dl"))
-    val keys = delta.select(col("doc_id")).distinct()
+    val keys = delta.select(col("doc_id"))
     val present = StoreFs.read(spark, path)
       .join(broadcast(keys), Seq("doc_id"), "left_semi")
       .select(col("doc_id"), col("field"), col("dl"))
@@ -338,7 +337,7 @@ object TextIndex {
     val cols = Seq("doc_id", "field", "token", "tf").map(col)
     val delta = buildPostings(newDocs, idCol, fields, nBuckets, segmentCol)
       .select(cols: _*)
-    val keys = newDocs.select(col(idCol).as("doc_id")).distinct()
+    val keys = newDocs.select(col(idCol).as("doc_id"))
     val present = StoreFs.read(spark, path)
       .join(broadcast(keys), Seq("doc_id"), "left_semi")
       .select(cols: _*)
@@ -415,7 +414,7 @@ object TextIndex {
     if (!StoreFs.hasDataFiles(spark, path)) { delta.write.mode("append").parquet(path); return }
     StoreFs.stagedRewrite(spark, path) { tmp =>
       val store = StoreFs.read(spark, path)
-      val keys = delta.select(col("doc_id")).distinct()
+      val keys = delta.select(col("doc_id"))
       store.join(broadcast(keys), Seq("doc_id"), "left_anti")
         .unionByName(delta)
         .write.parquet(tmp)
@@ -620,7 +619,7 @@ object TextIndex {
     * paths are exact from the moment this returns. */
   def deleteDocs(spark: SparkSession, normsPath: String, ids: DataFrame,
                  idCol: String = "doc_id"): Unit = {
-    val keys = ids.select(col(idCol).as("doc_id")).distinct()
+    val keys = ids.select(col(idCol).as("doc_id"))
     StoreFs.stagedRewrite(spark, normsPath) { tmp =>
       StoreFs.read(spark, normsPath)
         .join(broadcast(keys), Seq("doc_id"), "left_anti")
@@ -726,7 +725,7 @@ object TextIndex {
     * run of every match (same boundary argument as [[termProbe]], minus the
     * wildcard case). */
   private def literalRunProbe(field: String, text: String): Option[Probe] =
-    "[a-z0-9_]+".r.findAllIn(text.toLowerCase).toSeq
+    WordRuns.tokens(text)
       .sortBy(r => (-r.length, r)).headOption.map(EqProbe(field, _))
 
   /** Cover of the Lucene-lite AST: a probe set whose postings union is a

@@ -495,4 +495,54 @@ class PlanSpec extends AnyFunSuite {
       l.contains("FileScan parquet") || l.contains("Scan parquet"))
     assert(scans == 1, s"expected one doc-store scan, found $scans:\n${plan.take(3000)}")
   }
+
+  test("the postings and norms builds tokenize with word_runs inside a " +
+       "whole-stage codegen stage") {
+    import org.apache.spark.sql.execution.{InputAdapter, SparkPlan, WholeStageCodegenExec}
+    val docs = spark.read.parquet(s"$dir/documents.parquet")
+    val helper = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    for ((name, built) <- Seq(
+        "buildPostings" -> graft.TextIndex.buildPostings(docs, "doc_id", Seq("text"), 16),
+        "buildPostings(2 fields)" ->
+          graft.TextIndex.buildPostings(docs, "doc_id", Seq("text", "lang"), 16),
+        "buildNorms" -> graft.TextIndex.buildNorms(docs, "doc_id", Seq("text", "lang")))) {
+      built.collect() // the final adaptive plan, with its codegen stages
+      val plan = built.queryExecution.executedPlan
+      def own(p: SparkPlan) =
+        p.expressions.flatMap(_.collect { case w: graft.functions.WordRuns => w })
+      // a codegen stage ends at its InputAdapter
+      def inStage(p: SparkPlan): Seq[graft.functions.WordRuns] = own(p) ++ (p match {
+        case _: InputAdapter => Nil
+        case _ => p.children.flatMap(inStage)
+      })
+      val all = helper.collect(plan) { case n => own(n) }.flatten
+      val staged = helper.collect(plan) { case w: WholeStageCodegenExec => inStage(w.child) }.flatten
+      assert(all.nonEmpty, s"$name: no word_runs in\n$plan")
+      assert(staged.size == all.size, s"$name: word_runs outside whole-stage codegen:\n$plan")
+    }
+  }
+
+  test("a delete by key broadcasts the raw key side: deleteFromSketchStore " +
+       "runs two jobs (broadcast + rewrite), no distinct shuffle") {
+    import spark.implicits._
+    val path = java.nio.file.Files.createTempDirectory("graft_sketch_jobs").toString
+    graft.pipeline.Dedup.writeSketchStore(Seq((1L, "spark makes batch fast"),
+      (2L, "spark makes batch faster"), (3L, "nothing relevant here"))
+      .toDF("doc_id", "text"), path, "text", "doc_id")
+    @volatile var jobs = 0
+    val tap = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs += 1
+    }
+    org.apache.spark.sql.graft.Bridge.drainListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(tap)
+    try {
+      graft.pipeline.Dedup.deleteFromSketchStore(spark, path, Seq(3L, 3L).toDF("id"))
+      org.apache.spark.sql.graft.Bridge.drainListeners(spark.sparkContext)
+      assert(jobs == 2, s"deleteFromSketchStore launched $jobs job(s)")
+    } finally spark.sparkContext.removeSparkListener(tap)
+    assert(graft.StoreFs.read(spark, path).select("id").as[Long].collect().sorted.toSeq ==
+      Seq(1L, 2L))
+  }
 }

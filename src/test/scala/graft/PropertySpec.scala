@@ -169,22 +169,27 @@ class PropertySpec extends AnyFunSuite {
     assert(hits.select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(1L))
   }
 
-  test("property: word_match ≡ lower(x) RLIKE termPattern(t), interpreted " +
-       "and generated") {
-    // pieces that exercise both paths of the kernel: ASCII words in any
-    // case, word-char edges (_ digits), punctuation, Latin-1, CJK,
-    // combining marks, Turkish dotted/dotless i, empty values and nulls
+  /** Text values that exercise both paths of the native text kernels
+    * (`word_match`, `word_runs`): ASCII words in any case, word-char edges
+    * (_ digits), punctuation, Latin-1, CJK, combining marks, Turkish
+    * dotted/dotless i, the Kelvin sign and long s (both fold to ASCII
+    * under a case-insensitive regex), empty values and nulls. */
+  private val textValueGen: Gen[String] = {
     val pieces = Seq("spark", "Spark", "SPARK", "sparks", "x", "X1", "1x", "_",
       "a_b", "42", "-", "--", ".", ",", "'", "*", "?", "\\", "café", "CAFÉ",
       "Über", "ß", "数据", "中文spark", "e\u0301", "spark\u0301", "\u0301x",
-      "İ", "ı", "I", "i", "İstanbul", "ISTANBUL", "ıi", "\t", " ")
-    val valueGen = Gen.frequency(
+      "İ", "ı", "I", "i", "İstanbul", "ISTANBUL", "ıi", "\t", " ", "\u212Aelvin", "ſpark")
+    Gen.frequency(
       (1, Gen.const(null: String)), (1, Gen.const("")),
       (12, Gen.choose(1, 6).flatMap(n => Gen.listOfN(n, for {
         p <- Gen.oneOf(pieces)
         sep <- Gen.oneOf(" ", "", "-", "_", " ", "\n")
       } yield p + sep).map(_.mkString))))
-    val values = Iterator.continually(valueGen.sample).flatten.take(400).toSeq
+  }
+
+  test("property: word_match ≡ lower(x) RLIKE termPattern(t), interpreted " +
+       "and generated") {
+    val values = Iterator.continually(textValueGen.sample).flatten.take(400).toSeq
     val terms = Seq("spark", "SPARK", "x", "x1", "1x", "_", "a_b", "42", "i", "I",
       "-x", "x-", "-spark", "spark-", "-", "spark\\*", "\\*", "a\\-b",
       "spar*", "SPAR*", "x*", "_*", "-*", "caf*", "spark\\**", "\\\\*",
@@ -217,6 +222,37 @@ class PropertySpec extends AnyFunSuite {
         .where(lower(col("v")).rlike(QueryCompiler.termPattern("spark")))
         .select("id").collect().map(_.getInt(0)).sorted.toSeq
       assert(where == whereRx && where.nonEmpty, mode)
+    }
+  }
+
+  test("property: word_runs ≡ filter(split(lower(x), '[^a-z0-9_]+'), len > 0), " +
+       "interpreted and generated") {
+    import graft.functions.WordRuns
+    val values = Iterator.continually(textValueGen.sample).flatten.take(400).toSeq
+    val dir = java.nio.file.Files.createTempDirectory("graft_word_runs").toString
+    values.zipWithIndex.map { case (v, i) => (i, v) }.toDF("id", "v")
+      .repartition(3).write.mode("overwrite").parquet(dir)
+    // the reference is the split form the kernel replaces, on a binary and
+    // on a UTF8_LCASE string (split's case-insensitive regex flags)
+    def reference(c: org.apache.spark.sql.Column) =
+      filter(split(lower(c), "[^a-z0-9_]+"), t => length(t) > 0)
+    val lcase = collate(col("v"), "UTF8_LCASE")
+    inBothModes { mode =>
+      val out = spark.read.parquet(dir).select(col("v"),
+        WordRuns.column(col("v")).as("k"), reference(col("v")).as("r"),
+        WordRuns.column(lcase).as("kl"), reference(lcase).as("rl")).collect()
+      assert(out.length == values.size)
+      for (r <- out; (k, rx) <- Seq("k" -> "r", "kl" -> "rl")) {
+        val (got, want) = (r.getAs[collection.Seq[String]](k), r.getAs[collection.Seq[String]](rx))
+        assert(got == want, s"$mode $k on '${r.getString(0)}': word_runs=$got, split=$want")
+      }
+      // the driver entry is the binary-string analyzer
+      for (r <- out if !r.isNullAt(0))
+        assert(WordRuns.tokens(r.getString(0)) == r.getAs[collection.Seq[String]]("r"),
+          s"driver tokens of '${r.getString(0)}'")
+      val tokens = out.map(r => Option(r.getAs[collection.Seq[String]]("r")).map(_.size).getOrElse(0)).sum
+      assert(tokens > 400, s"$mode: too few tokens ($tokens) to mean anything")
+      assert(out.exists(r => r.getString(0) != null && !r.getString(0).forall(_ < 128)))
     }
   }
 

@@ -7,8 +7,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * as binary); the store swap protocol and marker format stay in ONE
   * module — renames and raw file opens/creates appear only in the
   * store-lifecycle kernel ([[StoreFs]]); stores open through
-  * [[StoreFs.read]]; and "term matches" has one definition,
-  * [[QueryCompiler.termMatch]]. */
+  * [[StoreFs.read]]; "term matches" has one definition,
+  * [[QueryCompiler.termMatch]]; and the index analyzer has one,
+  * [[graft.functions.WordRuns]]. */
 class SourceLintSpec extends AnyFunSuite {
 
   private val Kernel = "storefs.scala"
@@ -70,6 +71,19 @@ class SourceLintSpec extends AnyFunSuite {
     val bad = calls("""\.rlike\( ?(QueryCompiler\.)?termPattern\(""".r).map {
       case (f, at, text) => s"${f.getPath}: ${text.slice(at, at + 60)}"
     }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("the analyzer regex lives only in the word_runs kernel") {
+    // every tokenize site goes through functions/WordRuns.scala; the DuckDB
+    // oracle SQL in SparkEntry spells the regex as the reference
+    val allowed = Set("WordRuns.scala", "SparkEntry.scala")
+    val bad = for {
+      f <- sources if !allowed(f.getName)
+      (line, n) <- java.nio.file.Files.readAllLines(f.toPath).toArray
+        .map(_.toString).zipWithIndex.toSeq
+      if line.contains("[^a-z0-9_]+")
+    } yield s"${f.getPath}:${n + 1}: ${line.trim}"
     assert(bad.isEmpty, bad.mkString("\n"))
   }
 }

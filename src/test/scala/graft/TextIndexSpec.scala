@@ -631,4 +631,76 @@ class TextIndexSpec extends AnyFunSuite {
     assert(TextIndex.openPostings(spark, s"$dir/postings")._2.nBuckets == 8)
     assert(served() == rebuilt) // serving unchanged by the physical reclaim
   }
+
+  test("the word_runs analyzer builds the same postings, positional postings " +
+       "and norms as split(lower(x), '[^a-z0-9_]+') over mixed-script text") {
+    val corpus = Seq(
+      (1L, "  --Spark_2 streams, FAST!  ", "en"),
+      (2L, "café CAFÉ Über straße ß", "de"),
+      (3L, "数据 中文spark 数据_x 中文", "zh"),
+      (4L, "e\u0301clair spark\u0301 \u0301x", "fr"),
+      (5L, "İstanbul ISTANBUL ıi I i İ", "tr"),
+      (6L, "", ""),
+      (7L, null, null),
+      (8L, "__ 42 a_b 1x x1 _x_ 007 a__b", "en"),
+      (9L, "...,;", "en"),
+      (10L, "spark spark SPARK-spark", "\u212Aelvin")).toDF("doc_id", "text", "lang")
+    // the reference analyzer and the builds spelled with it, as the index
+    // was built before the native kernel
+    def ref(c: org.apache.spark.sql.Column) =
+      filter(split(lower(c.cast("string")), "[^a-z0-9_]+"), t => length(t) > 0)
+    def fanOut(fs: Seq[String], toks: org.apache.spark.sql.Column => org.apache.spark.sql.Column) =
+      corpus.select(col("doc_id"), explode(array(fs.map(f =>
+          struct(lit(f).as("field"), toks(col(f)).as("toks"))): _*)).as("_ft"))
+        .select(col("_ft.field").as("field"), col("doc_id"), col("_ft.toks"))
+    def bucketed(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("bucket", pmod(xxhash64(col("token")), lit(8)).cast("int"))
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    for (fs <- Seq(Seq("text"), Seq("text", "lang"))) {
+      val plain = bucketed(fanOut(fs, ref)
+        .select(col("field"), col("doc_id"), explode(col("toks")).as("token"))
+        .groupBy("token", "field", "doc_id").agg(count(lit(1)).cast("int").as("tf")))
+      val positional = bucketed(fanOut(fs, ref)
+        .select(col("field"), col("doc_id"), posexplode(col("toks")).as(Seq("pos", "token")))
+        .groupBy("token", "field", "doc_id").agg(count(lit(1)).cast("int").as("tf"),
+          sort_array(collect_list(col("pos"))).as("positions")))
+      val norms = fs.map(f => corpus.select(col("doc_id"), lit(f).as("field"),
+        size(ref(coalesce(col(f).cast("string"), lit("")))).as("dl"))).reduce(_.union(_))
+      val want = rows(plain)
+      assert(want.size > 20, s"$fs: too few postings to mean anything")
+      assert(rows(TextIndex.buildPostings(corpus, "doc_id", fs, 8)) == want, fs)
+      assert(rows(TextIndex.buildPostingsPositional(corpus, "doc_id", fs, 8)) ==
+        rows(positional), fs)
+      assert(rows(TextIndex.buildNorms(corpus, "doc_id", fs)) == rows(norms), fs)
+    }
+  }
+
+  test("the driver-side analyzer ignores the JVM default locale: under a " +
+       "Turkish locale Maintain.analyze equals the tokens buildPostings writes") {
+    def postingsOf(text: String) = TextIndex.buildPostings(
+      Seq((1L, text)).toDF("doc_id", "text"), "doc_id", Seq("text"), 8)
+      .select("token").as[String].collect().sorted.toSeq
+    // an ASCII value: its index tokens do not depend on the locale at all
+    val ascii = "TITLE of the INDEX, Izmir_1"
+    val dir = java.nio.file.Files.createTempDirectory("graft_tr_locale").toString
+    TextIndex.writePostings(TextIndex.buildPostings(
+      Seq((1L, ascii)).toDF("doc_id", "text"), "doc_id", Seq("text"), 8), dir)
+    val stored = TextIndex.openPostings(spark, dir)._1.select("token").as[String]
+      .collect().sorted.toSeq
+    assert(stored == Seq("index", "izmir_1", "of", "the", "title"))
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.forLanguageTag("tr-TR"))
+    try {
+      assert("TITLE".toLowerCase.split("[^a-z0-9_]+").toSeq == Seq("t", "tle"),
+        "the locale did not take: the check would prove nothing")
+      assert(Maintain.analyze(ascii).sorted == stored)
+      // a non-ASCII value goes through Spark's lower() on both sides
+      val mixed = "TITLE İstanbul ISTANBUL ıi"
+      assert(Maintain.analyze(mixed).distinct.sorted == postingsOf(mixed))
+      // synonym expansion analyzes match values the same way
+      val expanded = QueryCompiler.expandSynonyms(
+        """{"match": {"text": "TITLE"}}""", Map("title" -> Seq("heading")))
+      assert(expanded.contains("heading"), expanded)
+    } finally java.util.Locale.setDefault(saved)
+  }
 }
