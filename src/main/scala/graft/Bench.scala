@@ -17,16 +17,7 @@ private class ShuffleTap extends org.apache.spark.scheduler.SparkListener {
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(SparkEntry.envCpus, "WARN")
     // The engine's only unpartitioned windows run over pipeline-agg BUCKET
     // frames whose size is ENFORCED in-plan (Aggs.boundedFrame raises
     // beyond the 100k cap — AggsSpec pins it), so WindowExec's
@@ -57,7 +48,7 @@ object Bench {
     // documents.parquet otherwise costs ~1.5s of decompress/init that
     // belongs to no particular query
     def warm(s: SparkSession): Unit = {
-      s.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().count()
+      StoreFs.read(s, s"$sfDir/region.parquet").groupBy("r_name").count().count()
       // collect() the per-column aggregate — its VALUES force every data page
       // to decompress. (A terminal .count() lets ColumnPruning strip the inner
       // aggregates down to a metadata-only scan, warming nothing; same for a
@@ -65,14 +56,14 @@ object Bench {
       Seq("nation", "customer", "supplier", "part", "orders", "lineitem",
           "events", "documents", "embeddings")
         .foreach { t =>
-          val df = s.read.parquet(s"$sfDir/$t.parquet")
+          val df = StoreFs.read(s, s"$sfDir/$t.parquet")
           df.select(df.columns.map(c =>
             org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.col(c)).as(c)): _*).collect()
         }
       // JIT-warm the regex text-match path (~2s of cold java.util.regex +
       // codegen that otherwise lands on whichever search query runs first)
       import org.apache.spark.sql.functions.{col, lower}
-      s.read.parquet(s"$sfDir/documents.parquet")
+      StoreFs.read(s, s"$sfDir/documents.parquet")
         .where(lower(col("text")).rlike("\\bwarmup_token_zzz\\b")).count()
     }
     warm(spark)
@@ -189,15 +180,7 @@ object Bench {
       if (sys.env.getOrElse("SPARK_GRAFT_CPUS4", "4") == "0") Map.empty
       else {
         spark.stop()
-        val s4 = SparkSession.builder()
-          .master("local[4]")
-          .config("spark.sql.shuffle.partitions", "4")
-          .config("spark.ui.enabled", "false")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-          .config("spark.sql.adaptive.enabled", "true")
-          .getOrCreate()
-        s4.sparkContext.setLogLevel("WARN")
+        val s4 = SparkEntry.localSession(4, "WARN")
         warm(s4)
         val out = cpus4Queries.flatMap { name =>
           SparkEntry.queries.get(name).map { fn =>

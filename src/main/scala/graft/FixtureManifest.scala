@@ -32,7 +32,7 @@ object FixtureManifest {
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (!fs.exists(new org.apache.hadoop.fs.Path(path))) None
       else {
-        val df = spark.read.parquet(path)
+        val df = StoreFs.read(spark, path) // raw, as ScaleUp writes it
         val rowHash = xxhash64(to_json(struct(df.columns.sorted.map(col): _*)))
         val row = df.agg(count(lit(1)).as("n"),
           coalesce(bit_xor(rowHash), lit(0L)).as("h")).head()
@@ -91,5 +91,22 @@ object FixtureManifest {
     val base = new java.io.File(dir).getName
     val p = java.nio.file.Paths.get("fixtures", s"$base.manifest.json")
     if (java.nio.file.Files.exists(p)) Some(p) else None
+  }
+
+  /** Record (or, with a third argument `check`, verify) a fixture's
+    * manifest: `runMain graft.FixtureManifest <fixtureDir> <manifestPath>
+    * [check]`. A mismatch fails with the per-table differences. */
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 2, "usage: FixtureManifest <fixtureDir> <manifestPath> [check]")
+    val spark = SparkEntry.localSession(SparkEntry.envCpus, "ERROR")
+    try {
+      if (args.length > 2 && args(2) == "check") {
+        check(spark, args(0), args(1))
+        println(s"MANIFEST_OK ${args(0)} matches ${args(1)}")
+      } else {
+        write(spark, args(0), args(1))
+        println(s"MANIFEST_WRITTEN ${args(1)}")
+      }
+    } finally spark.stop()
   }
 }

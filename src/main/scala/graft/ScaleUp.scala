@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic dataset scale-up: replicate an sf directory N× with
@@ -49,16 +49,10 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     require(args.length == 3, "usage: ScaleUp <srcDir> <outDir> <factor>")
     val (src, out, factor) = (args(0), args(1), args(2).toInt)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    def read(t: String) = spark.read.parquet(s"$src/$t.parquet")
+    val spark = SparkEntry.localSession(SparkEntry.envCpus, "WARN")
+    // raw tables, not SparkEntry.tbl: its events.ts rewrite would change
+    // the written bytes and the manifest digests
+    def read(t: String) = StoreFs.read(spark, s"$src/$t.parquet")
     def write(df: DataFrame, t: String): Unit =
       df.write.mode("overwrite").parquet(s"$out/$t.parquet")
 

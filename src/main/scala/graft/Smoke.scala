@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** t1 smoke: run [[SparkEntry.entry]] exactly as the driver does and print
   * the row count (driver gate: rows > 0 on sf0.001). */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(4, "ERROR")
     val df = SparkEntry.entry(spark)
     println("ENTRY_ROWS=" + df.count())
     df.show(5, truncate = false)

@@ -23,11 +23,31 @@ import graft.pipeline.{Curate, Dedup, Multimodal, Sessionize, Similarity, TextSt
   */
 object SparkEntry {
 
-  /** Parquet loader. `events.ts` is TIMESTAMP(NANOS), which Spark only reads
-    * as a raw long (`spark.sql.legacy.parquet.nanosAsLong`, set in
-    * [[Verify]]/[[Bench]]); normalize it back to a microsecond timestamp. */
+  /** Cores for the entry points' sessions: `SPARK_GRAFT_CPUS`, default 4. */
+  def envCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(_.toInt)
+
+  /** The one session factory of every entry point ([[Bench]], [[Verify]],
+    * [[Smoke]], [[ScaleUp]], [[FixtureManifest]] and the test suites):
+    * `local[cpus]` with as many shuffle partitions, no UI, UTC, AQE on, and
+    * `spark.sql.legacy.parquet.nanosAsLong` — the conf [[tbl]] depends on. */
+  def localSession(cpus: Int, logLevel: String): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+      .config("spark.sql.adaptive.enabled", "true")
+      .getOrCreate()
+    s.sparkContext.setLogLevel(logLevel)
+    s
+  }
+
+  /** Fixture table loader. An `events.ts` stored as TIMESTAMP(NANOS) reads
+    * only as a raw long, under [[localSession]]'s nanosAsLong; normalize it
+    * back to a microsecond timestamp. */
   private def tbl(s: SparkSession, dir: String, name: String): DataFrame = {
-    val df = s.read.parquet(s"$dir/$name.parquet")
+    val df = StoreFs.read(s, s"$dir/$name.parquet")
     df.schema.find(f => f.name == "ts" &&
         f.dataType == org.apache.spark.sql.types.LongType) match {
       // integer division — long/1000 via `/` goes through double and loses
@@ -36,6 +56,10 @@ object SparkEntry {
       case None => df
     }
   }
+
+  /** A partitioned store, with its root as the `basePath`. */
+  private def partitioned(s: SparkSession, path: String): DataFrame =
+    StoreFs.read(s, Seq(path), Some(path))
 
   // Every temp dir this object creates is registered here and removed by
   // one JVM shutdown hook — repeated driver/bench runs leave no debris.
@@ -449,7 +473,7 @@ object SparkEntry {
       val d = tbl(s, dir, "documents")
       val path = memoStore("postings_pos", dir)(p => TextIndex.writePostings(
         TextIndex.buildPostingsPositional(d, "doc_id", Seq("text"), 16), p))
-      val store = s.read.option("basePath", path).parquet(path)
+      val store = partitioned(s, path)
       TextIndex.searchIndexed(d, store, "text:\"spark batch\"~2",
           IndexConfig(), Seq("doc_id"), Set("text"), 16)
         .select(col("doc_id"), col("_score"))
@@ -486,8 +510,7 @@ object SparkEntry {
         TextIndex.buildNorms(d, "doc_id", Seq("text"))
           .write.mode("overwrite").parquet(s"$p/norms")
       }
-      val postings = s.read.option("basePath", s"$path/postings")
-        .parquet(s"$path/postings")
+      val postings = partitioned(s, s"$path/postings")
       Search.moreLikeThisFromStore(tbl(s, dir, "documents"), postings, "text",
           likeIds = Seq(1L, 2L, 3L), cfg = IndexConfig(maxResults = 100000),
           minTermFreq = 2, minDocFreq = 5, maxQueryTerms = 10,
@@ -703,7 +726,7 @@ object SparkEntry {
       val d = tbl(s, dir, "documents")
       val path = memoStore("postings", dir)(p => TextIndex.writePostings(
         TextIndex.buildPostings(d, "doc_id", Seq("text", "lang"), 16), p))
-      val store = s.read.option("basePath", path).parquet(path)
+      val store = partitioned(s, path)
       val q = """{"query":{"bool":{
                    "must":[{"match":{"text":"spark"}}],
                    "must_not":[{"term":{"lang":"de"}}],
@@ -720,7 +743,7 @@ object SparkEntry {
       val d = tbl(s, dir, "documents")
       val path = memoStore("postings", dir)(p => TextIndex.writePostings(
         TextIndex.buildPostings(d, "doc_id", Seq("text", "lang"), 16), p))
-      val store = s.read.option("basePath", path).parquet(path)
+      val store = partitioned(s, path)
       TextIndex.searchIndexed(d, store,
           "#options:load-rows=false#text:dup AND lang:de",
           IndexConfig(), Seq("doc_id"), Set("text", "lang"), 16, pureIndex = true)
@@ -748,9 +771,8 @@ object SparkEntry {
         TextIndex.buildNorms(d, "doc_id", Seq("text"))
           .write.mode("overwrite").parquet(s"$p/norms")
       }
-      val postings = s.read.option("basePath", s"$path/postings")
-        .parquet(s"$path/postings")
-      val norms = s.read.parquet(s"$path/norms")
+      val postings = partitioned(s, s"$path/postings")
+      val norms = StoreFs.read(s, s"$path/norms")
       TextIndex.bm25Indexed(postings, norms, "text", Seq("spark", "query"),
           nBuckets = 16)
         .orderBy(desc("_bm25"), col("doc_id")).limit(50)
@@ -774,9 +796,8 @@ object SparkEntry {
         TextIndex.appendNorms(d.where(half === 1), "doc_id", Seq("text"),
           s"$p/norms")
       }
-      val postings = s.read.option("basePath", s"$path/postings")
-        .parquet(s"$path/postings")
-      val norms = s.read.parquet(s"$path/norms")
+      val postings = partitioned(s, s"$path/postings")
+      val norms = StoreFs.read(s, s"$path/norms")
       TextIndex.bm25Indexed(postings, norms, "text", Seq("spark", "query"),
           nBuckets = 16)
         .orderBy(desc("_bm25"), col("doc_id")).limit(50)
@@ -801,9 +822,8 @@ object SparkEntry {
           d.where(col("doc_id") % 7 === 0).select("doc_id"))
         TextIndex.purgeDeadPostings(s, s"$p/postings", s"$p/norms")
       }
-      val postings = s.read.option("basePath", s"$path/postings")
-        .parquet(s"$path/postings")
-      val norms = s.read.parquet(s"$path/norms")
+      val postings = partitioned(s, s"$path/postings")
+      val norms = StoreFs.read(s, s"$path/norms")
       TextIndex.bm25Indexed(postings, norms, "text", Seq("spark", "query"),
           nBuckets = 16)
         .orderBy(desc("_bm25"), col("doc_id")).limit(50)
@@ -836,9 +856,8 @@ object SparkEntry {
         TextIndex.upsertNorms(d, "doc_id", Seq("text"), s"$p/norms",
           gen = Some(1L))
       }
-      val postings = s.read.option("basePath", s"$path/postings")
-        .parquet(s"$path/postings")
-      val norms = s.read.parquet(s"$path/norms")
+      val postings = partitioned(s, s"$path/postings")
+      val norms = StoreFs.read(s, s"$path/norms")
       TextIndex.bm25Indexed(postings, norms, "text", Seq("spark", "query"),
           nBuckets = 16)
         .orderBy(desc("_bm25"), col("doc_id")).limit(50)
@@ -851,7 +870,7 @@ object SparkEntry {
         .withColumn("segment", date_format(col("o_orderdate"), "yyyy-MM"))
       val path = tmpDir("index_create")
       Indexer.writeSegmented(o, path) // segment-clustered partitioned write
-      s.read.parquet(path)
+      StoreFs.read(s, path)
         .groupBy(col("segment")).agg(count(lit(1)).as("doc_count"))
     }),
     "q_ingest_processors" -> ((s, dir) => {
@@ -1081,7 +1100,7 @@ object SparkEntry {
       Indexer.writeSegmented(o, path)
       // keep 1995+; everything earlier is dropped directory-by-directory
       Maintain.dropSegmentDirs(s, path, "segment", seg => seg >= "1995-01")
-      s.read.parquet(path)
+      StoreFs.read(s, path)
         .groupBy(col("segment")).agg(count(lit(1)).as("doc_count"))
     }),
     "q_zorder" -> ((s, dir) => {
@@ -1103,7 +1122,7 @@ object SparkEntry {
       val path = tmpDir("maintain_compact")
       o.repartition(8).write.mode("overwrite").partitionBy("segment").parquet(path)
       Maintain.compactSegments(s, path, "segment")
-      s.read.parquet(path)
+      StoreFs.read(s, path)
         .groupBy(col("segment")).agg(count(lit(1)).as("doc_count"),
           round(sum(col("o_totalprice")), 2).as("total_price"))
     }),
@@ -1710,7 +1729,7 @@ object SparkEntry {
       val docs = tbl(s, dir, "documents")
       val path = memoStore("postings", dir)(p => TextIndex.writePostings(
         TextIndex.buildPostings(docs, "doc_id", Seq("text", "lang"), 16), p))
-      val postings = s.read.option("basePath", path).parquet(path)
+      val postings = partitioned(s, path)
       Aggs.runIndexed(docs, postings,
         """{"query": {"match": {"text": "spark"}},
             "aggs": {"by_lang": {"terms": {"field": "lang", "size": 5},
@@ -1725,7 +1744,7 @@ object SparkEntry {
       val docs = tbl(s, dir, "documents")
       val path = memoStore("postings", dir)(p => TextIndex.writePostings(
         TextIndex.buildPostings(docs, "doc_id", Seq("text", "lang"), 16), p))
-      val postings = s.read.option("basePath", path).parquet(path)
+      val postings = partitioned(s, path)
       TextIndex.termsAggIndexed(postings, "text", k = 200)
     }),
     "q_agg_top_hits" -> ((s, dir) => {
@@ -2275,9 +2294,8 @@ object SparkEntry {
         TextIndex.buildNorms(d, "doc_id", Seq("text"))
           .write.mode("overwrite").parquet(s"$p/norms")
       }
-      val postings = s.read.option("basePath", s"$path/postings")
-        .parquet(s"$path/postings")
-      val norms = s.read.parquet(s"$path/norms")
+      val postings = partitioned(s, s"$path/postings")
+      val norms = StoreFs.read(s, s"$path/norms")
       Aggs.significantTextFromStore(
           tbl(s, dir, "documents").where(col("lang") === "de"),
           postings, norms, "text", size = 10)
@@ -2984,7 +3002,7 @@ object SparkEntry {
       // reader is the FAILED_READ_FILE trap)
       d.where(col("lang") =!= "en").write.mode("overwrite").parquet(store)
       Maintain.restore(s, snap, store)
-      s.read.parquet(store)
+      StoreFs.read(s, store)
     }),
     "q_search_min_score" -> ((s, dir) => {
       // min_score: the score floor drops single-term matches before the
@@ -3508,8 +3526,8 @@ object SparkEntry {
       val annPath = memoStore("ann_ivf_store", dir)(p =>
         pipeline.Ivf.writeIndex(emb, c = 8, p, iters = 2))
       val textLeg = TextIndex.bm25Indexed(
-          s.read.option("basePath", s"$bmPath/postings").parquet(s"$bmPath/postings"),
-          s.read.parquet(s"$bmPath/norms"), "text", Seq("spark", "query"),
+          partitioned(s, s"$bmPath/postings"),
+          StoreFs.read(s, s"$bmPath/norms"), "text", Seq("spark", "query"),
           nBuckets = 16)
         .orderBy(desc("_bm25"), col("doc_id")).limit(50)
         .select(col("doc_id"), col("_bm25").as("_score"))

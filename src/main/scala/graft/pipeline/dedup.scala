@@ -345,15 +345,9 @@ object Dedup {
     // `graft.skew.saltAt` (default 1M pairs) join exactly as before, so
     // the common-case plan cost is one id-only count + an empty broadcast,
     // with no driver-side action. Output is salt-invariant.
-    val sess = shingleSource.sparkSession
-    val saltAt = sess.conf.getOption("graft.skew.saltAt")
-      .map(_.toLong).getOrElse(1000000L)
-    val saltF = sess.conf.getOption("graft.skew.saltFactor")
-      .map(_.toInt).getOrElse(16)
     Skew.saltedVerifyJoin(cand,
         candSh.select(col("id").as("id_a"), col("sh").as("sh_a")),
-        candSh.select(col("id").as("id_b"), col("sh").as("sh_b")),
-        saltAt, saltF)
+        candSh.select(col("id").as("id_b"), col("sh").as("sh_b")))
       .withColumn("jaccard",
         size(array_intersect(col("sh_a"), col("sh_b"))).cast("double") /
           size(array_union(col("sh_a"), col("sh_b"))))
@@ -741,6 +735,12 @@ object Dedup {
     definiteNew.unionByName(confirmedNew).drop("_bf_maybe")
   }
 
+  /** [[semanticDedup]]'s escape banding — shared by its recall gate and
+    * [[semanticLshCandidates]] — and the recall the gate requires. */
+  private val SemBands = 16
+  private val SemBitsPerBand = 8
+  private val SemMinRecall = 0.99
+
   /** SemDeDup (semantic dedup over embeddings, Abbas et al. 2023): cluster
     * the corpus, then WITHIN each cluster drop every vector that has a
     * lower-id neighbor above the cosine threshold (keep-lowest-id — the
@@ -760,13 +760,12 @@ object Dedup {
     * vector spreads across reducers instead of straggling one task.
     *
     * The escape is RECALL-GATED, never silently lossy: banded RHP recall
-    * at the exact threshold is analytic ([[lshEscapeRecall]] — with the
-    * defaults `graft.semdedup.bands`=16 / `bitsPerBand`=8 it is 99.6% at
-    * cos 0.9, 99.99% at 0.95, and exactly 1 for identical vectors), and
-    * the escape only engages when that recall meets
-    * `graft.semdedup.minRecall` (default 0.99). In the SemDeDup regime
-    * (near-identical vectors, threshold ≥~0.9 — the paper dedups at
-    * eps≈0.95) the gate passes; at LOW thresholds banding is
+    * at the exact threshold is analytic ([[lshEscapeRecall]] — with
+    * [[SemBands]]=16 / [[SemBitsPerBand]]=8 it is 99.6% at cos 0.9,
+    * 99.99% at 0.95, and exactly 1 for identical vectors), and the escape
+    * only engages when that recall meets [[SemMinRecall]] (0.99). In the
+    * SemDeDup regime (near-identical vectors, threshold ≥~0.9 — the paper
+    * dedups at eps≈0.95) the gate passes; at LOW thresholds banding is
     * recall-unsound (23% at cos 0.3 under the defaults — and no
     * sub-quadratic exact escape exists there: a 0.3-cosine pair in
     * high dimensions is barely outside the random-pair distribution, so
@@ -805,13 +804,7 @@ object Dedup {
         col("a.cl") === col("b.cl") && col("b.id") < col("a.id") &&
           vec_dot(col("a.v"), col("b.v")) >= threshold)
       .select(col("a.id").as("id"), col("b.id").as("dup_id"))
-    val bands = sess.conf.getOption("graft.semdedup.bands")
-      .map(_.toInt).getOrElse(16)
-    val bits = sess.conf.getOption("graft.semdedup.bitsPerBand")
-      .map(_.toInt).getOrElse(8)
-    val minRecall = sess.conf.getOption("graft.semdedup.minRecall")
-      .map(_.toDouble).getOrElse(0.99)
-    val analyticRecall = lshEscapeRecall(threshold, bands, bits)
+    val analyticRecall = lshEscapeRecall(threshold, SemBands, SemBitsPerBand)
     // the analytic formula assumes GAUSSIAN hyperplanes; rhp_buckets draws
     // a deterministic Rademacher (±1) sign matrix, so for low-dimensional
     // or axis-aligned embeddings the true recall can sit below the
@@ -822,11 +815,11 @@ object Dedup {
     val sampleN = sess.conf.getOption("graft.semdedup.recallSample")
       .map(_.toInt).getOrElse(0)
     val escRecall =
-      if (bigClusters.isEmpty || sampleN <= 0 || analyticRecall < minRecall)
+      if (bigClusters.isEmpty || sampleN <= 0 || analyticRecall < SemMinRecall)
         analyticRecall
       else empiricalLshRecall(
           base.where(col("cl").isin(bigClusters: _*)),
-          threshold, bands, bits, sampleN) match {
+          threshold, SemBands, SemBitsPerBand, sampleN) match {
         case Some(emp) =>
           if (emp < analyticRecall)
             org.slf4j.LoggerFactory.getLogger(Dedup.getClass).warn(
@@ -840,13 +833,13 @@ object Dedup {
       }
     val allPairs =
       if (bigClusters.isEmpty) exactPairs(base)
-      else if (escRecall < minRecall) {
+      else if (escRecall < SemMinRecall) {
         org.slf4j.LoggerFactory.getLogger(Dedup.getClass).warn(
           s"semanticDedup: ${bigClusters.size} cluster(s) exceed escapeAt=" +
             s"$escapeAt but the RHP-LSH escape is recall-unsound at " +
             f"threshold=$threshold (banded recall ≈ $escRecall%.3f with " +
-            s"bands=$bands bits=$bits < minRecall=$minRecall) — keeping the " +
-            "EXACT quadratic-within-cluster path. Low-threshold semantic " +
+            s"bands=$SemBands bits=$SemBitsPerBand < minRecall=$SemMinRecall) — " +
+            "keeping the EXACT quadratic-within-cluster path. Low-threshold semantic " +
             "dedup has no sound sub-quadratic escape; re-cluster with a " +
             "larger k (SemDeDup's own control) to bound cluster size.")
         exactPairs(base)
@@ -872,14 +865,9 @@ object Dedup {
         // sampling at construction, and the hot-set barrier needs the
         // pairs anyway.
         val cand = semanticLshCandidates(big, sess).localCheckpoint(true)
-        val saltAt = sess.conf.getOption("graft.skew.saltAt")
-          .map(_.toLong).getOrElse(1000000L)
-        val saltF = sess.conf.getOption("graft.skew.saltFactor")
-          .map(_.toInt).getOrElse(16)
         val verified = Skew.saltedVerifyJoin(cand,
             big.select(col("id").as("id_a"), col("v").as("v_a")),
-            big.select(col("id").as("id_b"), col("v").as("v_b")),
-            saltAt, saltF)
+            big.select(col("id").as("id_b"), col("v").as("v_b")))
           .where(vec_dot(col("v_a"), col("v_b")) >= threshold)
           .select(col("id_a").as("id"), col("id_b").as("dup_id"))
         exactPairs(small).unionByName(verified)
@@ -952,12 +940,8 @@ object Dedup {
   private[graft] def semanticLshCandidates(
       big: DataFrame, sess: org.apache.spark.sql.SparkSession): DataFrame = {
     import graft.functions.VecFunctions.rhp_buckets
-    val bands = sess.conf.getOption("graft.semdedup.bands")
-      .map(_.toInt).getOrElse(16)
-    val bits = sess.conf.getOption("graft.semdedup.bitsPerBand")
-      .map(_.toInt).getOrElse(8)
     val bb = big.select(col("cl"), col("id"),
-        posexplode(rhp_buckets(col("v"), bands, bits)))
+        posexplode(rhp_buckets(col("v"), SemBands, SemBitsPerBand)))
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "bucket")
       .select(col("cl"), col("band"), col("bucket"), col("id"))
     // Bucket cap, SEMANTIC-escape edition — deliberately NOT [[capBuckets]]:

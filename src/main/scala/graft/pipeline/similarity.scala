@@ -202,15 +202,9 @@ object Similarity {
     // id (boilerplate embedding colliding across buckets) spreads over
     // saltFactor reducers instead of one; cold keys join exactly as
     // unsalted (see [[Skew.adaptiveSaltedJoin]] — lazy, output-invariant)
-    val sess = df.sparkSession
-    val saltAt = sess.conf.getOption("graft.skew.saltAt")
-      .map(_.toLong).getOrElse(1000000L)
-    val saltF = sess.conf.getOption("graft.skew.saltFactor")
-      .map(_.toInt).getOrElse(16)
     Skew.saltedVerifyJoin(idPairs,
         vecSide.select(col(idCol).as("id_a"), col(vecCol).as("v_a")),
-        vecSide.select(col(idCol).as("id_b"), col(vecCol).as("v_b")),
-        saltAt, saltF)
+        vecSide.select(col(idCol).as("id_b"), col(vecCol).as("v_b")))
       .withColumn("cos", cosine(col("v_a"), col("v_b")))
       .where(col("cos") >= threshold)
       .select(col("id_a"), col("id_b"), round(col("cos"), 4).as("cos"))

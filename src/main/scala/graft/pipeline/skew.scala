@@ -158,6 +158,14 @@ object Skew {
     saltedLarge.join(saltedSmall, keyCols :+ "_salt", joinType).drop("_salt")
   }
 
+  /** The verify joins' salting parameters, read at plan construction:
+    * `graft.skew.saltAt` (an id salts once it is in more candidate pairs
+    * than this; default 1M) and `graft.skew.saltFactor` (salts per hot id;
+    * default 16). */
+  private def saltParams(spark: org.apache.spark.sql.SparkSession): (Long, Int) = (
+    spark.conf.getOption("graft.skew.saltAt").fold(1000000L)(_.toLong),
+    spark.conf.getOption("graft.skew.saltFactor").fold(16)(_.toInt))
+
   /** The LSH verify-join specialization of [[adaptiveSaltedJoin]]: join a
     * candidate-pair frame `(id_a, id_b, …)` against per-id payload sides
     * for BOTH ends with ONE shared hot-id detection. The generic form
@@ -168,9 +176,11 @@ object Skew {
     * joins (identical subtree → one exchange). A doc hot in either role
     * salts in both joins — more spreading than strictly needed, which is
     * harmless: salting is output-invariant. Overhead on an unskewed corpus
-    * is one id-only aggregate and one (almost always empty) broadcast. */
-  def saltedVerifyJoin(pairs: DataFrame, sideA: DataFrame, sideB: DataFrame,
-                       hotAt: Long, saltFactor: Int): DataFrame = {
+    * is one id-only aggregate and one (almost always empty) broadcast.
+    * The threshold and factor are the session's [[saltParams]]. */
+  def saltedVerifyJoin(pairs: DataFrame, sideA: DataFrame,
+                       sideB: DataFrame): DataFrame = {
+    val (hotAt, saltFactor) = saltParams(pairs.sparkSession)
     require(saltFactor >= 1, "saltFactor must be >= 1")
     require(hotAt >= 1, "hotAt must be >= 1")
     ensureHotListener(pairs.sparkSession)

@@ -21,10 +21,13 @@ import org.apache.spark.sql.{Column, DataFrame}
   * deployment): the repartition fires ONLY when the frame's actual scan
   * parallelism is below the session's default parallelism — on a healthy
   * layout (row groups ≥ cores, i.e. any real corpus at scale) this is a
-  * no-op and plans are byte-identical. `graft.spread.floor` overrides the
-  * target (0 disables outright).
+  * no-op and plans are byte-identical.
   */
 object Spread {
+
+  /** The size gate: an exchange's fixed cost (task launch, tiny shuffle
+    * files) only amortizes with at least a few hundred KB to spread. */
+  private val MinBytes = 256L * 1024
 
   /** Raise `df`'s partition count to the session's default parallelism by
     * hash-repartitioning on `key` when (and only when) the underlying
@@ -45,20 +48,14 @@ object Spread {
   def scanFloor(df: DataFrame, key: Column, minDeficit: Int = 1,
                 minBytesOverride: Long = 0L): DataFrame = {
     val sess = df.sparkSession
-    val floor = sess.conf.getOption("graft.spread.floor").map(_.toInt)
-      .getOrElse(sess.sparkContext.defaultParallelism)
+    val floor = sess.sparkContext.defaultParallelism
     if (floor <= 1) return df
-    // size gate: an exchange's fixed cost (task launch, tiny shuffle
-    // files) only amortizes with at least a few hundred KB to spread —
-    // toy inputs and unit-test literals must keep their narrow no-shuffle
-    // plans. Estimated plan stats, not an action. A per-site override
-    // raises the gate where the per-row work is light relative to bytes
-    // (the exchange then costs more than the parallelism buys until the
-    // input is well past the session default).
-    val minBytes =
-      if (minBytesOverride > 0L) minBytesOverride
-      else sess.conf.getOption("graft.spread.minBytes").map(_.toLong)
-        .getOrElse(256L * 1024)
+    // size gate ([[MinBytes]]): toy inputs and unit-test literals must keep
+    // their narrow no-shuffle plans. Estimated plan stats, not an action.
+    // A per-site override raises the gate where the per-row work is light
+    // relative to bytes (the exchange then costs more than the parallelism
+    // buys until the input is well past the default).
+    val minBytes = if (minBytesOverride > 0L) minBytesOverride else MinBytes
     if (df.queryExecution.optimizedPlan.stats.sizeInBytes < minBytes) return df
     // The floor exists for SCAN-shaped inputs (one row group = one task).
     // A frame that already carries a shuffle-producing operator is fed by

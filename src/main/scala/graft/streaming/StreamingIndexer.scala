@@ -82,7 +82,9 @@ object StreamingIndexer {
       case None => (-1L, None)
       case Some(raw) => raw.split('|') match {
         case Array(id, lineage) => (id.toLongOption.getOrElse(-1L), Some(lineage))
-        case Array(id) => (id.toLongOption.getOrElse(-1L), None) // pre-r13 marker
+        // a bare id: what markAppliedBatch writes for a direct apply to a
+        // store with no recorded lineage
+        case Array(id) => (id.toLongOption.getOrElse(-1L), None)
         case _ => (-1L, None)
       }
     }

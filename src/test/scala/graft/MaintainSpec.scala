@@ -529,24 +529,29 @@ class MaintainSpec extends AnyFunSuite {
       d +: d.listFiles.toSeq.sortBy(_.getName).filter(f => f.isDirectory &&
         !f.getName.startsWith(".") && !f.getName.startsWith("_") &&
         !f.getName.contains("=")).flatMap(dirs)
-    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
     for {
       d <- dirs(new java.io.File(base)) if StoreFs.hasDataFiles(spark, d.getPath)
       basePath <- Seq(None, Some(d.getPath))
-      problem <- {
-        val what = s"$state ${d.getPath.stripPrefix(base)} basePath=${basePath.isDefined}"
-        val plainReader = basePath.fold(spark.read)(b => spark.read.option("basePath", b))
-        val want = scala.util.Try(plainReader.parquet(d.getPath))
-        val got = scala.util.Try(StoreFs.read(spark, Seq(d.getPath), basePath))
-        (want, got) match {
-          case (scala.util.Success(w), scala.util.Success(g)) =>
-            (if (w.schema != g.schema) Seq(s"$what: schema ${g.schema} != ${w.schema}") else Nil) ++
-              (if (rows(w) != rows(g)) Seq(s"$what: rows differ") else Nil)
-          case (scala.util.Failure(_), scala.util.Failure(_)) => Nil
-          case (w, g) => Seq(s"$what: plain read $w, StoreFs.read $g")
-        }
-      }
+      problem <- readsAsSpark(d.getPath, basePath,
+        s"$state ${d.getPath.stripPrefix(base)} basePath=${basePath.isDefined}")
     } yield problem
+  }
+
+  /** StoreFs.read of `path` gives the plain read's schema and rows, or
+    * both fail. */
+  private def readsAsSpark(path: String, basePath: Option[String],
+                           what: String): Seq[String] = {
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    val plainReader = basePath.fold(spark.read)(b => spark.read.option("basePath", b))
+    val want = scala.util.Try(plainReader.parquet(path))
+    val got = scala.util.Try(StoreFs.read(spark, Seq(path), basePath))
+    (want, got) match {
+      case (scala.util.Success(w), scala.util.Success(g)) =>
+        (if (w.schema != g.schema) Seq(s"$what: schema ${g.schema} != ${w.schema}") else Nil) ++
+          (if (rows(w) != rows(g)) Seq(s"$what: rows differ") else Nil)
+      case (scala.util.Failure(_), scala.util.Failure(_)) => Nil
+      case (w, g) => Seq(s"$what: plain read $w, StoreFs.read $g")
+    }
   }
 
   test("StoreFs.read opens every catalog layout with Spark's own schema and " +
@@ -621,6 +626,27 @@ class MaintainSpec extends AnyFunSuite {
       }
       failures ++= sameAsSparkRead(c, s"crashed/${row.name}/$step")
     }
+
+    // the fixture tables SparkEntry.tbl, Bench, ScaleUp and FixtureManifest
+    // open: one parquet file each
+    val fixture = "/root/testdata/sf0.001"
+    for (t <- FixtureManifest.tables)
+      failures ++= readsAsSpark(s"$fixture/$t.parquet", None, s"fixture $t")
+    // a TIMESTAMP(NANOS) column, which Spark reads only as a raw long under
+    // the session's nanosAsLong (the case SparkEntry.tbl converts back)
+    val nanos = java.nio.file.Files.createTempDirectory("graft_nanos") + "/t.parquet"
+    val nanosType = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message t { required int64 id; required int64 ts (TIMESTAMP(NANOS,false)); }")
+    val writer = org.apache.parquet.hadoop.example.ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(nanos)).withType(nanosType).build()
+    try Seq(1L -> 1700000000123456789L, 2L -> 1700000001000000001L).foreach {
+      case (id, ts) => writer.write(
+        new org.apache.parquet.example.data.simple.SimpleGroupFactory(nanosType)
+          .newGroup().append("id", id).append("ts", ts))
+    } finally writer.close()
+    failures ++= readsAsSpark(nanos, None, "TIMESTAMP(NANOS) file")
+    assert(StoreFs.read(spark, nanos).schema("ts").dataType ==
+      org.apache.spark.sql.types.LongType)
     val all = failures.result()
     assert(all.isEmpty, all.mkString("\n"))
   }

@@ -13,6 +13,23 @@ class PlanSpec extends AnyFunSuite {
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
+  /** `body`'s result and the Spark jobs it launched. */
+  private def jobsDuring[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val tap = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    org.apache.spark.sql.graft.Bridge.drainListeners(spark.sparkContext)
+    spark.sparkContext.addSparkListener(tap)
+    try {
+      val out = body
+      org.apache.spark.sql.graft.Bridge.drainListeners(spark.sparkContext)
+      (out, jobs.get)
+    } finally spark.sparkContext.removeSparkListener(tap)
+  }
+
   test("search row-load joins broadcast the capped hit side (R9)") {
     val plan = planOf("q_search_rowload")
     assert(plan.contains("BroadcastHashJoin"), plan.take(500))
@@ -441,7 +458,7 @@ class PlanSpec extends AnyFunSuite {
        "repartition exchange sneaks under a projection-only query at " +
        "sf0.001, and no trailing cosmetic sort survives") {
     // q_quality_classifier is a pure projection; the r14 scan floor fires
-    // only past graft.spread.minBytes, so the tiny gate corpus must keep
+    // only past Spread's 256 KB size gate, so the tiny gate corpus must keep
     // the zero-exchange plan (at sf0.1+ the same query deliberately
     // carries ONE repartition exchange — guide §2.5)
     val plan = planOf("q_quality_classifier")
@@ -466,23 +483,13 @@ class PlanSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions._
     val docs = spark.read.parquet(s"$dir/documents.parquet")
     val aggregated = docs.groupBy(col("lang")).count()
-    @volatile var jobs = 0
-    val tap = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(tap)
-    try {
-      val out = graft.pipeline.Spread.scanFloor(aggregated, col("lang"))
-      org.apache.spark.sql.graft.Bridge.drainListeners(spark.sparkContext)
-      // the pre-r15 probe materialized .rdd, which under AQE ran the
-      // aggregate's query stage eagerly at plan-build time (then again at
-      // the real action); the gate must return the frame unchanged with
-      // ZERO jobs launched
-      assert(jobs == 0, s"scanFloor launched $jobs job(s) on a shuffle-bearing input")
-      assert(out eq aggregated, "shuffle-bearing input must pass through unchanged")
-    } finally spark.sparkContext.removeSparkListener(tap)
+    val (out, jobs) = jobsDuring(graft.pipeline.Spread.scanFloor(aggregated, col("lang")))
+    // the pre-r15 probe materialized .rdd, which under AQE ran the
+    // aggregate's query stage eagerly at plan-build time (then again at
+    // the real action); the gate must return the frame unchanged with
+    // ZERO jobs launched
+    assert(jobs == 0, s"scanFloor launched $jobs job(s) on a shuffle-bearing input")
+    assert(out eq aggregated, "shuffle-bearing input must pass through unchanged")
   }
 
   test("r15: the postings build reads the doc store ONCE for all fields " +
@@ -529,20 +536,17 @@ class PlanSpec extends AnyFunSuite {
     graft.pipeline.Dedup.writeSketchStore(Seq((1L, "spark makes batch fast"),
       (2L, "spark makes batch faster"), (3L, "nothing relevant here"))
       .toDF("doc_id", "text"), path, "text", "doc_id")
-    @volatile var jobs = 0
-    val tap = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    org.apache.spark.sql.graft.Bridge.drainListeners(spark.sparkContext)
-    spark.sparkContext.addSparkListener(tap)
-    try {
-      graft.pipeline.Dedup.deleteFromSketchStore(spark, path, Seq(3L, 3L).toDF("id"))
-      org.apache.spark.sql.graft.Bridge.drainListeners(spark.sparkContext)
-      assert(jobs == 2, s"deleteFromSketchStore launched $jobs job(s)")
-    } finally spark.sparkContext.removeSparkListener(tap)
+    val (_, jobs) = jobsDuring(
+      graft.pipeline.Dedup.deleteFromSketchStore(spark, path, Seq(3L, 3L).toDF("id")))
+    assert(jobs == 2, s"deleteFromSketchStore launched $jobs job(s)")
     assert(graft.StoreFs.read(spark, path).select("id").as[Long].collect().sorted.toSeq ==
       Seq(1L, 2L))
+  }
+
+  test("fixture tables open with no job: building q_doc_projection " +
+       "launches none before its action") {
+    val (built, jobs) = jobsDuring(SparkEntry.queries("q_doc_projection")(spark, dir))
+    assert(jobs == 0, s"building q_doc_projection launched $jobs job(s)")
+    assert(built.count() > 0)
   }
 }

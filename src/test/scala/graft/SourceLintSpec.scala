@@ -6,18 +6,22 @@ import org.scalatest.funsuite.AnyFunSuite
   * newline, tab and carriage return (a raw NUL makes `grep` treat the file
   * as binary); the store swap protocol and marker format stay in ONE
   * module — renames and raw file opens/creates appear only in the
-  * store-lifecycle kernel ([[StoreFs]]); stores open through
-  * [[StoreFs.read]]; "term matches" has one definition,
-  * [[QueryCompiler.termMatch]]; and the index analyzer has one,
-  * [[graft.functions.WordRuns]]. */
+  * store-lifecycle kernel ([[StoreFs]]); parquet data (stores and fixture
+  * tables alike) opens through [[StoreFs.read]]; "term matches" has one
+  * definition, [[QueryCompiler.termMatch]]; and the index analyzer has
+  * one, [[graft.functions.WordRuns]]. Over `src/main/scala` and
+  * `src/test/scala`: sessions are built only by
+  * [[SparkEntry.localSession]]. */
 class SourceLintSpec extends AnyFunSuite {
 
   private val Kernel = "storefs.scala"
 
-  private def sources: Seq[java.io.File] = {
-    val root = Seq("src/main/scala", "../src/main/scala")
+  private def sources: Seq[java.io.File] = sourcesUnder("src/main/scala")
+
+  private def sourcesUnder(tree: String): Seq[java.io.File] = {
+    val root = Seq(tree, s"../$tree")
       .map(new java.io.File(_)).find(_.isDirectory)
-      .getOrElse(fail("cannot locate src/main/scala"))
+      .getOrElse(fail(s"cannot locate $tree"))
     def walk(d: java.io.File): Seq[java.io.File] =
       d.listFiles.toSeq.sortBy(_.getName).flatMap(f =>
         if (f.isDirectory) walk(f) else Seq(f).filter(_.getName.endsWith(".scala")))
@@ -46,23 +50,31 @@ class SourceLintSpec extends AnyFunSuite {
 
   /** `token` occurrences in the whitespace-collapsed text of every source
     * (so a call split over lines still counts), as (file, offset, text). */
-  private def calls(token: scala.util.matching.Regex): Seq[(java.io.File, Int, String)] =
+  private def calls(token: scala.util.matching.Regex,
+                    files: Seq[java.io.File] = sources): Seq[(java.io.File, Int, String)] =
     for {
-      f <- sources
+      f <- files
       text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
         .replaceAll("\\s+", " ")
       m <- token.findAllMatchIn(text).toSeq
     } yield (f, m.start, text)
 
   test("parquet stores open through StoreFs.read, not a schema-inferring read") {
-    // besides the kernel, only the fixture loaders; a read given its schema
-    // (scroll's `.read.schema(`) infers nothing and is not matched
-    val allowed = Set(Kernel, "SparkEntry.scala", "Bench.scala", "ScaleUp.scala",
-      "FixtureManifest.scala")
+    // a read given its schema (scroll's `.read.schema(`) infers nothing and
+    // is not matched
     val bad = calls("""\.read ?\.(parquet\(|option\( ?"basePath")""".r).collect {
-      case (f, at, text) if !allowed(f.getName) => s"${f.getPath}: ${text.slice(at, at + 60)}"
+      case (f, at, text) if f.getName != Kernel => s"${f.getPath}: ${text.slice(at, at + 60)}"
     }
     assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("sessions are built only by the one session factory") {
+    val found = calls("""SparkSession ?\.builder""".r,
+        sources ++ sourcesUnder("src/test/scala")).map {
+      case (f, at, text) => s"${f.getPath}: ${text.slice(at, at + 60)}"
+    }
+    assert(found.size == 1 && found.head.contains("SparkEntry.scala:"),
+      found.mkString("\n"))
   }
 
   test("term regexes reach .rlike( only through QueryCompiler.termMatch") {

@@ -4,16 +4,5 @@ import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all Spark suites. */
 object SparkSpecBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  lazy val spark: SparkSession = SparkEntry.localSession(4, "ERROR")
 }
