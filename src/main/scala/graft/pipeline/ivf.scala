@@ -114,31 +114,22 @@ object Ivf {
       .orderBy("list_id").collect()
       .map(_.getSeq[Double](1).toArray)
 
-  /** Insert-only probe for the ANN cell stores — the
-    * [[graft.TextIndex]] `requireInsertOnly` discipline applied to vector
-    * ids. Two checks, one append-blocking error each:
+  /** The input checks of an ANN append, one append-blocking error each —
+    * they judge the batch itself, not a collision with the store:
     *
-    *  - a delta id already PHYSICALLY in `cells` (gated by
-    *    `graft.append.insertCheck` = `error` (default) | `warn` | `off`,
-    *    the same knob as the text stores): blind-appending it would serve
-    *    the same id twice with possibly different vectors — silent skew.
-    *  - a delta id currently TOMBSTONED (`deletes` sidecar): raised
-    *    REGARDLESS of the knob, because the failure mode is worse than
-    *    skew — the serve-time tombstone filter would silently hide the
-    *    freshly appended row too, so the insert would simply not exist.
-    *    Compact first ([[graft.Maintain.compactAnnIndex]]), then append.
+    *  - an id twice in the batch: both rows would serve it forever, and
+    *    with no version column there is no winner to pick;
+    *  - an id currently TOMBSTONED (`deletes` sidecar): the serve-time
+    *    tombstone filter would silently hide the freshly appended row too,
+    *    so the insert would simply not exist. Compact first
+    *    ([[graft.Maintain.compactAnnIndex]]), then append.
     *
-    * Cost: one id-column-pruned scan of cells + one of the (delete-sized)
-    * tombstone sidecar, each semi-joined against the broadcast,
+    * Cost: one grouping of the batch's ids + one scan of the
+    * (delete-sized) tombstone sidecar semi-joined against the broadcast,
     * batch-sized delta keys. */
-  private[graft] def requireAnnInsertOnly(spark: SparkSession, path: String,
-                                             deltaIds: DataFrame, idCol: String,
-                                             what: String): Unit = {
-    // intra-batch duplicates are checked FIRST, unconditionally: two rows
-    // with the same id in one append serve that id twice forever (the
-    // store-collision probe can't see them — neither is in the store yet),
-    // and there is no version column to pick a winner by, so the batch is
-    // malformed and must raise, not silently double-serve
+  private def requireAnnBatch(spark: SparkSession, path: String,
+                              deltaIds: DataFrame, keys: DataFrame,
+                              idCol: String, what: String): Unit = {
     val dup = deltaIds.groupBy(col(idCol)).count().where(col("count") > 1)
       .limit(5).collect().map(_.get(0)).toSeq
     if (dup.nonEmpty)
@@ -146,7 +137,6 @@ object Ivf {
         s"$what: batch contains duplicate id(s) ${dup.mkString(", ")} — an " +
           "append would serve the same id twice. Deduplicate upstream " +
           "(vectors carry no version column to resolve a winner here).")
-    val keys = deltaIds.select(col(idCol)).distinct()
     if (graft.StoreFs.hasDataFiles(spark, s"$path/deletes")) {
       val shadowed = graft.StoreFs.read(spark, s"$path/deletes")
         .join(broadcast(keys), Seq(idCol), "left_semi")
@@ -158,22 +148,31 @@ object Ivf {
             "serve-time delete filter. Run Maintain.compactAnnIndex to " +
             "apply the tombstones, then append.")
     }
-    val mode = spark.conf.getOption("graft.append.insertCheck").getOrElse("error")
-    if (mode == "off" || !graft.StoreFs.hasDataFiles(spark, s"$path/cells")) return
-    val collided = graft.StoreFs.read(spark, s"$path/cells")
-      .select(col(idCol))
-      .join(broadcast(keys), Seq(idCol), "left_semi")
-      .limit(5).collect().map(_.get(0)).toSeq
-    if (collided.nonEmpty) {
-      val msg = s"$what: insert-only contract violated — id(s) " +
-        s"${collided.mkString(", ")} already exist in $path/cells. " +
-        "Blind-appending an edited vector serves the same id twice; " +
-        "deleteFromIndex + compactAnnIndex first for edits, or set " +
-        "graft.append.insertCheck=off if freshness is guaranteed upstream."
-      if (mode == "warn")
-        org.slf4j.LoggerFactory.getLogger(Ivf.getClass).warn(msg)
-      else throw new IllegalArgumentException(msg)
-    }
+  }
+
+  /** Append a layout's cells `delta` — the assigned rows of
+    * [[appendToIndex]] or the code rows of [[Pq.appendToIvfPqIndex]] —
+    * to the store at `path`, under the append contract
+    * [[graft.StoreFs.appendNeeded]] on the ids (comparing `cols` on a
+    * `replay`) and after the input checks of [[requireAnnBatch]]. A fresh
+    * batch runs the input checks first: a tombstoned id is still stored
+    * until compaction and must be reported as tombstoned. A replay runs
+    * them only when it appends — a converged replay writes nothing. */
+  private[graft] def appendCells(spark: SparkSession, path: String,
+                                 delta: DataFrame, idCol: String,
+                                 cols: Seq[String], replay: Boolean,
+                                 what: String,
+                                 differs: String = "content"): Unit = {
+    val cells = s"$path/cells"
+    val ids = delta.select(col(idCol))
+    val keys = ids.distinct()
+    def needed(replay: Boolean) = graft.StoreFs.appendNeeded(cells,
+      graft.StoreFs.read(spark, cells), keys, delta, cols, replay, what,
+      "use deleteFromIndex + compactAnnIndex, then append, for edits", differs)
+    if (replay && !needed(replay = true)) return
+    requireAnnBatch(spark, path, ids, keys, idCol, what)
+    if (!replay) needed(replay = false)
+    delta.write.mode("append").partitionBy("list_id").parquet(cells)
   }
 
   /** Append vectors to a [[writeIndex]] store under its FROZEN centroids —
@@ -184,55 +183,23 @@ object Ivf {
     * build(half)+append(half) equals brute force over the union exactly
     * (the oracle contract), and pruned-probe recall for drifted data
     * degrades exactly as the in-memory path's would — drift means
-    * retrain-and-version. Insert-only, enforced ([[requireAnnInsertOnly]]). */
+    * retrain-and-version. Insert-only, enforced ([[appendCells]]). */
   def appendToIndex(spark: SparkSession, path0: String, newRows: DataFrame,
-                    idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val path = resolveStore(spark, path0)
-    val centroids = readCentroids(spark, path)
-    val normed = newRows.withColumn(vecCol, col(vecCol).cast("array<double>"))
-    requireAnnInsertOnly(spark, path, normed.select(col(idCol)), idCol,
-      "Ivf.appendToIndex")
-    assign(normed, centroids, idCol, vecCol)
-      .write.mode("append").partitionBy("list_id").parquet(s"$path/cells")
-  }
+                    idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
+    appendRows(spark, resolveStore(spark, path0), newRows, idCol, vecCol,
+      replay = false)
 
-  /** Replay probe for [[appendToIndex]] under the streamed crash window
-    * (the [[graft.TextIndex]] `normsReplayNeedsAppend` discipline for the
-    * ANN layout): a crash after the cells append committed but before the
-    * `_graft_batch` marker write redelivers the batch, and the strict
-    * insert-only probe would collide with the batch's OWN keys — a poison
-    * pill. This probe compares CONTENT and writes nothing: the store's
-    * rows for the delta's ids are either absent (crash before the append
-    * job committed → true, append needed), exactly the delta's
-    * deterministic assignment (the append commits atomically → false,
-    * converged), or different — which no self-replay can produce
-    * (assignment under frozen centroids is deterministic), so it raises:
-    * an edited vector wearing a replay's batch id, not redelivery. */
-  private[graft] def replayNeedsAppend(spark: SparkSession, path: String,
-                                       newRows: DataFrame, idCol: String,
-                                       vecCol: String): Boolean = {
-    if (!graft.StoreFs.hasDataFiles(spark, s"$path/cells")) return true
-    val centroids = readCentroids(spark, path)
-    val cmp = Seq(col(idCol), col(vecCol), col("list_id"))
-    val delta = assign(newRows.withColumn(vecCol, col(vecCol).cast("array<double>")),
-      centroids, idCol, vecCol).select(cmp: _*)
-    val keys = delta.select(col(idCol)).distinct()
-    val present = graft.StoreFs.read(spark, s"$path/cells")
-      .join(broadcast(keys), Seq(idCol), "left_semi")
-      .select(cmp: _*)
-    if (present.isEmpty) return true
-    val mismatch = delta.exceptAll(present)
-      .unionByName(present.exceptAll(delta)).limit(5)
-      .collect().map(_.get(0)).distinct.toSeq
-    if (mismatch.nonEmpty)
-      throw new IllegalArgumentException(
-        s"Ivf.appendToIndex (replay): id(s) ${mismatch.mkString(", ")} exist " +
-          s"in $path/cells with DIFFERENT content than this batch — an exact " +
-          "self-replay assigns identically under the frozen centroids, so " +
-          "this is an edited vector, not redelivery. Use deleteFromIndex + " +
-          "compactAnnIndex, then append, for edits.")
-    false // cells already hold exactly this batch's assignment: converged
-  }
+  /** [[appendToIndex]] into a resolved store directory; with `replay`, a
+    * self-replay of a batch whose append may have committed already (the
+    * streamed crash window — assignment under frozen centroids is
+    * deterministic, so its rows are absent, equal, or an edit). */
+  private[graft] def appendRows(spark: SparkSession, path: String,
+                                rows: DataFrame, idCol: String, vecCol: String,
+                                replay: Boolean): Unit =
+    appendCells(spark, path,
+      assign(rows.withColumn(vecCol, col(vecCol).cast("array<double>")),
+        readCentroids(spark, path), idCol, vecCol),
+      idCol, Seq(vecCol, "list_id"), replay, "Ivf.appendToIndex")
 
   /** Tombstone-delete ids from a materialized ANN index (works on both the
     * [[writeIndex]] and [[Pq.writeIvfPqIndex]] layouts — the sidecar only

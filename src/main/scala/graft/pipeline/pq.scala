@@ -184,23 +184,29 @@ object Pq {
     * probe, build(half)+append(half) equals brute force over the union
     * (the oracle contract); under honest configs, quantization error for
     * drifted data degrades exactly as an in-memory re-encode would.
-    * Insert-only, enforced (same probe + `graft.append.insertCheck` knob
-    * as the IVF store; a tombstoned id raises unconditionally). Deletes:
+    * Insert-only, enforced by the same [[Ivf.appendCells]] as the IVF
+    * store (a tombstoned id raises too). Deletes:
     * [[Ivf.deleteFromIndex]] and [[graft.Maintain.compactAnnIndex]] work
     * on this layout unchanged — the sidecar and the swap only touch ids
     * and partitions, never vector payloads. */
   def appendToIvfPqIndex(spark: org.apache.spark.sql.SparkSession, path0: String,
                          newRows: DataFrame, idCol: String = "vec_id",
-                         vecCol: String = "embedding"): Unit = {
-    val path = Ivf.resolveStore(spark, path0)
-    val centroids = Ivf.readCentroids(spark, path)
-    val cb = readCodebooks(spark, path)
-    Ivf.requireAnnInsertOnly(spark, path, newRows.select(col(idCol)), idCol,
-      "Pq.appendToIvfPqIndex")
-    encode(Ivf.assign(newRows, centroids, idCol, vecCol), cb, vecCol)
-      .select(col("list_id"), col(idCol), col("code"))
-      .write.mode("append").partitionBy("list_id").parquet(s"$path/cells")
-  }
+                         vecCol: String = "embedding"): Unit =
+    appendRows(spark, Ivf.resolveStore(spark, path0), newRows, idCol, vecCol,
+      replay = false)
+
+  /** [[appendToIvfPqIndex]] into a resolved store directory — see
+    * [[Ivf.appendRows]]; encoding under the frozen models is deterministic
+    * too, so a replay compares codes. */
+  private[graft] def appendRows(spark: org.apache.spark.sql.SparkSession,
+                                path: String, rows: DataFrame, idCol: String,
+                                vecCol: String, replay: Boolean): Unit =
+    Ivf.appendCells(spark, path,
+      encode(Ivf.assign(rows, Ivf.readCentroids(spark, path), idCol, vecCol),
+        readCodebooks(spark, path), vecCol)
+        .select(col("list_id"), col(idCol), col("code")),
+      idCol, Seq("list_id", "code"), replay, "Pq.appendToIvfPqIndex",
+      differs = "codes")
 
   /** [[graft.pipeline.Ivf.writeVersionedIndex]] for the compressed
     * layout: seeds `path/v1` with a complete [[writeIvfPqIndex]] store
@@ -224,41 +230,6 @@ object Pq {
                         vecCol: String = "embedding"): Int =
     Ivf.bumpVersion(corpus.sparkSession, path)(dir =>
       writeIvfPqIndex(corpus, c, m, dir, ksub, pqIters, ivfIters, idCol, vecCol))
-
-  /** Replay probe for [[appendToIvfPqIndex]] under the streamed crash
-    * window — [[graft.pipeline.Ivf.replayNeedsAppend]] for the compressed
-    * layout: encode+assign under the FROZEN models is deterministic, so
-    * the cells' rows for the delta's ids are either absent (true — append
-    * needed), exactly the delta's (id, list_id, code) (false — the
-    * atomically-committed append already landed, converged), or different
-    * — an edited vector wearing a replay's batch id, which raises. Writes
-    * nothing. */
-  private[graft] def ivfPqReplayNeedsAppend(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      newRows: DataFrame, idCol: String, vecCol: String): Boolean = {
-    if (!graft.StoreFs.hasDataFiles(spark, s"$path/cells")) return true
-    val centroids = Ivf.readCentroids(spark, path)
-    val cb = readCodebooks(spark, path)
-    val cmp = Seq(col(idCol), col("list_id"), col("code"))
-    val delta = encode(Ivf.assign(newRows, centroids, idCol, vecCol), cb, vecCol)
-      .select(cmp: _*)
-    val keys = delta.select(col(idCol)).distinct()
-    val present = graft.StoreFs.read(spark, s"$path/cells")
-      .join(broadcast(keys), Seq(idCol), "left_semi")
-      .select(cmp: _*)
-    if (present.isEmpty) return true
-    val mismatch = delta.exceptAll(present)
-      .unionByName(present.exceptAll(delta)).limit(5)
-      .collect().map(_.get(0)).distinct.toSeq
-    if (mismatch.nonEmpty)
-      throw new IllegalArgumentException(
-        s"Pq.appendToIvfPqIndex (replay): id(s) ${mismatch.mkString(", ")} " +
-          s"exist in $path/cells with DIFFERENT codes than this batch — an " +
-          "exact self-replay encodes identically under the frozen models, " +
-          "so this is an edited vector, not redelivery. Use deleteFromIndex " +
-          "+ compactAnnIndex, then append, for edits.")
-    false // cells already hold exactly this batch's codes: converged
-  }
 
   /** [[ivfPqTopKFromStore]] against a versioned root — resolves the
     * servable version at plan time. */

@@ -655,17 +655,18 @@ object TextStats {
     // the probes scan only the batch's own buckets (r15): the ledger rows
     // a batch key could collide with live where the key hashes
     lazy val own = ledgerFor(spark, path, deltaKeys)
-    // NEW documents only, enforced on the ledger's doc keys (the strict
-    // probe — an edit must subtract first: subtract(ids) then append).
-    // With a batchId the append is REPLAY-CONVERGENT (the streamed text
-    // stores' content-checked discipline): a redelivered batch whose
-    // ledger rows already landed (crash between the ledger append and the
-    // agg merge, or after the merge but before the caller's own marker)
-    // skips the ledger append instead of wedging the strict probe on its
-    // own half-applied keys; same-key-DIFFERENT-counts still raises —
-    // replay tolerance never becomes edit tolerance.
-    val ledgerConverged = batchId.isDefined &&
-      keyedLedgerHoldsBatch(spark, path, delta, key, what, own)
+    // NEW documents only, enforced on the ledger's doc keys
+    // ([[graft.StoreFs.appendNeeded]] — an edit must subtract first:
+    // subtract(ids) then append). With a batchId the append is
+    // REPLAY-CONVERGENT (the streamed text stores' content-checked
+    // discipline): a redelivered batch whose ledger rows already landed
+    // (crash between the ledger append and the agg merge, or after the
+    // merge but before the caller's own marker) skips the ledger append
+    // instead of wedging on its own half-applied keys; same-key-DIFFERENT-
+    // counts still raises — replay tolerance never becomes edit tolerance.
+    val ledgerConverged = !graft.StoreFs.appendNeeded(bydoc, own, deltaKeys,
+      delta, Seq(key, "c"), replay = batchId.isDefined, what,
+      "subtract the old doc first, then append", differs = "counts")
     if (ledgerConverged) {
       // The ledger already holds exactly this batch's rows — either the
       // true crash window (ledger append landed, agg delta didn't) or a
@@ -686,7 +687,6 @@ object TextStats {
         }
       return
     }
-    graft.TextIndex.requireInsertOnly(spark, bydoc, deltaKeys, what, own)
     delta.withColumn("bucket", ledgerBucket(b))
       .write.mode("append").partitionBy("bucket").parquet(bydoc)
     if (batchId.exists(countStoreHoldsBatch(spark, s"$path/agg", _)))
@@ -697,36 +697,6 @@ object TextStats {
     writeCountDelta(spark, s"$path/agg",
       delta.groupBy(col(key)).agg(sum(col("c")).cast("long").as(cnt)),
       key, batchId)
-  }
-
-  /** Content probe for [[appendKeyedCounts]]'s replay convergence: the
-    * ledger's rows for the delta's doc keys are either absent (false —
-    * append needed), exactly the delta (true — the atomically-committed
-    * ledger append already landed), or different — which no self-replay
-    * can produce (per-doc counts are deterministic), so it raises: an
-    * edited doc wearing a replay's batch id. Writes nothing. `own` is the
-    * ledger restricted to the batch's buckets. */
-  private def keyedLedgerHoldsBatch(spark: org.apache.spark.sql.SparkSession,
-                                    path: String, delta: DataFrame,
-                                    key: String, what: String,
-                                    own: => DataFrame): Boolean = {
-    if (!graft.StoreFs.hasDataFiles(spark, s"$path/bydoc")) return false
-    val cols = Seq(col("doc_id"), col(key), col("c"))
-    val keys = delta.select(col("doc_id")).distinct()
-    val present = own
-      .join(broadcast(keys), Seq("doc_id"), "left_semi")
-      .select(cols: _*)
-    if (present.isEmpty) return false
-    val mismatch = delta.select(cols: _*).exceptAll(present)
-      .unionByName(present.exceptAll(delta.select(cols: _*))).limit(5)
-      .collect().map(_.get(0)).distinct.toSeq
-    if (mismatch.nonEmpty)
-      throw new IllegalArgumentException(
-        s"$what (replay): doc(s) ${mismatch.mkString(", ")} exist in " +
-          s"$path/bydoc with DIFFERENT counts than this batch — an exact " +
-          "self-replay would match row-for-row, so this is an edited doc, " +
-          "not redelivery. Subtract the old doc first, then append.")
-    true
   }
 
   /** The delete sweep — see the layout block above for the step-by-step

@@ -423,18 +423,22 @@ object QueryCompiler {
       * closed vertex ring: an XOR chain of per-edge crossing predicates in
       * pure double math (fully codegen'd, no UDF). An edge toggles
       * containment when it crosses the horizontal ray at the point's lat
-      * with the crossing right of its lon; a horizontal edge fails the
-      * first conjunct so its division never matters (false && NULL =
-      * false). Boundary points follow raw double comparison. */
+      * with the crossing right of its lon. A horizontal edge never
+      * crosses the ray (both its ends are on the same side of it), so it
+      * is left out — exactly, and no predicate compares an expression
+      * with itself. A ring whose edges are all horizontal encloses no
+      * area and contains no point.
+      * Boundary points follow raw double comparison. */
     def pointInRing(point: Column, verts: Seq[(Double, Double)]): Column = {
       val pLat = point.getField("lat")
       val pLon = point.getField("lon")
-      verts.zip(verts.tail :+ verts.head).map {
-        case ((latI, lonI), (latJ, lonJ)) =>
+      verts.zip(verts.tail :+ verts.head).collect {
+        case ((latI, lonI), (latJ, lonJ)) if latI != latJ =>
           ((lit(latI) > pLat) =!= (lit(latJ) > pLat)) &&
             pLon < (lit(lonJ - lonI) * (pLat - lit(latI)) /
               lit(latJ - latI) + lit(lonI))
-      }.reduce(_ =!= _) // odd crossings = inside
+      }.reduceOption(_ =!= _) // odd crossings = inside
+        .getOrElse(lit(false))
     }
 
     /** Parse and range-check a {lat, lon} object. */

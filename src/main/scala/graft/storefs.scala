@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -13,7 +14,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * [[swapPartitions]] (named partitions of one), commits new segments
   * through [[commitDir]], and reads or writes its small marker files
   * through [[readMarker]] / [[writeMarker]]. Every store is opened
-  * through [[read]], which resolves the schema with no Spark job.
+  * through [[read]], which resolves the schema with no Spark job. Every
+  * insert-only append asks [[appendNeeded]] first.
   *
   * The swap, for each replaced directory `d`:
   *   1. the replacement is written to a staging dir (`d.swap_tmp` for a
@@ -202,6 +204,60 @@ private[graft] object StoreFs {
       swap(fs, staged, new Path(root, n), new Path(root, s"${Old}_$n"))
     }
     fs.delete(tmp, true)
+  }
+
+  /** The append contract every insert-only store shares — the rebuild's
+    * form of the reference's index-by-`_id` (ElasticIndex.java:470-621):
+    * a batch appends rows only for keys the store does not hold yet.
+    * `store` is the store's rows (by-name: nothing is planned when `path`
+    * holds no data file), `delta` the rows the batch would append and
+    * `keys` its key column (one column, named as in the store). The probe
+    * reads only the stored rows whose key is among `keys`, semi-joined
+    * against them broadcast — they are batch-sized — and writes nothing.
+    *
+    *  - A fresh batch (`replay` false) needs its append unless one of its
+    *    keys is stored already, which raises "insert-only contract
+    *    violated": an edit appended blind would serve its key twice.
+    *  - A self-replay of a batch that may have half-applied (`replay`
+    *    true: a crash after the append committed, before the caller's
+    *    batch marker) needs its append when none of its keys is stored,
+    *    and not when the stored rows equal the delta on the key and
+    *    `cols` as a multiset — the atomically committed append already
+    *    landed. Anything else raises "DIFFERENT `differs`": no self-replay
+    *    of a deterministic delta can produce it, so it is an edit wearing
+    *    a replay's batch id, and replay tolerance never becomes edit
+    *    tolerance.
+    *
+    * `what` names the verb and `edits` how to make an edit instead, both
+    * for the error messages. */
+  def appendNeeded(path: String, store: => DataFrame, keys: DataFrame,
+                   delta: DataFrame, cols: Seq[String], replay: Boolean,
+                   what: String, edits: String,
+                   differs: String = "content"): Boolean = {
+    if (!hasDataFiles(delta.sparkSession, path)) return true
+    val key = keys.columns.head
+    val present = store.join(broadcast(keys), Seq(key), "left_semi")
+    if (!replay) {
+      val hit = present.select(col(key)).limit(5).collect().map(_.get(0))
+      if (hit.nonEmpty)
+        throw new IllegalArgumentException(
+          s"$what: insert-only contract violated — key(s) " +
+            s"${hit.mkString(", ")} already exist in $path. Appending an " +
+            s"edit blind would serve the key twice; $edits.")
+      return true
+    }
+    val compared = (key +: cols).map(col)
+    val stored = present.select(compared: _*)
+    if (stored.isEmpty) return true
+    val batch = delta.select(compared: _*)
+    val mismatch = batch.exceptAll(stored).unionByName(stored.exceptAll(batch))
+      .limit(5).collect().map(_.get(0)).distinct
+    if (mismatch.nonEmpty)
+      throw new IllegalArgumentException(
+        s"$what (replay): key(s) ${mismatch.mkString(", ")} exist in $path " +
+          s"with DIFFERENT $differs than this batch — an exact self-replay " +
+          s"would match row for row, so this is an edit, not redelivery; $edits.")
+    false
   }
 
   /** Add a NEW directory `name` under the existing `path` (a delta

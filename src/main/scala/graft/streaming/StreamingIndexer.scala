@@ -41,7 +41,8 @@ object StreamingIndexer {
     * some append but BEFORE the marker write — is closed per path: a
     * `_graft_batch.pending` marker written before the FIRST append flags
     * the replay, and each store's re-apply is convergent (content-checked
-    * norms, key-probed postings, stamp-checked LM merges — see
+    * norms and postings through [[graft.StoreFs.appendNeeded]],
+    * stamp-checked LM merges — see
     * [[applyInsertServedBatch]]); [[upsertStreamServed]]'s merge-by-key
     * norms + serve-time dedup are replay-idempotent by construction.
     *
@@ -105,6 +106,23 @@ object StreamingIndexer {
     clearPending(spark, storePath)
   }
 
+  /** The marker discipline every per-batch applier shares: an id at or
+    * below the `_graft_batch` marker is skipped whole (false); otherwise
+    * the batch is flagged pending, `apply` runs — told whether the id is
+    * a self-replay of a pending, possibly half-applied batch — and the
+    * marker advances. Returns what `apply` returns: whether the batch
+    * was applied now. */
+  private def applyOnce(spark: org.apache.spark.sql.SparkSession,
+                        storePath: String, id: Long)(
+      apply: Boolean => Boolean): Boolean = {
+    if (id <= lastAppliedBatch(spark, storePath)) return false
+    val replay = readPending(spark, storePath).contains(id)
+    writePending(spark, storePath, id)
+    val applied = apply(replay)
+    markAppliedBatch(spark, storePath, id)
+    applied
+  }
+
   /** Explicit lineage repair: forget the store group's `_graft_batch`
     * marker (and any in-flight pending marker) so a NEW streaming query —
     * with a fresh checkpoint and batch ids restarting at 0 — may take
@@ -137,8 +155,8 @@ object StreamingIndexer {
     graft.StoreFs.writeMarker(spark, dir, name, id.toString)
   }
 
-  private[graft] def readPending(spark: org.apache.spark.sql.SparkSession,
-                                 storePath: String): Option[Long] = {
+  private def readPending(spark: org.apache.spark.sql.SparkSession,
+                          storePath: String): Option[Long] = {
     val (dir, name) = pendingMarker(storePath)
     graft.StoreFs.readLongMarker(spark, dir, name)
   }
@@ -172,9 +190,9 @@ object StreamingIndexer {
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val docs = Indexer.latestPerKey(batch, keyCol, versionCols)
-        if (id > lastAppliedBatch(batch.sparkSession, postingsPath)) {
+        applyOnce(batch.sparkSession, postingsPath, id) { _ =>
           graft.TextIndex.appendPostings(docs, keyCol, fields, postingsPath, nBuckets)
-          markAppliedBatch(batch.sparkSession, postingsPath, id)
+          true
         }
         sink(docs, id)
       }
@@ -185,12 +203,12 @@ object StreamingIndexer {
     * facts, exact under insert-only batches), and optionally the phrase-
     * suggester LM delta. CONTRACT: every key is globally NEW — and the
     * contract is ENFORCED, not trusted: [[graft.TextIndex.appendNorms]]'s
-    * key-collision probe runs FIRST, before any store is touched, so an
-    * in-place edit raises (or warns, per `graft.append.insertCheck`)
-    * instead of silently leaving duplicate norms rows and stale LM
-    * counts. The one norms-store probe covers all three appends — they
-    * share the batch's doc set, and the norms store is the store group's
-    * doc-key authority (the LM tables carry no doc keys). For streams
+    * key-collision probe ([[graft.StoreFs.appendNeeded]]) runs FIRST,
+    * before any store is touched, so an in-place edit raises instead of
+    * silently leaving duplicate norms rows and stale LM counts. The one
+    * norms-store probe covers all three appends — they share the batch's
+    * doc set, and the norms store is the store group's doc-key authority
+    * (the LM tables carry no doc keys). For streams
     * WITH edits use [[upsertStreamServed]]; deduplicate replays upstream
     * with [[exactlyOnceStream]]. Redelivered batches are skipped via the
     * `_graft_batch` marker (see [[lastAppliedBatch]]), and a replay of a
@@ -234,49 +252,44 @@ object StreamingIndexer {
       keyCol: String, fields: Seq[String], postingsPath: String,
       normsPath: String, nBuckets: Int, suggestPath: Option[String] = None,
       suggestField: Option[String] = None,
-      segmentCol: Option[String] = None): Boolean = {
-    val spark = docs.sparkSession
-    if (id <= lastAppliedBatch(spark, postingsPath)) return false
-    // crash-window discipline (r13): the pending marker distinguishes a
-    // SELF-REPLAY of a half-applied batch (crash after some append, before
-    // markAppliedBatch) from a fresh batch. Fresh batches keep the strict
-    // insert-only probe; a replayed id switches each store to its
-    // convergent re-apply — content-checked norms (raises on same-key-
-    // DIFFERENT-content, so replay tolerance never becomes edit
-    // tolerance), key-probed postings, stamp-checked LM merge — so
-    // at-least-once redelivery converges instead of wedging the stream on
-    // its own half-applied keys (insertCheck=error) or silently
-    // double-appending (insertCheck=off).
-    val replay = readPending(spark, postingsPath).contains(id)
-    writePending(spark, postingsPath, id)
-    if (replay) {
-      // probe EVERY store before touching ANY: an edit wearing the
-      // replay's batch id must raise with zero half-mutations (the
-      // postings probe is the strong edit detector — token-level; the
-      // norms probe closes its own store's window)
-      val needPostings = graft.TextIndex.postingsReplayNeedsAppend(docs,
-        keyCol, fields, postingsPath, nBuckets, segmentCol)
-      val needNorms = graft.TextIndex.normsReplayNeedsAppend(docs, keyCol,
-        fields, normsPath)
-      if (needNorms) // strict probe passes: the probe saw no rows for keys
+      segmentCol: Option[String] = None): Boolean =
+    applyOnce(docs.sparkSession, postingsPath, id) { replay =>
+      // crash-window discipline (r13): a fresh batch keeps the strict
+      // insert-only probe; a self-replay of a half-applied batch switches
+      // each store to its convergent re-apply — content-checked norms and
+      // postings ([[graft.StoreFs.appendNeeded]]: same-key-DIFFERENT-
+      // content raises, so replay tolerance never becomes edit tolerance),
+      // stamp-checked LM merge — so at-least-once redelivery converges
+      // instead of wedging the stream on its own half-applied keys.
+      if (replay) {
+        // probe EVERY store before touching ANY: an edit wearing the
+        // replay's batch id must raise with zero half-mutations (the
+        // postings probe is the strong edit detector — token-level; the
+        // norms probe closes its own store's window)
+        val needPostings = graft.TextIndex.postingsReplayNeedsAppend(postingsPath,
+          docs.select(col(keyCol).as("doc_id")),
+          graft.TextIndex.buildPostings(docs, keyCol, fields, nBuckets, segmentCol))
+        val norms = graft.TextIndex.buildNorms(docs, keyCol, fields)
+        val needNorms = graft.TextIndex.normsAppendNeeded(normsPath,
+          norms.select(col("doc_id")), norms, replay = true)
+        if (needNorms) // strict probe passes: the probe saw no rows for keys
+          graft.TextIndex.appendNorms(docs, keyCol, fields, normsPath)
+        if (needPostings)
+          graft.TextIndex.appendPostings(docs, keyCol, fields, postingsPath,
+            nBuckets, segmentCol)
+      } else {
+        // norms first: its insert-only probe is the gate for the whole
+        // group — if the batch edits an existing key, NOTHING is written
         graft.TextIndex.appendNorms(docs, keyCol, fields, normsPath)
-      if (needPostings)
         graft.TextIndex.appendPostings(docs, keyCol, fields, postingsPath,
           nBuckets, segmentCol)
-    } else {
-      // norms first: its insert-only probe is the gate for the whole
-      // group — if the batch edits an existing key, NOTHING is written
-      graft.TextIndex.appendNorms(docs, keyCol, fields, normsPath)
-      graft.TextIndex.appendPostings(docs, keyCol, fields, postingsPath,
-        nBuckets, segmentCol)
+      }
+      // the LM append's atomic delta-dir commit carries the batch id
+      // (r14 delta segments), so it is replay-idempotent on both paths
+      suggestPath.foreach(p => graft.Search.appendSuggestStore(docs,
+        suggestField.getOrElse(fields.head), p, Some(id)))
+      true
     }
-    // the LM append's atomic delta-dir commit carries the batch id
-    // (r14 delta segments), so it is replay-idempotent on both paths
-    suggestPath.foreach(p => graft.Search.appendSuggestStore(docs,
-      suggestField.getOrElse(fields.head), p, Some(id)))
-    markAppliedBatch(spark, postingsPath, id)
-    true
-  }
 
   /** Streamed serving that SURVIVES EDITS — the upsert twin of
     * [[insertStreamServed]], closing the reference's actual contract:
@@ -332,15 +345,14 @@ object StreamingIndexer {
   private[graft] def applyUpsertServedBatch(docs: DataFrame, id: Long,
       keyCol: String, fields: Seq[String], postingsPath: String,
       normsPath: String, nBuckets: Int,
-      segmentCol: Option[String] = None): Boolean = {
-    if (id <= lastAppliedBatch(docs.sparkSession, postingsPath)) return false
-    graft.TextIndex.appendPostings(docs, keyCol, fields, postingsPath,
-      nBuckets, segmentCol, gen = Some(id + 1))
-    graft.TextIndex.upsertNorms(docs, keyCol, fields, normsPath,
-      gen = Some(id + 1))
-    markAppliedBatch(docs.sparkSession, postingsPath, id)
-    true
-  }
+      segmentCol: Option[String] = None): Boolean =
+    applyOnce(docs.sparkSession, postingsPath, id) { _ =>
+      graft.TextIndex.appendPostings(docs, keyCol, fields, postingsPath,
+        nBuckets, segmentCol, gen = Some(id + 1))
+      graft.TextIndex.upsertNorms(docs, keyCol, fields, normsPath,
+        gen = Some(id + 1))
+      true
+    }
 
   /** Streamed ANN-index maintenance — [[insertStreamServed]] for the
     * materialized IVF index ([[graft.pipeline.Ivf.writeIndex]] layout,
@@ -383,19 +395,9 @@ object StreamingIndexer {
     * on the marker contract). Returns true when the batch was applied. */
   private[graft] def applyAnnStreamBatch(batch: DataFrame, id: Long,
       path: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Boolean = {
-    val spark = batch.sparkSession
-    requireNotVersionedRoot(spark, path, "annStreamServed")
-    val cellsPath = s"$path/cells"
-    if (id <= lastAppliedBatch(spark, cellsPath)) return false
-    val replay = readPending(spark, cellsPath).contains(id)
-    writePending(spark, cellsPath, id)
-    if (!replay ||
-        graft.pipeline.Ivf.replayNeedsAppend(spark, path, batch, idCol, vecCol))
-      graft.pipeline.Ivf.appendToIndex(spark, path, batch, idCol, vecCol)
-    markAppliedBatch(spark, cellsPath, id)
-    true
-  }
+      vecCol: String = "embedding"): Boolean =
+    applyCellsBatch(batch, id, path, "annStreamServed")(graft.pipeline.Ivf
+      .appendRows(batch.sparkSession, path, batch, idCol, vecCol, _))
 
   /** [[annStreamServed]] for the COMPRESSED layout
     * ([[graft.pipeline.Pq.writeIvfPqIndex]]): each micro-batch is
@@ -423,18 +425,18 @@ object StreamingIndexer {
     * on the marker contract). Returns true when the batch was applied. */
   private[graft] def applyIvfPqStreamBatch(batch: DataFrame, id: Long,
       path: String, idCol: String = "vec_id",
-      vecCol: String = "embedding"): Boolean = {
+      vecCol: String = "embedding"): Boolean =
+    applyCellsBatch(batch, id, path, "ivfPqStreamServed")(graft.pipeline.Pq
+      .appendRows(batch.sparkSession, path, batch, idCol, vecCol, _))
+
+  /** The streamed ANN appliers' one body: `append` is the layout's
+    * `appendRows`, told whether the batch is a replay — it probes a
+    * replay's content itself. The marker lives next to the cells. */
+  private def applyCellsBatch(batch: DataFrame, id: Long, path: String,
+      what: String)(append: Boolean => Unit): Boolean = {
     val spark = batch.sparkSession
-    requireNotVersionedRoot(spark, path, "ivfPqStreamServed")
-    val cellsPath = s"$path/cells"
-    if (id <= lastAppliedBatch(spark, cellsPath)) return false
-    val replay = readPending(spark, cellsPath).contains(id)
-    writePending(spark, cellsPath, id)
-    if (!replay ||
-        graft.pipeline.Pq.ivfPqReplayNeedsAppend(spark, path, batch, idCol, vecCol))
-      graft.pipeline.Pq.appendToIvfPqIndex(spark, path, batch, idCol, vecCol)
-    markAppliedBatch(spark, cellsPath, id)
-    true
+    requireNotVersionedRoot(spark, path, what)
+    applyOnce(spark, s"$path/cells", id) { replay => append(replay); true }
   }
 
   /** The streamed ANN appenders bind to ONE store directory for the
@@ -495,36 +497,34 @@ object StreamingIndexer {
       idCol: String, textCol: String, n: Int, storePath: String,
       sink: (DataFrame, Long) => Unit): Boolean = {
     val spark = batch.sparkSession
-    if (id <= lastAppliedBatch(spark, storePath)) return false
-    // crash window: the count append landed but the marker write didn't —
-    // the append's own atomic applied marker (r14: the batch-named delta
-    // segment's rename, or the post-compaction `_graft_applied` stamp)
-    // says so. Re-scoring now would read a store that already CONTAINS
-    // the batch (docs self-flag as boilerplate), and the sink already ran
-    // with the correct pre-batch scores before the append — so skip whole.
-    if (readPending(spark, storePath).contains(id) &&
-        graft.pipeline.TextStats.countStoreHoldsBatch(spark, storePath, id)) {
-      markAppliedBatch(spark, storePath, id)
-      return false
+    applyOnce(spark, storePath, id) { replay =>
+      // crash window: the count append landed but the marker write didn't —
+      // the append's own atomic applied marker (r14: the batch-named delta
+      // segment's rename, or the post-compaction `_graft_applied` stamp)
+      // says so. Re-scoring now would read a store that already CONTAINS
+      // the batch (docs self-flag as boilerplate), and the sink already ran
+      // with the correct pre-batch scores before the append — so skip whole.
+      val landed = replay &&
+        graft.pipeline.TextStats.countStoreHoldsBatch(spark, storePath, id)
+      if (!landed) {
+        // materialize the scored frame BEFORE the sink sees it (eager local
+        // checkpoint): the plan reads the store path that appendNgramCounts
+        // rewrites right after the sink returns, so a sink that defers
+        // evaluation would otherwise score docs against a corpus that
+        // already contains them — each doc silently self-flagging as
+        // boilerplate. The checkpoint pins the pre-batch scores no matter
+        // when (or how often) the sink's frame is evaluated.
+        val scored = batch.join(
+            graft.pipeline.TextStats.dupNgramFractionFromStore(
+              batch, textCol, idCol, n, storePath),
+            Seq(idCol), "left")
+          .localCheckpoint(true)
+        sink(scored, id) // scored against the corpus BEFORE this batch
+        graft.pipeline.TextStats.appendNgramCounts(batch, textCol, n,
+          storePath, Some(id))
+      }
+      !landed
     }
-    writePending(spark, storePath, id)
-    // materialize the scored frame BEFORE the sink sees it (eager local
-    // checkpoint): the plan reads the store path that appendNgramCounts
-    // rewrites right after the sink returns, so a sink that defers
-    // evaluation would otherwise score docs against a corpus that already
-    // contains them — each doc silently self-flagging as boilerplate. The
-    // checkpoint pins the pre-batch scores no matter when (or how often)
-    // the sink's frame is evaluated.
-    val scored = batch.join(
-        graft.pipeline.TextStats.dupNgramFractionFromStore(
-          batch, textCol, idCol, n, storePath),
-        Seq(idCol), "left")
-      .localCheckpoint(true)
-    sink(scored, id) // scored against the corpus BEFORE this batch
-    graft.pipeline.TextStats.appendNgramCounts(batch, textCol, n, storePath,
-      Some(id))
-    markAppliedBatch(spark, storePath, id)
-    true
   }
 
   /** W12 streaming: exactly-once ingest with BOUNDED state. The batch twin

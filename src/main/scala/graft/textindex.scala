@@ -90,7 +90,15 @@ object TextIndex {
     * postings leave with their segment. */
   def buildPostings(docs: DataFrame, idCol: String, fields: Seq[String],
                     nBuckets: Int = 64,
-                    segmentCol: Option[String] = None): DataFrame = {
+                    segmentCol: Option[String] = None): DataFrame =
+    postingsOf(docs, idCol, fields, nBuckets, segmentCol, positional = false)
+
+  /** The one postings builder behind [[buildPostings]] and
+    * [[buildPostingsPositional]]; `positional` adds each token's word-run
+    * index and collects them per posting. */
+  private def postingsOf(docs: DataFrame, idCol: String, fields: Seq[String],
+                         nBuckets: Int, segmentCol: Option[String],
+                         positional: Boolean): DataFrame = {
     require(fields.nonEmpty, "index at least one field")
     require(nBuckets > 0, "nBuckets must be positive")
     val segSel = segmentCol.map(col).toSeq
@@ -98,6 +106,9 @@ object TextIndex {
     // tokenize dominates bytes: raise the scan floor once (guide §2.5) so
     // a single-row-group corpus doesn't tokenize on one task
     val spreadDocs = graft.pipeline.Spread.scanFloor(docs, col(idCol))
+    def explodeTokens(toks: org.apache.spark.sql.Column) =
+      if (positional) posexplode(toks).as(Seq("pos", "token"))
+      else explode(toks).as("token")
     // ONE scan feeds every field (guide §6: read once — r14 unioned one
     // select per field, scanning the doc store `fields.size` times): the
     // fields fan out as an in-row (field, tokens) struct array, and the
@@ -107,7 +118,7 @@ object TextIndex {
     // the index-create query).
     val tokenized =
       if (fields.size == 1)
-        spreadDocs.select((Seq(explode(tokensOf(col(fields.head))).as("token"),
+        spreadDocs.select((Seq(explodeTokens(tokensOf(col(fields.head))),
           lit(fields.head).as("field"), col(idCol).as("doc_id")) ++ segSel): _*)
       else {
         val ftArr = array(fields.map(f =>
@@ -116,11 +127,14 @@ object TextIndex {
           .select((Seq(col(idCol).as("doc_id")) ++ segSel :+
             explode(ftArr).as("_ft")): _*)
           .select((Seq(col("_ft.field").as("field"), col("doc_id")) ++
-            segNames.map(col) :+ explode(col("_ft.toks")).as("token")): _*)
+            segNames.map(col) :+ explodeTokens(col("_ft.toks"))): _*)
       }
-    tokenized
+    val tf = count(lit(1)).cast("int").as("tf")
+    val grouped = tokenized
       .groupBy((Seq("token", "field", "doc_id") ++ segNames).map(col): _*)
-      .agg(count(lit(1)).cast("int").as("tf"))
+    (if (positional)
+       grouped.agg(tf, sort_array(collect_list(col("pos"))).as("positions"))
+     else grouped.agg(tf))
       .withColumn("bucket", pmod(xxhash64(col("token")), lit(nBuckets)).cast("int"))
   }
 
@@ -151,34 +165,8 @@ object TextIndex {
     * proven superset, never an exact answer — verification stays. */
   def buildPostingsPositional(docs: DataFrame, idCol: String, fields: Seq[String],
                               nBuckets: Int = 64,
-                              segmentCol: Option[String] = None): DataFrame = {
-    require(fields.nonEmpty, "index at least one field")
-    require(nBuckets > 0, "nBuckets must be positive")
-    val segSel = segmentCol.map(col).toSeq
-    val segNames = segmentCol.toSeq
-    val spreadDocs = graft.pipeline.Spread.scanFloor(docs, col(idCol))
-    // one scan for all fields, as in [[buildPostings]] (same single-field
-    // fast path)
-    val tokenized =
-      if (fields.size == 1)
-        spreadDocs.select((Seq(posexplode(
-          tokensOf(col(fields.head))).as(Seq("pos", "token")),
-          lit(fields.head).as("field"), col(idCol).as("doc_id")) ++ segSel): _*)
-      else {
-        val ftArr = array(fields.map(f =>
-          struct(lit(f).as("field"), tokensOf(col(f)).as("toks"))): _*)
-        spreadDocs
-          .select((Seq(col(idCol).as("doc_id")) ++ segSel :+
-            explode(ftArr).as("_ft")): _*)
-          .select((Seq(col("_ft.field").as("field"), col("doc_id")) ++
-            segNames.map(col) :+ posexplode(col("_ft.toks")).as(Seq("pos", "token"))): _*)
-      }
-    tokenized
-      .groupBy((Seq("token", "field", "doc_id") ++ segNames).map(col): _*)
-      .agg(count(lit(1)).cast("int").as("tf"),
-        sort_array(collect_list(col("pos"))).as("positions"))
-      .withColumn("bucket", pmod(xxhash64(col("token")), lit(nBuckets)).cast("int"))
-  }
+                              segmentCol: Option[String] = None): DataFrame =
+    postingsOf(docs, idCol, fields, nBuckets, segmentCol, positional = true)
 
   /** Candidate doc ids for a literal phrase over a positional store: every
     * word run of the phrase present in the field AND an increasing position
@@ -264,135 +252,44 @@ object TextIndex {
     * frequency-stats caveat — an in-place doc EDIT would leave two dl
     * rows for the key and silently skew BM25 length normalization; use
     * [[upsertNorms]] (merge-by-key) or [[reindexSegment]]-style repair
-    * for edits. The contract is ENFORCED, not trusted: a key-collision
-    * probe (one doc_id-only pruned scan of the store, batch-sized
-    * output) raises on an already-present key — a violated contract is
-    * a silent wrong answer, so it must be loud. Gate with
-    * `graft.append.insertCheck` = `error` (default) | `warn` | `off`
-    * (off for ingest paths that guarantee key-freshness upstream and
-    * don't want the per-append store scan). */
+    * for edits. The contract is ENFORCED, not trusted: the append asks
+    * [[StoreFs.appendNeeded]] first (one doc_id-pruned scan of the store,
+    * batch-sized output), which raises on an already-present key — a
+    * violated contract is a silent wrong answer, so it must be loud. */
   def appendNorms(newDocs: DataFrame, idCol: String, fields: Seq[String],
                   path: String): Unit = {
     val delta = buildNorms(newDocs, idCol, fields)
-    requireInsertOnly(newDocs.sparkSession, path,
-      delta.select(col("doc_id")).distinct(), "appendNorms")
+    normsAppendNeeded(path, delta.select(col("doc_id")).distinct(), delta,
+      replay = false)
     delta.write.mode("append").parquet(path)
   }
 
-  /** Replay probe for [[appendNorms]] when a batch may be an
-    * at-least-once REPLAY of itself (the streamed insert path's crash
-    * window: norms landed, the `_graft_batch` marker didn't — see
-    * [[graft.streaming.StreamingIndexer.insertStreamServed]]). The strict
+  /** [[StoreFs.appendNeeded]] for a norms `delta` ([[buildNorms]] rows)
+    * and its `doc_id` `keys`.
+    * With `replay` it is the probe of a batch that may be an at-least-once
+    * replay of itself (the streamed insert path's crash window: norms
+    * landed, the `_graft_batch` marker didn't — see
+    * [[graft.streaming.StreamingIndexer.insertStreamServed]]), where the
     * key-only probe would see the batch's OWN half-applied keys and throw
-    * forever — a poison pill. This probe compares CONTENT and WRITES
-    * NOTHING (the caller probes every store in the group before touching
-    * any, so an edit raises with zero half-mutations): the store's rows
-    * for the delta's keys are either absent (crash before the norms job
-    * committed → true, append needed), exactly the delta (the append job
-    * commits atomically → false, converged), or different — which no
-    * crash of this batch can produce, so it is a genuine contract
-    * violation (an edited key smuggled into a replay) and raises
-    * regardless of `graft.append.insertCheck`: replay tolerance must not
-    * become edit tolerance. Cost over the strict probe: one extra
-    * batch-keys-restricted store read — paid only on detected replays. */
-  private[graft] def normsReplayNeedsAppend(
-      newDocs: DataFrame, idCol: String, fields: Seq[String],
-      path: String): Boolean = {
-    val spark = newDocs.sparkSession
-    if (!StoreFs.hasDataFiles(spark, path)) return true
-    val delta = buildNorms(newDocs, idCol, fields)
-      .select(col("doc_id"), col("field"), col("dl"))
-    val keys = delta.select(col("doc_id"))
-    val present = StoreFs.read(spark, path)
-      .join(broadcast(keys), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), col("field"), col("dl"))
-    if (present.isEmpty) return true
-    val mismatch = delta.exceptAll(present)
-      .unionByName(present.exceptAll(delta)).limit(5)
-      .collect().map(r => r.get(0)).distinct.toSeq
-    if (mismatch.nonEmpty)
-      throw new IllegalArgumentException(
-        s"appendNorms (replay): key(s) ${mismatch.mkString(", ")} exist in " +
-          s"$path with DIFFERENT content than this batch — an exact " +
-          "self-replay would match row-for-row, so this is an edited key, " +
-          "not redelivery. Use upsertNorms / reindexSegment for edits.")
-    false // store already holds exactly this batch's rows: converged
-  }
+    * forever. */
+  private[graft] def normsAppendNeeded(path: String, keys: DataFrame,
+                                       delta: DataFrame,
+                                       replay: Boolean): Boolean =
+    StoreFs.appendNeeded(path, StoreFs.read(delta.sparkSession, path), keys,
+      delta, Seq("field", "dl"), replay, "appendNorms",
+      "use upsertNorms / reindexSegment for edits")
 
-  /** Replay probe for [[appendPostings]] under the same self-replay crash
-    * window as [[normsReplayNeedsAppend]] — and the deeper content check
-    * of the pair: norms carry only token COUNTS, so a same-length edit
-    * smuggled into a replay sails past the norms compare; the postings
-    * rows carry the token multiset, which any edit must change. Writes
-    * nothing. Store rows for the batch's keys are absent (true — append
-    * needed), exactly the batch's delta on (doc_id, field, token, tf)
-    * (atomically-committed append already landed → false, converged), or
-    * different → raise: that is an edit wearing a replay's batch id, not
-    * redelivery. */
-  private[graft] def postingsReplayNeedsAppend(
-      newDocs: DataFrame, idCol: String, fields: Seq[String], path: String,
-      nBuckets: Int, segmentCol: Option[String] = None): Boolean = {
-    val spark = newDocs.sparkSession
-    if (!StoreFs.hasDataFiles(spark, path)) return true
-    val cols = Seq("doc_id", "field", "token", "tf").map(col)
-    val delta = buildPostings(newDocs, idCol, fields, nBuckets, segmentCol)
-      .select(cols: _*)
-    val keys = newDocs.select(col(idCol).as("doc_id"))
-    val present = StoreFs.read(spark, path)
-      .join(broadcast(keys), Seq("doc_id"), "left_semi")
-      .select(cols: _*)
-    if (present.isEmpty) return true
-    val mismatch = delta.exceptAll(present)
-      .unionByName(present.exceptAll(delta)).limit(5)
-      .collect().map(_.get(0)).distinct.toSeq
-    if (mismatch.nonEmpty)
-      throw new IllegalArgumentException(
-        s"appendPostings (replay): key(s) ${mismatch.mkString(", ")} exist " +
-          s"in $path with DIFFERENT content than this batch — an exact " +
-          "self-replay would match row-for-row, so this is an edited key, " +
-          "not redelivery. Use the upsert-served path / reindexSegment for " +
-          "edits.")
-    false // store already holds exactly this batch's postings: converged
-  }
-
-  /** Enforcement for the insert-only append contracts: raise (or warn,
-    * per `graft.append.insertCheck`) when any delta key already exists in
-    * the store — turning the silent BM25 skew of a violated contract into
-    * a loud failure. Cost: one single-column scan of the store semi-joined
-    * against the (broadcast, batch-sized) delta keys. The suggest/LM
-    * stores carry no doc keys, so THEIR contract is enforced where doc
-    * identity exists: [[graft.streaming.StreamingIndexer.insertStreamServed]]
-    * probes the norms store once per micro-batch before any append. */
-  private[graft] def requireInsertOnly(spark: SparkSession, path: String,
-                                       deltaKeys: DataFrame,
-                                       what: String): Unit =
-    requireInsertOnly(spark, path, deltaKeys, what, StoreFs.read(spark, path))
-
-  /** As above, probing a caller-supplied view of the store instead of the
-    * full table — the bucketed keyed ledgers pass their partition-pruned
-    * read (r15), so the per-append collision probe stops scanning the
-    * whole store. `store` is by-name: nothing is planned when the check
-    * is off or the store is empty. */
-  private[graft] def requireInsertOnly(spark: SparkSession, path: String,
-                                       deltaKeys: DataFrame, what: String,
-                                       store: => DataFrame): Unit = {
-    val mode = spark.conf.getOption("graft.append.insertCheck").getOrElse("error")
-    if (mode == "off" || !StoreFs.hasDataFiles(spark, path)) return
-    val collided = store
-      .select(col("doc_id"))
-      .join(broadcast(deltaKeys.select(col("doc_id"))), Seq("doc_id"), "left_semi")
-      .limit(5).collect().map(_.get(0)).toSeq
-    if (collided.nonEmpty) {
-      val msg = s"$what: insert-only contract violated — key(s) " +
-        s"${collided.mkString(", ")} already exist in $path. Blind-appending " +
-        "an edited doc leaves duplicate rows and silently skews BM25 " +
-        "length/frequency stats; use upsertNorms / reindexSegment for edits, " +
-        "or set graft.append.insertCheck=off if freshness is guaranteed upstream."
-      if (mode == "warn")
-        org.slf4j.LoggerFactory.getLogger(TextIndex.getClass).warn(msg)
-      else throw new IllegalArgumentException(msg)
-    }
-  }
+  /** The replay probe of [[appendPostings]] for a postings `delta`
+    * ([[buildPostings]] rows) and its `doc_id` `keys`, under the same crash window as
+    * [[normsAppendNeeded]] — and the deeper content check of the pair:
+    * norms carry only token COUNTS, so a same-length edit smuggled into a
+    * replay sails past the norms compare; the postings rows carry the
+    * token multiset, which any edit must change. */
+  private[graft] def postingsReplayNeedsAppend(path: String, keys: DataFrame,
+                                               delta: DataFrame): Boolean =
+    StoreFs.appendNeeded(path, StoreFs.read(delta.sparkSession, path), keys,
+      delta, Seq("field", "token", "tf"), replay = true, "appendPostings",
+      "use the upsert-served path / reindexSegment for edits")
 
   /** Merge-by-key norms maintenance — the EDIT-tolerant twin of
     * [[appendNorms]]: norms are per-(doc, field) facts, so an upsert batch

@@ -127,17 +127,13 @@ class IvfSpec extends AnyFunSuite {
       Ivf.appendToIndex(spark, path, corpus.where(col("vec_id") === 1)))
     assert(e.getMessage.contains("insert-only"))
     // a batch carrying the same NEW id twice is malformed — it would serve
-    // the id twice and the store probe can't see it; raises even with the
-    // insert check off
-    spark.conf.set("graft.append.insertCheck", "off")
-    try {
-      val dup = corpus.where(col("vec_id") === 1)
-        .unionByName(corpus.where(col("vec_id") === 1))
-        .withColumn("vec_id", col("vec_id") + 1000)
-      val e2 = intercept[IllegalArgumentException](
-        Ivf.appendToIndex(spark, path, dup))
-      assert(e2.getMessage.contains("duplicate id"))
-    } finally spark.conf.unset("graft.append.insertCheck")
+    // the id twice and the store probe can't see it
+    val dup = corpus.where(col("vec_id") === 1)
+      .unionByName(corpus.where(col("vec_id") === 1))
+      .withColumn("vec_id", col("vec_id") + 1000)
+    val e2 = intercept[IllegalArgumentException](
+      Ivf.appendToIndex(spark, path, dup))
+    assert(e2.getMessage.contains("duplicate id"))
   }
 
   test("r13: recallAtK is robust to duplicated rows on either side — " +
@@ -172,14 +168,11 @@ class IvfSpec extends AnyFunSuite {
     val served = Ivf.topKFromStore(spark, path, queries, k = 5, nprobe = 2)
     assert(pairs(served) == pairs(Similarity.bruteForceTopK(survivors, queries, k = 5)))
     assert(!served.collect().map(_.getLong(1)).toSet.exists(Set(2L, 4L)))
-    // a tombstoned id refuses re-insert EVEN with the insert check off —
-    // the serve-time filter would silently hide the new row
-    spark.conf.set("graft.append.insertCheck", "off")
-    try {
-      val e = intercept[IllegalArgumentException](
-        Ivf.appendToIndex(spark, path, corpus.where(col("vec_id") === 2)))
-      assert(e.getMessage.contains("tombstoned"))
-    } finally spark.conf.unset("graft.append.insertCheck")
+    // a tombstoned id refuses re-insert — the serve-time filter would
+    // silently hide the new row
+    val e = intercept[IllegalArgumentException](
+      Ivf.appendToIndex(spark, path, corpus.where(col("vec_id") === 2)))
+    assert(e.getMessage.contains("tombstoned"))
     // compact: physical removal, sidecar cleared, serving unchanged
     val (removed, parts) = Maintain.compactAnnIndex(spark, path)
     assert(removed == 2L && parts >= 1)

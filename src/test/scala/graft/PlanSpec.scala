@@ -549,4 +549,72 @@ class PlanSpec extends AnyFunSuite {
     assert(jobs == 0, s"building q_doc_projection launched $jobs job(s)")
     assert(built.count() > 0)
   }
+
+  // The append-contract probe (StoreFs.appendNeeded) on each store's
+  // append path, pinned at the job counts the per-store probes it
+  // replaced ran: the one kernel adds no job to any of them.
+  private def tmpDir(name: String) =
+    java.nio.file.Files.createTempDirectory(name).toString
+
+  test("append-contract jobs: appendNorms on a fresh batch") {
+    import spark.implicits._
+    val path = s"${tmpDir("graft_pin_norms")}/norms"
+    TextIndex.buildNorms(Seq((1L, "alpha beta"), (2L, "gamma delta words"))
+      .toDF("doc_id", "text"), "doc_id", Seq("text")).write.parquet(path)
+    val (_, jobs) = jobsDuring(TextIndex.appendNorms(
+      Seq((3L, "fresh doc")).toDF("doc_id", "text"), "doc_id", Seq("text"), path))
+    assert(jobs == 4, s"appendNorms launched $jobs job(s)")
+    assert(StoreFs.read(spark, path).count() == 3)
+  }
+
+  test("append-contract jobs: appendNgramCountsKeyed fresh without a " +
+       "batchId, and an exact replay with one") {
+    import spark.implicits._
+    val path = tmpDir("graft_pin_keyed")
+    graft.pipeline.TextStats.writeNgramCountsKeyed(Seq((1, "the quick brown fox"),
+      (2, "the quick brown cat")).toDF("id", "text"), "text", "id", 2, path)
+    val (_, fresh) = jobsDuring(graft.pipeline.TextStats.appendNgramCountsKeyed(
+      Seq((3, "a quick red fox")).toDF("id", "text"), "text", "id", 2, path))
+    assert(fresh == 11, s"fresh keyed append launched $fresh job(s)")
+    val b = Seq((4, "x y z")).toDF("id", "text")
+    graft.pipeline.TextStats.appendNgramCountsKeyed(b, "text", "id", 2, path,
+      batchId = Some(7L))
+    val rows = StoreFs.read(spark, s"$path/bydoc").count()
+    val (_, replay) = jobsDuring(graft.pipeline.TextStats.appendNgramCountsKeyed(
+      b, "text", "id", 2, path, batchId = Some(7L)))
+    assert(replay == 11, s"keyed replay launched $replay job(s)")
+    assert(StoreFs.read(spark, s"$path/bydoc").count() == rows)
+  }
+
+  test("append-contract jobs: Ivf.appendToIndex") {
+    import spark.implicits._
+    val path = tmpDir("graft_pin_ivf")
+    val corpus = (0 until 20).map { i =>
+      (i.toLong, if (i % 2 == 0) Array(1.0, 0.1 * (i % 3)) else Array(0.1 * (i % 3), 1.0))
+    }.toDF("vec_id", "embedding")
+    graft.pipeline.Ivf.writeIndex(corpus.where($"vec_id" < 10), c = 2, path, iters = 2)
+    val (_, jobs) = jobsDuring(
+      graft.pipeline.Ivf.appendToIndex(spark, path, corpus.where($"vec_id" >= 10)))
+    assert(jobs == 10, s"Ivf.appendToIndex launched $jobs job(s)")
+    assert(StoreFs.read(spark, s"$path/cells").count() == 20)
+  }
+
+  test("append-contract jobs: a pending-replay applyInsertServedBatch " +
+       "(norms landed, postings did not)") {
+    import spark.implicits._
+    val base = tmpDir("graft_pin_replay")
+    val (pp, np) = (s"$base/postings", s"$base/norms")
+    val seed = Seq((1L, "spark makes batch fast")).toDF("doc_id", "text")
+    TextIndex.writePostings(TextIndex.buildPostings(seed, "doc_id", Seq("text"), 8), pp)
+    TextIndex.buildNorms(seed, "doc_id", Seq("text")).write.parquet(np)
+    val b1 = Seq((2L, "fresh spark content"), (3L, "more batch data"))
+      .toDF("doc_id", "text")
+    graft.streaming.StreamingIndexer.writePending(spark, pp, 1L)
+    TextIndex.appendNorms(b1, "doc_id", Seq("text"), np)
+    val (applied, jobs) = jobsDuring(graft.streaming.StreamingIndexer
+      .applyInsertServedBatch(b1, 1L, "doc_id", Seq("text"), pp, np, 8))
+    assert(applied)
+    assert(jobs == 11, s"pending-replay apply launched $jobs job(s)")
+    assert(StoreFs.read(spark, np).count() == 3)
+  }
 }

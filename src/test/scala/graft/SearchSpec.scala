@@ -1064,6 +1064,34 @@ class SearchSpec extends AnyFunSuite {
       .getMessage.contains("at least 3"))
   }
 
+  test("geo_polygon: a rectangle's horizontal edges add no self-equal " +
+       "predicate, and a ring of horizontal edges contains nothing") {
+    val pts = Seq(
+      ("in", 5.0, 5.0), ("out", 15.0, 5.0), ("neg", -1.0, 5.0),
+      ("notch", 8.0, 8.0))
+      .toDF("doc_id", "lat", "lon")
+      .select(col("doc_id"), struct(col("lat"), col("lon")).as("loc"))
+    def polygon(points: String) = Search.search(pts,
+      s"""{"query": {"geo_polygon": {"loc": {"points": [$points]}}},
+          "size": 10}""", IndexConfig(), Seq("doc_id"))
+    def selfEqual(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.flatMap(_.expressions.flatMap(_.collect {
+        case e: org.apache.spark.sql.catalyst.expressions.EqualTo
+            if e.left.semanticEquals(e.right) => e
+      }))
+    def hits(df: org.apache.spark.sql.DataFrame) =
+      df.select("doc_id").collect().map(_.getString(0)).toSet
+    // lat 0..6 × lon 0..10: two of its four edges are horizontal
+    val rect = polygon("""{"lat": 0, "lon": 0}, {"lat": 0, "lon": 10},
+      {"lat": 6, "lon": 10}, {"lat": 6, "lon": 0}""")
+    assert(hits(rect) == Set("in"))
+    assert(selfEqual(rect).isEmpty, selfEqual(rect).mkString("\n"))
+    val flat = polygon("""{"lat": 5, "lon": 0}, {"lat": 5, "lon": 5},
+      {"lat": 5, "lon": 10}""")
+    assert(hits(flat).isEmpty)
+    assert(selfEqual(flat).isEmpty, selfEqual(flat).mkString("\n"))
+  }
+
   test("geo_shape: envelope, polygon with a hole, disjoint, gates") {
     val pts = Seq(
       ("in", 5.0, 5.0), ("hole", 5.0, 4.0), ("out", 15.0, 5.0))

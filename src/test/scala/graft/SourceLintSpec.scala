@@ -8,10 +8,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * module — renames and raw file opens/creates appear only in the
   * store-lifecycle kernel ([[StoreFs]]); parquet data (stores and fixture
   * tables alike) opens through [[StoreFs.read]]; "term matches" has one
-  * definition, [[QueryCompiler.termMatch]]; and the index analyzer has
-  * one, [[graft.functions.WordRuns]]. Over `src/main/scala` and
-  * `src/test/scala`: sessions are built only by
-  * [[SparkEntry.localSession]]. */
+  * definition, [[QueryCompiler.termMatch]]; the index analyzer has one,
+  * [[graft.functions.WordRuns]]; and the multiset compare of the append
+  * contract, `exceptAll`, lives only in [[StoreFs.appendNeeded]]. Over
+  * `src/main/scala` and `src/test/scala`: sessions are built only by
+  * [[SparkEntry.localSession]], and the append contract has no conf
+  * switch. */
 class SourceLintSpec extends AnyFunSuite {
 
   private val Kernel = "storefs.scala"
@@ -97,5 +99,21 @@ class SourceLintSpec extends AnyFunSuite {
       if line.contains("[^a-z0-9_]+")
     } yield s"${f.getPath}:${n + 1}: ${line.trim}"
     assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("the append contract's multiset compare lives only in the store kernel") {
+    val bad = calls("""exceptAll\(""".r).collect {
+      case (f, at, text) if f.getName != Kernel => s"${f.getPath}: ${text.slice(at, at + 60)}"
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
+  }
+
+  test("the append contract has no conf switch") {
+    // spelled in two halves so this file does not match itself
+    val key = java.util.regex.Pattern.quote("graft.append." + "insertCheck")
+    val found = calls(key.r, sources ++ sourcesUnder("src/test/scala")).map {
+      case (f, at, text) => s"${f.getPath}: ${text.slice(at, at + 60)}"
+    }
+    assert(found.isEmpty, found.mkString("\n"))
   }
 }

@@ -184,11 +184,6 @@ class StreamingSpec extends AnyFunSuite {
       s"$base/postings", Some("seg"))
     TextIndex.buildNorms(seed, "doc_id", Seq("text"))
       .write.parquet(s"$base/norms")
-    // insertCheck off for the whole query: this test SIMULATES an
-    // upstream-guaranteed pipeline that lets an edit slip through (the
-    // conf must be set before start — the streaming query clones the
-    // session, so later conf changes don't reach foreachBatch)
-    spark.conf.set("graft.append.insertCheck", "off")
     val q = StreamingIndexer.insertStreamServed(mutations, "doc_id", Seq("ver"),
       fields = Seq("text"), postingsPath = s"$base/postings",
       normsPath = s"$base/norms", nBuckets = 8,
@@ -197,13 +192,26 @@ class StreamingSpec extends AnyFunSuite {
       input.addData((3L, 1L, "spark streams data", "a"),
         (4L, 1L, "batch data lands here", "b"))
       q.processAllAvailable()
-      // an in-place edit of doc 4 arrives and skews segment b
-      input.addData((4L, 2L, "spark replaces the batch text", "b"))
-      q.processAllAvailable()
-    } finally {
-      q.stop()
-      spark.conf.unset("graft.append.insertCheck")
-    }
+    } finally q.stop()
+    // an in-place edit of doc 4 through the insert path raises, and
+    // nothing is written
+    val edit = Seq((4L, "spark replaces the batch text", "b"))
+      .toDF("doc_id", "text", "seg")
+    def storeRows() = (spark.read.parquet(s"$base/norms").count(),
+      spark.read.option("basePath", s"$base/postings")
+        .parquet(s"$base/postings").count())
+    val before = storeRows()
+    val e = intercept[IllegalArgumentException](
+      StreamingIndexer.applyInsertServedBatch(edit, 1L, "doc_id", Seq("text"),
+        s"$base/postings", s"$base/norms", 8, segmentCol = Some("seg")))
+    assert(e.getMessage.contains("insert-only"), e.getMessage)
+    assert(storeRows() == before)
+    // a pipeline that appends blind lets the edit slip through and skews
+    // segment b: a second norms row for doc 4, new postings beside the old
+    TextIndex.buildNorms(edit, "doc_id", Seq("text"))
+      .write.mode("append").parquet(s"$base/norms")
+    TextIndex.appendPostings(edit, "doc_id", Seq("text"), s"$base/postings", 8,
+      Some("seg"))
     // both segment partitions exist — lifecycle ops stay directory ops
     val segDirs = new java.io.File(s"$base/postings").listFiles()
       .filter(_.isDirectory).map(_.getName).toSet

@@ -537,12 +537,6 @@ class TextIndexSpec extends AnyFunSuite {
         "doc_id", Seq("text"), s"$dir/norms"))
     assert(err.getMessage.contains("insert-only"), err.getMessage)
     assert(spark.read.parquet(s"$dir/norms").count() == 3)
-    // warn mode lets a declared-safe pipeline through (and off entirely)
-    spark.conf.set("graft.append.insertCheck", "warn")
-    try TextIndex.appendNorms(Seq((2L, "edited text")).toDF("doc_id", "text"),
-      "doc_id", Seq("text"), s"$dir/norms")
-    finally spark.conf.unset("graft.append.insertCheck")
-    assert(spark.read.parquet(s"$dir/norms").count() == 4)
   }
 
   test("r12: upsertNorms merges by key; with gen stamps bm25Indexed drops " +
