@@ -435,40 +435,64 @@ object Esql {
     (sb.toString, inners.toSeq)
   }
 
-  /** `DISSECT f "%{a}<sep>%{b}…"` — compile the pattern to one regex with
-    * a capture group per key; literal separators only (no modifiers —
-    * declared subset). Non-matching rows yield null fields, like ES. */
   private def dissect(df: DataFrame, rest: String): DataFrame = {
-    val m = "^\\s*([A-Za-z_][A-Za-z0-9_.]*)\\s+\"(.*)\"\\s*$".r
-    val (f, pattern) = rest match {
-      case m(field, p) => (field, p)
-      case _ => throw new IllegalArgumentException(
-        s"DISSECT needs '<field> \"<pattern>\"', got: $rest")
-    }
+    val (f, pattern) = fieldAndPattern("DISSECT", rest)
+    dissectOn(f, pattern, "DISSECT")(df)
+  }
+
+  /** `DISSECT f "%{a}<sep>%{b}…"` and the ingest `dissect` processor:
+    * one regex with a capture group per key, literal separators only (no
+    * modifiers — declared subset); non-matching rows yield null fields,
+    * like ES. Keys are checked eagerly; `what` names the caller in errors. */
+  private[graft] def dissectOn(f: String, pattern: String,
+                               what: String): DataFrame => DataFrame = {
     val key = "%\\{([A-Za-z_][A-Za-z0-9_]*)\\}".r
     val names = key.findAllMatchIn(pattern).map(_.group(1)).toList
-    require(names.nonEmpty, s"DISSECT pattern has no %{key}: $pattern")
-    require(names.distinct == names, s"duplicate DISSECT keys in: $pattern")
-    // anchored regex: quoted literal runs between keys, one lazy capture
-    // group per key (the final group still reaches the anchor)
+    require(names.nonEmpty, s"$what pattern has no %{key}: $pattern")
+    require(names.distinct == names, s"duplicate $what keys in: $pattern")
+    // one lazy capture group per key (the final group still reaches the
+    // anchor)
+    val regex = anchored(pattern, key)(_ => "(.*?)")
+    df => extractOrNull(df, f, regex, names)
+  }
+
+  /** `<field> "<pattern>"` of a DISSECT/GROK command. */
+  private def fieldAndPattern(what: String, rest: String): (String, String) = {
+    val m = "^\\s*([A-Za-z_][A-Za-z0-9_.]*)\\s+\"(.*)\"\\s*$".r
+    rest match {
+      case m(field, p) => (field, p)
+      case _ => throw new IllegalArgumentException(
+        s"$what needs '<field> \"<pattern>\"', got: $rest")
+    }
+  }
+
+  /** The anchored regex of a DISSECT/GROK pattern: quoted literal runs
+    * between the `key` references, each reference replaced by
+    * `group(reference)`. */
+  private def anchored(pattern: String, key: scala.util.matching.Regex)(
+      group: scala.util.matching.Regex.Match => String): String = {
     val sb = new StringBuilder("^")
     var last = 0
     for (mt <- key.findAllMatchIn(pattern)) {
       if (mt.start > last)
         sb ++= java.util.regex.Pattern.quote(pattern.substring(last, mt.start))
-      sb ++= "(.*?)"
+      sb ++= group(mt)
       last = mt.end
     }
     if (last < pattern.length)
       sb ++= java.util.regex.Pattern.quote(pattern.substring(last))
     sb += '$'
-    val regex = sb.toString
+    sb.toString
+  }
+
+  /** Column `names(i)` = capture group i+1 of `regex` over field `f`;
+    * non-matching rows yield null fields, like ES dissect/grok. */
+  private def extractOrNull(df: DataFrame, f: String, regex: String,
+                            names: Seq[String]): DataFrame =
     names.zipWithIndex.foldLeft(df) { case (d, (n, i)) =>
-      // non-matching rows yield null fields, like ES dissect
       d.withColumn(n,
         when(col(f).rlike(regex), regexp_extract(col(f), regex, i + 1)))
     }
-  }
 
   /** The GROK pattern library (declared subset of the logstash set —
     * the workhorses; %{PATTERN:name} references compile to named capture
@@ -487,37 +511,20 @@ object Esql {
     * library pattern instead of matching lazily to the next literal. Null
     * fields on non-match, like ES. */
   private def grok(df: DataFrame, rest: String): DataFrame = {
-    val m = "^\\s*([A-Za-z_][A-Za-z0-9_.]*)\\s+\"(.*)\"\\s*$".r
-    val (f, pattern) = rest match {
-      case m(field, p) => (field, p)
-      case _ => throw new IllegalArgumentException(
-        s"GROK needs '<field> \"<pattern>\"', got: $rest")
-    }
+    val (f, pattern) = fieldAndPattern("GROK", rest)
     val key = "%\\{([A-Z0-9_]+):([A-Za-z_][A-Za-z0-9_]*)\\}".r
     val caps = key.findAllMatchIn(pattern).map(mt => (mt.group(1), mt.group(2))).toList
     require(caps.nonEmpty, s"GROK pattern has no %{PATTERN:name}: $pattern")
     val names = caps.map(_._2)
     require(names.distinct == names, s"duplicate GROK names in: $pattern")
-    val sb = new StringBuilder("^")
-    var last = 0
-    for (mt <- key.findAllMatchIn(pattern)) {
-      if (mt.start > last)
-        sb ++= java.util.regex.Pattern.quote(pattern.substring(last, mt.start))
+    val regex = anchored(pattern, key) { mt =>
       val lib = GrokPatterns.getOrElse(mt.group(1),
         throw new IllegalArgumentException(
           s"unknown GROK pattern '${mt.group(1)}' " +
             s"(library: ${GrokPatterns.keys.toSeq.sorted.mkString(", ")})"))
-      sb ++= s"($lib)"
-      last = mt.end
+      s"($lib)"
     }
-    if (last < pattern.length)
-      sb ++= java.util.regex.Pattern.quote(pattern.substring(last))
-    sb += '$'
-    val regex = sb.toString
-    names.zipWithIndex.foldLeft(df) { case (d, (n, i)) =>
-      d.withColumn(n,
-        when(col(f).rlike(regex), regexp_extract(col(f), regex, i + 1)))
-    }
+    extractOrNull(df, f, regex, names)
   }
 
   /** `LOOKUP JOIN idx ON f` — left equi-join with the catalog table on the

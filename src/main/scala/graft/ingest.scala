@@ -128,29 +128,7 @@ object IngestPipeline {
         // new column per key; non-matching rows yield nulls (ES's
         // ignore_failure-free behavior is per-doc failure — nulls are the
         // columnar analog, same contract as ES|QL DISSECT)
-        val f = field; val pattern = text("pattern")
-        val key = "%\\{([A-Za-z_][A-Za-z0-9_]*)\\}".r
-        val names = key.findAllMatchIn(pattern).map(_.group(1)).toList
-        require(names.nonEmpty, s"dissect pattern has no %{key}: $pattern")
-        require(names.distinct == names, s"duplicate dissect keys in: $pattern")
-        // anchored regex, quoted literal runs between lazy capture groups
-        // (the ES|QL DISSECT construction)
-        val sb = new StringBuilder("^")
-        var last = 0
-        for (mt <- key.findAllMatchIn(pattern)) {
-          if (mt.start > last)
-            sb ++= java.util.regex.Pattern.quote(pattern.substring(last, mt.start))
-          sb ++= "(.*?)"
-          last = mt.end
-        }
-        if (last < pattern.length)
-          sb ++= java.util.regex.Pattern.quote(pattern.substring(last))
-        sb += '$'
-        val rx = sb.toString
-        df => names.zipWithIndex.foldLeft(df) { case (d, (n, i)) =>
-          d.withColumn(n,
-            when(col(f).rlike(rx), regexp_extract(col(f), rx, i + 1)))
-        }
+        Esql.dissectOn(field, text("pattern"), "dissect")
       case "fingerprint" =>
         // {fields: [...], target_field?, method?} — stable content hash of
         // the listed fields joined with the ES separator; sha1 default

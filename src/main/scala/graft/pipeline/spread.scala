@@ -45,18 +45,13 @@ object Spread {
     * sketching) pass a higher factor so a moderately-parallel scan
     * (e.g. 10 files on 32 cores) is left alone — measured at sf1, the
     * text exchange there cost more than the 3× compute gain bought. */
-  def scanFloor(df: DataFrame, key: Column, minDeficit: Int = 1,
-                minBytesOverride: Long = 0L): DataFrame = {
+  def scanFloor(df: DataFrame, key: Column, minDeficit: Int = 1): DataFrame = {
     val sess = df.sparkSession
     val floor = sess.sparkContext.defaultParallelism
     if (floor <= 1) return df
     // size gate ([[MinBytes]]): toy inputs and unit-test literals must keep
     // their narrow no-shuffle plans. Estimated plan stats, not an action.
-    // A per-site override raises the gate where the per-row work is light
-    // relative to bytes (the exchange then costs more than the parallelism
-    // buys until the input is well past the default).
-    val minBytes = if (minBytesOverride > 0L) minBytesOverride else MinBytes
-    if (df.queryExecution.optimizedPlan.stats.sizeInBytes < minBytes) return df
+    if (df.queryExecution.optimizedPlan.stats.sizeInBytes < MinBytes) return df
     // The floor exists for SCAN-shaped inputs (one row group = one task).
     // A frame that already carries a shuffle-producing operator is fed by
     // an exchange whose partition count is the session's shuffle

@@ -25,7 +25,23 @@ object Search {
     * ours must be reproducible), cap at max-results
     * (reference: ElasticIndex.java:658-722; cap IndexConfig.java:64-65). */
   def topK(docs: DataFrame, q: CompiledQuery, cfg: IndexConfig,
-           tiebreak: String = "doc_id"): DataFrame = {
+           tiebreak: String = "doc_id"): DataFrame =
+    rankHits(scoredMatches(docs, q), q, cfg, tiebreak)
+
+  /** The scoring half of [[topK]]: the matches with their `_score`, above
+    * the `min_score` floor — exactly the set ES `hits.total` counts. */
+  private[graft] def scoredMatches(docs: DataFrame, q: CompiledQuery): DataFrame = {
+    val scored = docs.where(q.predicate).withColumn("_score", q.score)
+    // min_score: a post-scoring filter before any paging/collapse — hits
+    // under the floor never enter the top-k
+    q.minScore.fold(scored)(ms => scored.where(col("_score") >= lit(ms)))
+  }
+
+  /** The ranking half of [[topK]] over `scored` (rows carrying `_score`):
+    * `search_after`, `sort`, `collapse`/inner hits, `from` and the
+    * max-results cap. */
+  private[graft] def rankHits(scored: DataFrame, q: CompiledQuery, cfg: IndexConfig,
+                              tiebreak: String): DataFrame = {
     val limit = q.limit.getOrElse(cfg.maxResults).min(cfg.maxResults)
     // ES max_result_window guard: offset paging ranks its whole prefix, so
     // the window end must fit the cap (deep pages belong to search_after).
@@ -33,13 +49,6 @@ object Search {
     // would slip past the guard as a negative number
     require(q.from.toLong + limit <= cfg.maxResults,
       s"from + size (${q.from} + $limit) exceeds max-results ${cfg.maxResults}")
-    val scored0 = docs.where(q.predicate).withColumn("_score", q.score)
-    // min_score: a post-scoring filter before any paging/collapse — hits
-    // under the floor never enter the top-k
-    val scored = q.minScore match {
-      case Some(ms) => scored0.where(col("_score") >= lit(ms))
-      case None => scored0
-    }
     // search_after: keyset-resume strictly after (score, id) in the
     // (score DESC, id ASC) total order — the page predicate composes with
     // the scan filter, so every page is one pruned top-k, never a
@@ -130,8 +139,18 @@ object Search {
     val meta = QueryMeta.parse(query)
     val compiled = QueryCompiler.compile(meta.query, cfg.maxResults, pkCols.head,
       QueryCompiler.resolveOperator(meta, cfg.defaultOperator), docs.schema)
-    val hits0 = topK(docs, compiled, cfg, pkCols.head)
-    val hits1 = withSource(hits0, docs.columns.toSeq, meta)
+    shapeHits(topK(docs, compiled, cfg, pkCols.head), docs.columns.toSeq, meta,
+      compiled, pkCols)
+  }
+
+  /** The response shaping every hit tail shares: the load-source `_source`
+    * column, `script_fields`, then the PK-only, full-row or body-`_source`
+    * projection. `docCols` are the searched doc frame's columns; `carry`
+    * names hit columns every projection keeps. */
+  private[graft] def shapeHits(hits0: DataFrame, docCols: Seq[String], meta: QueryMeta,
+                               compiled: CompiledQuery, pkCols: Seq[String],
+                               carry: Seq[String] = Nil): DataFrame = {
+    val hits1 = withSource(hits0, docCols, meta)
     // script_fields: per-hit derived columns through the Script grammar,
     // `doc.<col>` (and bare column names) bound to the frame — pure column
     // math appended to the hit rows, codegen'd with the projection
@@ -140,7 +159,7 @@ object Search {
         // ES script_fields are ADDITIVE response fields — a name colliding
         // with a stored column, a pk, or the engine's _score/_source would
         // silently clobber it through withColumn; reject loudly instead
-        val reserved = docs.columns.toSet ++ pkCols + "_score" + "_source"
+        val reserved = docCols.toSet ++ pkCols + "_score" + "_source"
         val clash = sfs.map(_._1).filter(reserved.contains)
         require(clash.isEmpty,
           s"script_fields name(s) collide with existing columns: " +
@@ -149,7 +168,7 @@ object Search {
           case (n, vs) if vs.size > 1 => n }
         require(dups.isEmpty,
           s"duplicate script_fields name(s): ${dups.mkString(", ")}")
-        val bind: Map[String, Column] = docs.columns
+        val bind: Map[String, Column] = docCols
           .flatMap(c => Seq(c -> col(c), s"doc.$c" -> col(c))).toMap
         val withSf = sfs.foldLeft(hits1) { case (h, (n, src)) =>
           h.withColumn(n, Aggs.Script.compile(src, bind, s"script_fields.$n"))
@@ -157,18 +176,17 @@ object Search {
         (withSf, sfs.map(_._1))
       case None => (hits1, Seq.empty[String])
     }
+    val tail = (sfNames ++ carry ++ (if (meta.loadSource) Seq("_source") else Nil))
+      .map(col)
     if (!meta.loadRows)
-      hits.select((pkCols.map(col) :+ col("_score")) ++ sfNames.map(col) ++
-        (if (meta.loadSource) Seq(col("_source")) else Nil): _*)
+      hits.select((pkCols.map(col) :+ col("_score")) ++ tail: _*)
     else compiled.sourceFields match {
       // body `_source` filter: response shaping that Catalyst turns into
       // scan column pruning (ReadSchema shrinks — PlanSpec-proven).
       // Orthogonal to the load-source OPTION, which attaches the full doc
       // as one JSON column and is kept when requested.
       case Some(fields) =>
-        hits.select((pkCols ++ fields).distinct.map(col) ++ Seq(col("_score")) ++
-          sfNames.map(col) ++
-          (if (meta.loadSource) Seq(col("_source")) else Nil): _*)
+        hits.select((pkCols ++ fields).distinct.map(col) ++ Seq(col("_score")) ++ tail: _*)
       case None => hits
     }
   }
@@ -421,9 +439,9 @@ object Search {
     }
   }
 
-  /** `load-source=true` support shared by [[search]] and [[searchWithTotal]]:
-    * attach the full document as `_source` JSON. Nulls are emitted
-    * explicitly (`"f":null`) — a doc-store column is always present, so
+  /** `load-source=true` support of [[shapeHits]]: attach the full
+    * document as `_source` JSON. Nulls are emitted explicitly
+    * (`"f":null`) — a doc-store column is always present, so
     * null means "null field", not "absent"; this also keeps the column
     * distinguishable from discard-nulls write-path behavior. */
   private def withSource(hits: DataFrame, docCols: Seq[String],
@@ -523,7 +541,12 @@ object Search {
     * partial-shard failure on the read path — a lost task re-runs — so
     * successful always equals total.
     *
-    * The match-count aggregate and the top-k both re-scan the filtered doc
+    * The hits are [[search]]'s — the same scoring, ranking and shaping,
+    * so every body field (`from`, `sort`, `min_score`, `search_after`,
+    * `collapse`, `_source`, `script_fields`) means the same here — with
+    * the envelope columns added before `_source`. `hit_count`/`max_score`
+    * read the scored matches before any paging or collapse. The
+    * match-count aggregate and the top-k both re-scan the filtered doc
     * set — two parallel pushed-down scans beat one scan funneled through a
     * single-partition window (the r1 WindowExec warning); the stats row is
     * broadcast back onto every hit. */
@@ -534,12 +557,10 @@ object Search {
     val meta = QueryMeta.parse(query)
     val compiled = QueryCompiler.compile(meta.query, cfg.maxResults, pkCols.head,
       QueryCompiler.resolveOperator(meta, cfg.defaultOperator), docs.schema)
-    val limit = compiled.limit.getOrElse(cfg.maxResults).min(cfg.maxResults)
     // matchDocs: an optional pre-filter of `docs` that provably contains
     // every match (TextIndex candidates) — match rows/stats read it, while
     // store-describing stats (shard count) stay on the full store
-    val matches = matchDocs.getOrElse(docs).where(compiled.predicate)
-      .withColumn("_score", compiled.score)
+    val matches = scoredMatches(matchDocs.getOrElse(docs), compiled)
     val shards = segmentCol match {
       case Some(c) => docs.agg(countDistinct(col(c)).as("shards_total"))
       case None => docs.sparkSession.range(1).select(lit(1L).as("shards_total"))
@@ -548,15 +569,12 @@ object Search {
       .crossJoin(broadcast(shards))
       .withColumn("shards_successful", col("shards_total"))
       .withColumn("took", lit(0L))
-    val hits = withSource(
-      matches.crossJoin(broadcast(stats))
-        .orderBy(desc("_score"), col(pkCols.head))
-        .limit(limit),
-      docs.columns.toSeq, meta)
-    if (meta.loadRows) hits
-    else hits.select((pkCols.map(col) ++ Seq(col("_score"), col("hit_count"), col("max_score"),
-        col("took"), col("shards_total"), col("shards_successful"))) ++
-      (if (meta.loadSource) Seq(col("_source")) else Nil): _*)
+    // the envelope rides the ranking — joined onto the matches, so the
+    // top-k stays the plan's root — and every projection of the shaping
+    // keeps it
+    shapeHits(rankHits(matches.crossJoin(broadcast(stats)), compiled, cfg, pkCols.head),
+      docs.columns.toSeq, meta, compiled, pkCols,
+      carry = Seq("hit_count", "max_score", "took", "shards_total", "shards_successful"))
   }
 
   /** R4 upgrade: BM25 relevance over whole-word term matches.
@@ -575,6 +593,26 @@ object Search {
   def bm25(docs: DataFrame, textCol: String, terms: Seq[String],
            k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25 needs at least one term")
+    bm25Scored(docs, textCol, terms, k1, b, explain = false)
+  }
+
+  /** The Okapi BM25 idf, `ln(1 + (N − df + 0.5)/(df + 0.5))`. */
+  private def okapiIdf(df: Column, n: Column): Column =
+    log(lit(1.0) + (n - df + 0.5) / (df + 0.5))
+
+  /** One term's Okapi BM25 contribution — the one expression tree behind
+    * [[bm25]], [[bm25Explain]] and [[TextIndex.bm25Indexed]], so their
+    * doubles agree bit for bit. */
+  private[graft] def okapi(tf: Column, df: Column, n: Column, dl: Column,
+                           avgdl: Column, k1: Double, b: Double): Column =
+    okapiIdf(df, n) * tf * (k1 + 1.0) /
+      (tf + lit(k1) * (lit(1.0 - b) + lit(b) * dl / avgdl))
+
+  /** The scan/stats body of [[bm25]] and [[bm25Explain]]: `_bm25` sums the
+    * terms' contributions in term order; with `explain` each row also
+    * carries the per-term `_explanation` array, ordered by term. */
+  private def bm25Scored(docs: DataFrame, textCol: String, terms: Seq[String],
+                         k1: Double, b: Double, explain: Boolean): DataFrame = {
     // null text → empty doc (dl spuriously 1, but tf=0 so score=0): without
     // the coalesce, size(NULL) poisons avgdl for the entire corpus
     val safeText = coalesce(col(textCol), lit(""))
@@ -591,16 +629,20 @@ object Search {
       terms.indices.map(i =>
         sum(when(col(s"_tf$i") > 0, 1.0).otherwise(0.0)).as(s"_df$i"))
     val stats = withTf.agg(count(lit(1)).cast("double").as("_N"), statAggs: _*)
+    val contrib = terms.indices.map(i => okapi(col(s"_tf$i"), col(s"_df$i"),
+      col("_N"), col("_dl"), col("_avgdl"), k1, b))
     val scored = withTf.crossJoin(broadcast(stats))
-    val score = terms.indices.map { i =>
-      val tf = col(s"_tf$i"); val df_ = col(s"_df$i")
-      val idf = log(lit(1.0) + (col("_N") - df_ + 0.5) / (df_ + 0.5))
-      idf * tf * (k1 + 1.0) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("_dl") / col("_avgdl")))
-    }.reduce(_ + _)
-    scored.withColumn("_bm25", score)
-      .drop((Seq("_dl", "_N", "_avgdl") ++
-        terms.indices.flatMap(i => Seq(s"_tf$i", s"_df$i"))): _*)
+      .withColumn("_bm25", contrib.reduce(_ + _))
+    val out =
+      if (!explain) scored
+      else scored.withColumn("_explanation", array(
+        terms.zipWithIndex.sortBy(_._1).map { case (t, i) =>
+          val tf = col(s"_tf$i"); val df_ = col(s"_df$i")
+          struct(lit(t).as("term"), tf.as("tf"), df_.cast("long").as("df"),
+            okapiIdf(df_, col("_N")).as("idf"), contrib(i).as("contrib"))
+        }: _*))
+    out.drop((Seq("_dl", "_N", "_avgdl") ++
+      terms.indices.flatMap(i => Seq(s"_tf$i", s"_df$i"))): _*)
   }
 
   /** ES `more_like_this`: find documents similar to the given ones (or to
@@ -2015,48 +2057,16 @@ object Search {
     * ES hit metadata per row, SearchResultPartitionIterator-style
     * enrichment; `_explanation` is the standard debug companion).
     *
-    * Emits the [[bm25]] corpus-stat machinery per term instead of only the
-    * folded sum: an `_explanation` array with one struct per query term —
-    * `(term, tf, df, idf, contrib)` — ordered by term, plus the `_bm25`
-    * total (identical to [[bm25]]'s — the sum of contribs by
-    * construction). Same two-codegen-scan cost as [[bm25]]; the struct
-    * column adds no extra pass. */
+    * [[bm25]]'s own scan/stats body, emitting the per-term stats beside
+    * the folded sum: an `_explanation` array with one struct per query
+    * term — `(term, tf, df, idf, contrib)` — ordered by term, plus the
+    * `_bm25` total (identical to [[bm25]]'s — the same expression). Same
+    * two-codegen-scan cost as [[bm25]]; the struct column adds no extra
+    * pass. */
   def bm25Explain(docs: DataFrame, textCol: String, terms: Seq[String],
                   k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(terms.nonEmpty, "bm25 explain needs at least one term")
-    val safeText = coalesce(col(textCol), lit(""))
-    val toks = split(trim(safeText), "\\s+")
-    // per-term regex extraction per row dominates bytes (§2.5 scan floor)
-    val base = graft.pipeline.Spread.scanFloor(docs, col(textCol))
-      .withColumn("_dl", size(toks).cast("double"))
-    val withTf = terms.zipWithIndex.foldLeft(base) { case (df, (t, i)) =>
-      val rx = "\\b" + java.util.regex.Pattern.quote(t.toLowerCase) + "\\b"
-      df.withColumn(s"_tf$i",
-        size(regexp_extract_all(lower(safeText), lit(rx), lit(0))).cast("double"))
-    }
-    val statAggs = Seq(avg(col("_dl")).as("_avgdl")) ++
-      terms.indices.map(i =>
-        sum(when(col(s"_tf$i") > 0, 1.0).otherwise(0.0)).as(s"_df$i"))
-    val stats = withTf.agg(count(lit(1)).cast("double").as("_N"), statAggs: _*)
-    val scored = withTf.crossJoin(broadcast(stats))
-    val parts = terms.zipWithIndex.sortBy(_._1).map { case (t, i) =>
-      val tf = col(s"_tf$i"); val df_ = col(s"_df$i")
-      val idf = log(lit(1.0) + (col("_N") - df_ + 0.5) / (df_ + 0.5))
-      val contrib = idf * tf * (k1 + 1.0) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("_dl") / col("_avgdl")))
-      struct(lit(t).as("term"), tf.as("tf"), df_.cast("long").as("df"),
-        idf.as("idf"), contrib.as("contrib"))
-    }
-    val total = terms.indices.map { i =>
-      val tf = col(s"_tf$i"); val df_ = col(s"_df$i")
-      val idf = log(lit(1.0) + (col("_N") - df_ + 0.5) / (df_ + 0.5))
-      idf * tf * (k1 + 1.0) /
-        (tf + lit(k1) * (lit(1.0 - b) + lit(b) * col("_dl") / col("_avgdl")))
-    }.reduce(_ + _)
-    scored.withColumn("_bm25", total)
-      .withColumn("_explanation", array(parts: _*))
-      .drop((Seq("_dl", "_N", "_avgdl") ++
-        terms.indices.flatMap(i => Seq(s"_tf$i", s"_df$i"))): _*)
+    bm25Scored(docs, textCol, terms, k1, b, explain = true)
   }
 
   /** ES `_mvt` vector-tile search (`GET /<idx>/_mvt/<field>/<z>/<x>/<y>`),

@@ -272,8 +272,9 @@ object StreamingIndexer {
         val norms = graft.TextIndex.buildNorms(docs, keyCol, fields)
         val needNorms = graft.TextIndex.normsAppendNeeded(normsPath,
           norms.select(col("doc_id")), norms, replay = true)
-        if (needNorms) // strict probe passes: the probe saw no rows for keys
-          graft.TextIndex.appendNorms(docs, keyCol, fields, normsPath)
+        // the probe saw no stored row for any batch key: the fresh-mode
+        // probe of appendNorms would say the same, so write the delta as is
+        if (needNorms) norms.write.mode("append").parquet(normsPath)
         if (needPostings)
           graft.TextIndex.appendPostings(docs, keyCol, fields, postingsPath,
             nBuckets, segmentCol)

@@ -967,10 +967,8 @@ object TextIndex {
     live
       .join(broadcast(dfs), "token")
       .crossJoin(broadcast(stats))
-      .withColumn("_contrib",
-        log(lit(1.0) + (col("N") - col("df") + 0.5) / (col("df") + 0.5)) *
-          col("tf") * (k1 + 1.0) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") / col("avgdl"))))
+      .withColumn("_contrib", Search.okapi(col("tf"), col("df"), col("N"),
+        col("dl"), col("avgdl"), k1, b))
       .groupBy("doc_id").agg(sum(col("_contrib")).as("_bm25"))
   }
 
@@ -1115,22 +1113,19 @@ object TextIndex {
     }
     val pred = toCol(ast, pos = true)
     val score = if (scoreLeaves.isEmpty) lit(0) else scoreLeaves.reduce(_ + _)
-    val limit = cfg.maxResults
-    val hits = flags.where(pred).withColumn("_score", score)
-      .select(col("doc_id").as(idCol), col("_score"))
-      .orderBy(desc("_score"), col(idCol))
-      .limit(limit)
-    if (!meta.loadRows && !meta.loadSource) hits
-    else {
-      val loaded = docs.join(broadcast(hits), Seq(idCol), "inner")
-      val cols = docs.columns.map(col).toSeq :+ col("_score")
-      val withSrc =
-        if (!meta.loadSource) loaded.select(cols: _*)
-        else loaded.select(cols: _*).withColumn("_source",
-          to_json(struct(docs.columns.toSeq.map(col): _*),
-            Map("ignoreNullFields" -> "false")))
-      if (meta.loadRows) withSrc
-      else withSrc.select(col(idCol), col("_score"), col("_source"))
-    }
+    // the scan path's ranking and shaping: Lucene-lite carries no paging
+    // or shaping fields, so the ranking is relevance order capped at
+    // max-results
+    val q = CompiledQuery(pred, score, limit = None)
+    val hits = Search.rankHits(
+      flags.where(pred).withColumn("_score", score)
+        .select(col("doc_id").as(idCol), col("_score")), q, cfg, idCol)
+    // docs are read only when rows or `_source` are requested (broadcast —
+    // the hit list is capped)
+    val rows =
+      if (!meta.loadRows && !meta.loadSource) hits
+      else docs.join(broadcast(hits), Seq(idCol), "inner")
+        .select(docs.columns.map(col).toSeq :+ col("_score"): _*)
+    Search.shapeHits(rows, docs.columns.toSeq, meta, q, Seq(idCol))
   }
 }

@@ -1188,12 +1188,12 @@ class AggsSpec extends AnyFunSuite {
                "expectations": [2, 4, 6]}}}}}}}""")("r")
       .collect().head.getDouble(0)
     assert(math.abs(v - 1.0) < 1e-12) // counts 1,2,3 vs 2,4,6: perfect corr
-    assertThrows[Exception](Aggs.run(df,
+    assertThrows[Exception](SparkSpecBase.quietFailedTasks()(Aggs.run(df,
       """{"aggs": {
            "b": {"terms": {"field": "k", "size": 10}},
            "r": {"bucket_correlation": {"buckets_path": "b>_count",
              "function": {"count_correlation": {"indicator": {
-               "expectations": [1, 2]}}}}}}}""")("r").collect())
+               "expectations": [1, 2]}}}}}}}""")("r").collect()))
   }
 
   test("bucket_count_ks_test: D against the expected CDF") {
@@ -1565,8 +1565,8 @@ class AggsSpec extends AnyFunSuite {
       .orderBy("key").collect().map(_.getLong(0)).toSeq
     assert(ok == (1L to 5L))
     // beyond: the plan raises at execution with the loud contract message
-    val e = intercept[Exception](
-      Aggs.boundedFrame(d, "spec", maxBuckets = 3).collect())
+    val e = intercept[Exception](SparkSpecBase.quietFailedTasks()(
+      Aggs.boundedFrame(d, "spec", maxBuckets = 3).collect()))
     assert(e.getMessage.contains("bucket frame exceeds"), e.getMessage)
     // and the real surface is wired: a derivative over a bucket list
     // passes (bounded), proving the guard doesn't disturb pipeline output

@@ -625,7 +625,8 @@ class MaintainSpec extends AnyFunSuite {
         case "renamed" => org.apache.commons.io.FileUtils.copyDirectory(d.live, d.aside)
       }
       // the junk staged file fails both reads on purpose
-      failures ++= quietFailedTasks(sameAsSparkRead(c, s"crashed/${row.name}/$step"))
+      failures ++= SparkSpecBase.quietFailedTasks()(
+        sameAsSparkRead(c, s"crashed/${row.name}/$step"))
     }
 
     // the fixture tables SparkEntry.tbl, Bench, ScaleUp and FixtureManifest
@@ -668,30 +669,6 @@ object MaintainSpec {
     SwapDirs(new java.io.File(root, name),
       new java.io.File(root, s".swap_tmp/$name"),
       new java.io.File(root, s".swap_old_$name"))
-
-  /** `body` with the ERROR logs of failed tasks off — the executor's
-    * stack trace and the scheduler's abort line — for reads that fail on
-    * purpose, whose traces would bury real errors in the test log. The
-    * two loggers are restored after. */
-  def quietFailedTasks[T](body: => T): T = {
-    import org.apache.logging.log4j.Level
-    import org.apache.logging.log4j.core.LoggerContext
-    import org.apache.logging.log4j.core.config.Configurator
-    val ctx = org.apache.logging.log4j.LogManager.getContext(false)
-      .asInstanceOf[LoggerContext]
-    val names = Seq("org.apache.spark.executor.Executor",
-      "org.apache.spark.scheduler.TaskSetManager")
-    val before = names.map(n =>
-      n -> Option(ctx.getConfiguration.getLoggers.get(n)).map(_.getLevel))
-    names.foreach(Configurator.setLevel(_, Level.OFF))
-    try body finally {
-      before.foreach {
-        case (n, Some(level)) => Configurator.setLevel(n, level)
-        case (n, None) => ctx.getConfiguration.removeLogger(n)
-      }
-      ctx.updateLoggers()
-    }
-  }
 
   final case class CrashRow(name: String, setup: String => Unit,
                             op: String => Unit, answer: String => Any,

@@ -617,4 +617,25 @@ class PlanSpec extends AnyFunSuite {
     assert(jobs == 11, s"pending-replay apply launched $jobs job(s)")
     assert(StoreFs.read(spark, np).count() == 3)
   }
+
+  test("append-contract jobs: a pending-replay applyInsertServedBatch " +
+       "(neither store landed)") {
+    import spark.implicits._
+    val base = tmpDir("graft_pin_replay_none")
+    val (pp, np) = (s"$base/postings", s"$base/norms")
+    val seed = Seq((1L, "spark makes batch fast")).toDF("doc_id", "text")
+    TextIndex.writePostings(TextIndex.buildPostings(seed, "doc_id", Seq("text"), 8), pp)
+    TextIndex.buildNorms(seed, "doc_id", Seq("text")).write.parquet(np)
+    val b1 = Seq((2L, "fresh spark content"), (3L, "more batch data"))
+      .toDF("doc_id", "text")
+    graft.streaming.StreamingIndexer.writePending(spark, pp, 1L)
+    val (applied, jobs) = jobsDuring(graft.streaming.StreamingIndexer
+      .applyInsertServedBatch(b1, 1L, "doc_id", Seq("text"), pp, np, 8))
+    assert(applied)
+    // the norms delta is built and probed once; appending it through
+    // appendNorms would build and probe it again (3 more jobs)
+    assert(jobs == 8, s"pending-replay apply launched $jobs job(s)")
+    assert(StoreFs.read(spark, np).count() == 3)
+    assert(StoreFs.read(spark, pp).select("doc_id").distinct().count() == 3)
+  }
 }

@@ -589,6 +589,46 @@ class SearchSpec extends AnyFunSuite {
         "took", "shards_total", "shards_successful", "_source"))
   }
 
+  test("searchWithTotal hits equal search's for every body field; the " +
+       "total counts scored matches before paging") {
+    val d = docs.withColumn("n", col("doc_id").cast("long"))
+    val any = """{"match":{"text":"spark batch streaming"}}"""
+    val bodies = Seq(
+      s"""{"query":$any,"from":1,"size":2}""",
+      s"""{"query":$any,"sort":[{"lang":"desc"}]}""",
+      s"""{"query":$any,"min_score":2}""",
+      s"""{"query":$any,"size":2,"search_after":[2,"1"]}""",
+      s"""{"query":$any,"collapse":{"field":"lang"}}""",
+      s"""{"query":$any,"collapse":{"field":"lang","inner_hits":{"size":2}}}""",
+      s"""{"query":$any,"_source":["lang"]}""",
+      s"""{"query":$any,"script_fields":{"n2":{"script":"doc.n * 2"}}}""",
+      s"""{"query":$any,"from":1,"size":10,"min_score":1,"_source":["text"],
+          "script_fields":{"n2":{"script":"doc.n * 2"}}}""",
+      s"""#options:load-rows=false,load-source=true#{"query":$any,"from":1,"size":10,
+          "script_fields":{"n2":{"script":"doc.n * 2"}}}""")
+    val envelope = Set("hit_count", "max_score", "took", "shards_total",
+      "shards_successful")
+    for (q <- bodies) {
+      val hits = Search.search(d, q, IndexConfig())
+      val total = Search.searchWithTotal(d, q, IndexConfig())
+      assert(total.columns.filterNot(envelope).toSeq == hits.columns.toSeq, q)
+      val rows = total.collect()
+      assert(rows.nonEmpty, q)
+      assert(rows.map(r => hits.columns.toSeq.map(c => r.get(r.fieldIndex(c)))).toSeq ==
+        hits.collect().map(_.toSeq).toSeq, q)
+      // hits.total / max_score: every match at or above min_score, before
+      // from, search_after, collapse and the cap
+      val cq = QueryCompiler.compile(QueryMeta.parse(q).query, schema = d.schema)
+      val scored = d.where(cq.predicate).select(cq.score.cast("double").as("s"))
+        .where(col("s") >= cq.minScore.getOrElse(Double.MinValue))
+        .collect().map(_.getDouble(0))
+      assert(rows.map(_.getAs[Long]("hit_count")).distinct.toSeq ==
+        Seq(scored.length.toLong), q)
+      assert(rows.map(r => r.get(r.fieldIndex("max_score")).toString.toDouble)
+        .distinct.toSeq == Seq(scored.max), q)
+    }
+  }
+
   test("metadata enrichment attaches global hit stats to every row") {
     val hits = Search.search(docs, "text:spark OR text:batch", IndexConfig())
     val meta = Search.withMeta(hits).select("hit_count", "max_score").distinct().head

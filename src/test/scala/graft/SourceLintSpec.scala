@@ -116,4 +116,23 @@ class SourceLintSpec extends AnyFunSuite {
     }
     assert(found.isEmpty, found.mkString("\n"))
   }
+
+  test("one Okapi BM25 expression; no hit order outside Search.topK's halves") {
+    // the DuckDB oracle SQL in SparkEntry spells BM25 out for the compare
+    val okapi = calls(java.util.regex.Pattern.quote("(k1 + 1.0)").r).collect {
+      case (f, at, text) if f.getName != "SparkEntry.scala" =>
+        s"${f.getPath}: ${text.slice(at - 40, at + 40)}"
+    }
+    assert(okapi.size == 1, okapi.mkString("\n"))
+    val relevance = java.util.regex.Pattern.quote("desc(\"_score\")").r
+    val inTextIndex = calls(relevance).collect {
+      case (f, at, text) if f.getName == "textindex.scala" => text.slice(at, at + 60)
+    }
+    assert(inTextIndex.isEmpty, inTextIndex.mkString("\n"))
+    val search = sources.find(_.getName == "search.scala").get
+    val text = new String(java.nio.file.Files.readAllBytes(search.toPath), "UTF-8")
+    val from = text.indexOf("def searchWithTotal(")
+    val body = text.substring(from, text.indexOf("\n  def ", from + 1))
+    assert(from >= 0 && relevance.findFirstIn(body).isEmpty, body)
+  }
 }

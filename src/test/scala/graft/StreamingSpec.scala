@@ -948,8 +948,10 @@ class StreamingSpec extends AnyFunSuite {
     val inB = MemoryStream[(Long, Long, String)]
     val qB = serve(inB).start()
     val exB = intercept[Exception] {
-      try { inB.addData((3L, 1L, "lost words")); qB.processAllAvailable() }
-      finally qB.stop()
+      SparkSpecBase.quietFailedTasks(SparkSpecBase.MicroBatchLogger) {
+        try { inB.addData((3L, 1L, "lost words")); qB.processAllAvailable() }
+        finally qB.stop()
+      }
     }
     def rootMsg(t: Throwable): String =
       Option(t.getMessage).getOrElse("") +

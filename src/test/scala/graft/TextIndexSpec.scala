@@ -109,6 +109,8 @@ class TextIndexSpec extends AnyFunSuite {
     "text:spark AND text:stream*",
     "source:src1 AND (text:batch OR text:state)",
     "#options:load-rows=false#text:batch",
+    "#options:load-source=true#text:batch AND NOT lang:de",
+    "#options:load-rows=false,load-source=true#text:batch AND NOT lang:de",
     // literal-run covers: phrase, punctuated term, proximity, '?' wildcard
     "text:\"batch fast\"",
     "text:sp?rk",
@@ -136,7 +138,8 @@ class TextIndexSpec extends AnyFunSuite {
       val scan = Search.search(docs, q, IndexConfig(), Seq("doc_id"))
       val indexed = TextIndex.searchIndexed(docs, postings, q, IndexConfig(),
         Seq("doc_id"), fields, 8, pureIndex = pure)
-      assert(indexed.columns.toSeq == scan.columns.toSeq, s"columns for: $q (pure=$pure)")
+      assert(indexed.schema.map(f => (f.name, f.dataType)) ==
+        scan.schema.map(f => (f.name, f.dataType)), s"schema for: $q (pure=$pure)")
       val a = scan.collect().map(_.toSeq).toSet
       val b = indexed.collect().map(_.toSeq).toSet
       assert(a == b, s"result mismatch for: $q (pure=$pure)")
