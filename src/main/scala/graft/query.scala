@@ -517,13 +517,15 @@ object QueryCompiler {
 
   private[graft] object LuceneLite {
     sealed trait Node
-    case class Term(field: String, value: String, boost: Int = 1) extends Node
-    case class Regex(field: String, pattern: String, boost: Int = 1) extends Node
-    case class Exists(field: String, boost: Int = 1) extends Node
-    case class Fuzzy(field: String, value: String, dist: Int, boost: Int = 1) extends Node
-    case class Proximity(field: String, phrase: String, slop: Int, boost: Int = 1) extends Node
+    /** A clause that matches on its own; a positive one scores `boost`. */
+    sealed trait Leaf extends Node { def boost: Int }
+    case class Term(field: String, value: String, boost: Int = 1) extends Leaf
+    case class Regex(field: String, pattern: String, boost: Int = 1) extends Leaf
+    case class Exists(field: String, boost: Int = 1) extends Leaf
+    case class Fuzzy(field: String, value: String, dist: Int, boost: Int = 1) extends Leaf
+    case class Proximity(field: String, phrase: String, slop: Int, boost: Int = 1) extends Leaf
     case class Range(field: String, lo: String, hi: String,
-                     incLo: Boolean, incHi: Boolean, boost: Int = 1) extends Node
+                     incLo: Boolean, incHi: Boolean, boost: Int = 1) extends Leaf
     case class And(l: Node, r: Node) extends Node
     case class Or(l: Node, r: Node) extends Node
     case class Not(n: Node) extends Node
@@ -541,33 +543,15 @@ object QueryCompiler {
                            defaultOr: Boolean = false): Node =
       parse(q, defaultField, defaultOr)
 
-    def compile(q: String, defaultLimit: Int,
-                defaultField: Option[String] = None,
-                defaultOr: Boolean = false): CompiledQuery = {
-      val ast = parse(q, defaultField, defaultOr)
+    /** The one Lucene-lite evaluator: `ast`'s predicate and score, each
+      * leaf's match column given by `leafCol`. [[compile]] matches the doc
+      * columns; [[TextIndex]]'s pure-index path reads postings flags. */
+    private[graft] def evaluate(ast: Node)(leafCol: Leaf => Column): (Column, Column) = {
       val leaves = scala.collection.mutable.ArrayBuffer[Column]()
       // `pos` tracks polarity: only positive leaves contribute to the score
       def toCol(n: Node, pos: Boolean): Column = n match {
-        case Term(f, v, boost) =>
-          val c = termMatch(col(f), v); if (pos) leaves += leaf(c, boost); c
-        case Regex(f, pat, boost) =>
-          // whole-token regex, same anchor model as the DSL `regexp`
-          val c = lower(col(f)).rlike("\\b(?:" + pat + ")\\b")
-          if (pos) leaves += leaf(c, boost); c
-        case Exists(f, boost) =>
-          val c = col(f).isNotNull
-          if (pos) leaves += leaf(c, boost); c
-        case Fuzzy(f, v, dist, boost) =>
-          val c = graft.functions.TextSketchFunctions
-            .fuzzy_token_match(col(f), v, dist)
-          if (pos) leaves += leaf(c, boost); c
-        case Proximity(f, p, slop, boost) =>
-          val c = proximityMatch(f, p, slop); if (pos) leaves += leaf(c, boost); c
-        case Range(f, lo, hi, il, ih, boost) =>
-          val base = col(f)
-          val loC = if (lo == "*") lit(true) else if (il) base >= lo else base > lo
-          val hiC = if (hi == "*") lit(true) else if (ih) base <= hi else base < hi
-          val c = loC && hiC; if (pos) leaves += leaf(c, boost); c
+        case lf: Leaf =>
+          val c = leafCol(lf); if (pos) leaves += leaf(c, lf.boost); c
         case And(l, r) => toCol(l, pos) && toCol(r, pos)
         case Or(l, r)  => toCol(l, pos) || toCol(r, pos)
         // Lucene/ES negation matches docs where the field is absent;
@@ -579,7 +563,27 @@ object QueryCompiler {
         case ScoreOnly(x) => { toCol(x, pos); lit(true) }
       }
       val pred = toCol(ast, pos = true)
-      CompiledQuery(pred, scoreOf(leaves.toSeq), Some(defaultLimit))
+      (pred, scoreOf(leaves.toSeq))
+    }
+
+    def compile(q: String, defaultLimit: Int,
+                defaultField: Option[String] = None,
+                defaultOr: Boolean = false): CompiledQuery = {
+      val (pred, score) = evaluate(parse(q, defaultField, defaultOr)) {
+        case Term(f, v, _) => termMatch(col(f), v)
+        // whole-token regex, same anchor model as the DSL `regexp`
+        case Regex(f, pat, _) => lower(col(f)).rlike("\\b(?:" + pat + ")\\b")
+        case Exists(f, _) => col(f).isNotNull
+        case Fuzzy(f, v, dist, _) =>
+          graft.functions.TextSketchFunctions.fuzzy_token_match(col(f), v, dist)
+        case Proximity(f, p, slop, _) => proximityMatch(f, p, slop)
+        case Range(f, lo, hi, il, ih, _) =>
+          val base = col(f)
+          val loC = if (lo == "*") lit(true) else if (il) base >= lo else base > lo
+          val hiC = if (hi == "*") lit(true) else if (ih) base <= hi else base < hi
+          loC && hiC
+      }
+      CompiledQuery(pred, score, Some(defaultLimit))
     }
 
     // tokenizer: parens, AND/OR/NOT keywords, field:value atoms, ranges,

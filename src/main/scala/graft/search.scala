@@ -1,8 +1,10 @@
 package graft
 
 import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.node.ObjectNode
 import graft.functions.WordRuns
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -37,9 +39,20 @@ object Search {
     q.minScore.fold(scored)(ms => scored.where(col("_score") >= lit(ms)))
   }
 
+  /** The engine's relevance order: `_score` descending, then `idCol`
+    * ascending — the tiebreak that makes every hit list a total order. */
+  private[graft] def relevanceOrder(idCol: String): Seq[Column] =
+    Seq(desc("_score"), col(idCol).asc)
+
+  /** [[rankHits]] for an operator without paging or shaping fields: the
+    * top `limit` of `scored` in relevance order, under the cap. */
+  private[graft] def rankHits(scored: DataFrame, limit: Int, cfg: IndexConfig,
+                              tiebreak: String): DataFrame =
+    rankHits(scored, CompiledQuery(lit(true), col("_score"), Some(limit)), cfg, tiebreak)
+
   /** The ranking half of [[topK]] over `scored` (rows carrying `_score`):
     * `search_after`, `sort`, `collapse`/inner hits, `from` and the
-    * max-results cap. */
+    * max-results cap — the one hit order of every scored operator. */
   private[graft] def rankHits(scored: DataFrame, q: CompiledQuery, cfg: IndexConfig,
                               tiebreak: String): DataFrame = {
     val limit = q.limit.getOrElse(cfg.maxResults).min(cfg.maxResults)
@@ -64,7 +77,7 @@ object Search {
       case Some(keys) => keys.map { case (c, asc) =>
         if (asc) c.asc else c.desc
       } :+ col(tiebreak).asc
-      case None => Seq(desc("_score"), col(tiebreak).asc)
+      case None => relevanceOrder(tiebreak)
     }
     // ES collapse: keep each field value's top hit in the result order.
     // Under the DEFAULT relevance order this is an argmin per key —
@@ -86,21 +99,19 @@ object Search {
       val k = q.collapseInner.get
       val f = q.collapseField.get
       val SALT = 32
-      val wSalt = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(f), pmod(xxhash64(col(tiebreak)), lit(SALT)))
-        .orderBy(desc("_score"), col(tiebreak).asc)
+      val wSalt = Window.partitionBy(col(f), pmod(xxhash64(col(tiebreak)), lit(SALT)))
+        .orderBy(relevanceOrder(tiebreak): _*)
       val local = paged.withColumn("_r", row_number().over(wSalt))
         .where(col("_r") <= k).drop("_r")
-      val wKey = org.apache.spark.sql.expressions.Window
-        .partitionBy(col(f)).orderBy(desc("_score"), col(tiebreak).asc)
+      val wKey = Window.partitionBy(col(f)).orderBy(relevanceOrder(tiebreak): _*)
       val inner = local.withColumn("_inner_rank", row_number().over(wKey))
         .where(col("_inner_rank") <= k)
       // outer page: the top `limit` group heads by relevance; the heads
       // list is ≤ limit rows — always broadcastable
       val heads = inner.where(col("_inner_rank") === 1)
-        .orderBy(desc("_score"), col(tiebreak).asc).limit(limit)
+        .orderBy(relevanceOrder(tiebreak): _*).limit(limit)
         .select(col(f).as("_head_key"))
-      val wHead = org.apache.spark.sql.expressions.Window.partitionBy(col(f))
+      val wHead = Window.partitionBy(col(f))
       return inner
         .join(broadcast(heads), col(f) === col("_head_key"), "left_semi")
         .withColumn("_head_score", max(col("_score")).over(wHead))
@@ -116,8 +127,7 @@ object Search {
           .agg(min_by(struct(cols.map(col): _*), ordKey).as("_top"))
           .select(cols.map(c => col(s"_top.$c").as(c)): _*)
       case (Some(f), Some(_)) =>
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col(f)).orderBy(order: _*)
+        val w = Window.partitionBy(col(f)).orderBy(order: _*)
         paged.withColumn("_collapse_rank", row_number().over(w))
           .where(col("_collapse_rank") === 1).drop("_collapse_rank")
       case _ => paged
@@ -682,6 +692,32 @@ object Search {
                    minTermFreq: Int = 2, minDocFreq: Int = 5,
                    maxQueryTerms: Int = 25,
                    minimumShouldMatchPct: Int = 30): DataFrame = {
+    val tf = mltCandidates(docs, field, likeIds, likeText, idCol, minTermFreq,
+      minDocFreq, maxQueryTerms, minimumShouldMatchPct)
+    // the statistics pass tokenizes the whole corpus — floor the scan
+    // (guide §2.5, r15) so a single-row-group corpus doesn't pay it on
+    // one task (the store-served twin skips this pass entirely)
+    val corpusToks = graft.pipeline.Spread.scanFloor(docs, col(idCol))
+      .select(explode(array_distinct(WordRuns.column(col(field)))).as("_t"))
+    val picked = corpusToks.join(broadcast(tf), Seq("_t"))
+      .groupBy("_t").agg(count(lit(1)).as("_df"), max(col("_tf")).as("_tf"))
+      .where(col("_df") >= minDocFreq)
+      .withColumn("_s", col("_tf").cast("double") / (col("_df") + lit(1)))
+      .orderBy(desc("_s"), asc("_t"))
+      .limit(maxQueryTerms)
+      .select("_t").collect().map(_.getString(0)).toSeq // bounded: <= maxQueryTerms
+    mltQueryPhase(docs, field, picked, likeIds, idCol,
+      minimumShouldMatchPct, cfg)
+  }
+
+  /** The prologue [[moreLikeThis]] and [[moreLikeThisFromStore]] share:
+    * the argument checks, then the like-source's candidate terms — `_t`
+    * with its like-tf `_tf` >= `minTermFreq`, the top 10·maxQueryTerms by
+    * tf desc, term asc. */
+  private def mltCandidates(docs: DataFrame, field: String, likeIds: Seq[Any],
+                            likeText: Option[String], idCol: String,
+                            minTermFreq: Int, minDocFreq: Int, maxQueryTerms: Int,
+                            minimumShouldMatchPct: Int): DataFrame = {
     require(likeIds.nonEmpty ^ likeText.isDefined,
       "more_like_this needs exactly one of likeIds / likeText")
     require(minTermFreq >= 1 && minDocFreq >= 1 && maxQueryTerms >= 1,
@@ -697,23 +733,9 @@ object Search {
         docs.where(col(idCol).isin(likeIds: _*))
           .select(explode(WordRuns.column(col(field))).as("_t"))
     }
-    val tf = likeToks.groupBy("_t").agg(count(lit(1)).as("_tf"))
+    likeToks.groupBy("_t").agg(count(lit(1)).as("_tf"))
       .where(col("_tf") >= minTermFreq)
       .orderBy(desc("_tf"), asc("_t")).limit(maxQueryTerms * 10)
-    // the statistics pass tokenizes the whole corpus — floor the scan
-    // (guide §2.5, r15) so a single-row-group corpus doesn't pay it on
-    // one task (the store-served twin skips this pass entirely)
-    val corpusToks = graft.pipeline.Spread.scanFloor(docs, col(idCol))
-      .select(explode(array_distinct(WordRuns.column(col(field)))).as("_t"))
-    val picked = corpusToks.join(broadcast(tf), Seq("_t"))
-      .groupBy("_t").agg(count(lit(1)).as("_df"), max(col("_tf")).as("_tf"))
-      .where(col("_df") >= minDocFreq)
-      .withColumn("_s", col("_tf").cast("double") / (col("_df") + lit(1)))
-      .orderBy(desc("_s"), asc("_t"))
-      .limit(maxQueryTerms)
-      .select("_t").collect().map(_.getString(0)).toSeq // bounded: <= maxQueryTerms
-    mltQueryPhase(docs, field, picked, likeIds, idCol,
-      minimumShouldMatchPct, cfg)
   }
 
   /** [[moreLikeThis]]'s query phase, shared with the store-served form:
@@ -738,10 +760,8 @@ object Search {
     // costs more than spreading the ≤ maxQueryTerms regex matches buys at
     // both bench scales (the floor is for the STATISTICS pass above) —
     // and the ordered page stays a TakeOrderedAndProject
-    docs.where(keep && matched >= msm)
-      .withColumn("_score", matched)
-      .orderBy(desc("_score"), asc(idCol))
-      .limit(cfg.maxResults)
+    rankHits(docs.where(keep && matched >= msm).withColumn("_score", matched),
+      cfg.maxResults, cfg, idCol)
   }
 
   /** [[moreLikeThis]] with the corpus-df pass served from a
@@ -773,25 +793,9 @@ object Search {
                             maxQueryTerms: Int = 25,
                             minimumShouldMatchPct: Int = 30,
                             nBuckets: Int = 64): DataFrame = {
-    require(likeIds.nonEmpty ^ likeText.isDefined,
-      "more_like_this needs exactly one of likeIds / likeText")
-    require(minTermFreq >= 1 && minDocFreq >= 1 && maxQueryTerms >= 1,
-      "more_like_this thresholds must be >= 1")
-    require(minimumShouldMatchPct >= 0 && minimumShouldMatchPct <= 100,
-      s"minimum_should_match must be a percentage in [0, 100]")
-    val spark = docs.sparkSession
-    val likeToks = likeText match {
-      case Some(t) =>
-        import spark.implicits._
-        Seq(t).toDF(field).select(explode(WordRuns.column(col(field))).as("_t"))
-      case None =>
-        docs.where(col(idCol).isin(likeIds: _*))
-          .select(explode(WordRuns.column(col(field))).as("_t"))
-    }
     // bounded: <= 10 * maxQueryTerms (term, like-tf) pairs
-    val cand = likeToks.groupBy("_t").agg(count(lit(1)).as("_tf"))
-      .where(col("_tf") >= minTermFreq)
-      .orderBy(desc("_tf"), asc("_t")).limit(maxQueryTerms * 10)
+    val cand = mltCandidates(docs, field, likeIds, likeText, idCol, minTermFreq,
+        minDocFreq, maxQueryTerms, minimumShouldMatchPct)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq
     if (cand.isEmpty)
       return docs.where(lit(false)).withColumn("_score", lit(0))
@@ -812,6 +816,10 @@ object Search {
   }
 
   private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** `{key: node}`: a clause of a body, handed on as a body of its own. */
+  private def bodyOf(key: String, node: JsonNode): ObjectNode =
+    mapper.createObjectNode().set[ObjectNode](key, node)
 
   /** ES-8 `knn` search body: top-k nearest neighbors of a literal
     * `query_vector` over a vector column, optionally pre-filtered by a DSL
@@ -853,16 +861,11 @@ object Search {
       val clauses = knRaw.elements.asScala.toSeq
       require(clauses.size >= 2, "multi-knn needs at least two clauses")
       val size = Option(root.get("size")).map(_.asInt).getOrElse(10)
-      val parts = clauses.map { c =>
-        val w = mapper.createObjectNode()
-        w.set[JsonNode]("knn", c)
-        knnSearch(docs, w.toString, cfg, idCol)
-          .select(col(idCol), col("_score"))
-      }
+      val parts = clauses.map(c => knnSearch(docs, bodyOf("knn", c).toString, cfg, idCol)
+        .select(col(idCol), col("_score")))
       val merged = parts.reduce(_ unionByName _)
         .groupBy(col(idCol)).agg(sum(col("_score")).as("_score"))
-      return docs.join(broadcast(merged), Seq(idCol))
-        .orderBy(desc("_score"), asc(idCol)).limit(size)
+      return rankHits(docs.join(broadcast(merged), Seq(idCol)), size, cfg, idCol)
     }
     val kn = Some(knRaw).filter(_.isObject)
       .getOrElse(throw new IllegalArgumentException("body needs a 'knn' object"))
@@ -893,12 +896,9 @@ object Search {
       require(n.isNumber, s"knn similarity must be a number, got: $n")
       n.asDouble
     }
-    val pred = Option(kn.get("filter")).map { fq =>
-      val w = mapper.createObjectNode()
-      w.set[JsonNode]("query", fq)
-      QueryCompiler.compile(w.toString, Int.MaxValue, idCol,
-        schema = docs.schema).predicate
-    }.getOrElse(lit(true))
+    val pred = Option(kn.get("filter")).map(fq => QueryCompiler.compile(
+      bodyOf("query", fq).toString, Int.MaxValue, idCol, schema = docs.schema).predicate)
+      .getOrElse(lit(true))
     // double-precision literal vector: engine-portable scores (and
     // vec_cosine mixes element types, so float corpus columns are fine)
     val qvCol = array(qv.map(lit): _*)
@@ -911,27 +911,26 @@ object Search {
       case None =>
         // ES: `size` (default k) caps the returned page; k caps the search
         val size = Option(root.get("size")).map(_.asInt).getOrElse(k).min(k)
-        scored.orderBy(desc("_score"), asc(idCol)).limit(size)
+        rankHits(scored, size, cfg, idCol)
       case Some(_) =>
         // HYBRID (ES 8.4 semantics): final score = query score + knn
         // score, where knn contributes ONLY for docs inside its top-k.
         // The k survivors broadcast back onto the query scan — one corpus
-        // pass plus a k-row broadcast join, never a second scan
-        val size = Option(root.get("size")).map(_.asInt).getOrElse(10)
-        val base = root.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+        // pass plus a k-row broadcast join, never a second scan. The page
+        // is the body's own `size` (default 10), compiled with the query
+        val base = root.deepCopy[ObjectNode]()
         base.remove("knn")
         val cq = QueryCompiler.compile(base.toString, 10, idCol,
           schema = docs.schema)
-        val knnHits = scored.orderBy(desc("_score"), asc(idCol)).limit(k)
+        val knnHits = rankHits(scored, k, cfg, idCol)
           .select(col(idCol).as("_knn_id"), col("_score").as("_knn_score"))
         val qScore = when(coalesce(cq.predicate, lit(false)),
           cq.score).otherwise(lit(0.0))
-        docs.join(broadcast(knnHits), col(idCol) === col("_knn_id"), "left")
+        rankHits(docs.join(broadcast(knnHits), col(idCol) === col("_knn_id"), "left")
           .withColumn("_score",
             qScore.cast("double") + coalesce(col("_knn_score"), lit(0.0)))
           .where(coalesce(cq.predicate, lit(false)) || col("_knn_id").isNotNull)
-          .drop("_knn_id", "_knn_score")
-          .orderBy(desc("_score"), asc(idCol)).limit(size)
+          .drop("_knn_id", "_knn_score"), cq, cfg, idCol)
     }
   }
 
@@ -944,9 +943,12 @@ object Search {
     * The window is a bounded top-k (≤ max-results), so the second pass
     * re-scores a capped set — at 100 TB the expensive secondary predicate
     * runs on `window_size` rows, not the corpus; that bound is the whole
-    * point of the operator. Declared subset: `size` must fit inside
-    * `window_size` (fail-loud otherwise) — ES's below-window splice
-    * (original-order hits after the rescored window) is not modeled. */
+    * point of the operator. The re-scored window is then ranked, paged
+    * (`from`/`size`) and shaped (`_source`, `script_fields`) like
+    * [[search]]'s hits; a body `sort` is rejected, as in ES. Declared
+    * subset: `from + size` must fit inside `window_size` (fail-loud
+    * otherwise) — ES's below-window splice (original-order hits after the
+    * rescored window) is not modeled. */
   def rescore(docs: DataFrame, body: String, cfg: IndexConfig = IndexConfig(),
               idCol: String = "doc_id"): DataFrame = {
     val root = mapper.readTree(body)
@@ -970,21 +972,20 @@ object Search {
     val wq = Option(qNode.get("query_weight")).map(_.asDouble).getOrElse(1.0)
     val wr = Option(qNode.get("rescore_query_weight")).map(_.asDouble).getOrElse(1.0)
     val mode = Option(qNode.get("score_mode")).map(_.asText).getOrElse("total")
-    val base = root.deepCopy[com.fasterxml.jackson.databind.node.ObjectNode]()
+    val base = root.deepCopy[ObjectNode]()
     base.remove("rescore")
     val cq = QueryCompiler.compile(base.toString, 10, idCol,
       schema = docs.schema)
+    require(cq.sort.isEmpty, "rescore: a body 'sort' cannot be combined with " +
+      "rescore (ES rejects it) — the rescored window is ranked by _score")
     val size = cq.limit.getOrElse(10)
-    require(size <= window,
-      s"rescore: size ($size) must fit window_size ($window) — the " +
-        "below-window original-order splice is not modeled (declared subset)")
-    val hits = topK(docs, cq.copy(limit = Some(window), from = 0), cfg, idCol)
-    val rqC = {
-      val w = mapper.createObjectNode()
-      w.set[JsonNode]("query", rq.deepCopy[JsonNode]())
-      QueryCompiler.compile(w.toString, Int.MaxValue, idCol,
-        schema = docs.schema)
-    }
+    require(cq.from.toLong + size <= window,
+      s"rescore: from + size (${cq.from} + $size) must fit window_size ($window) — " +
+        "the below-window original-order splice is not modeled (declared subset)")
+    val hits = rankHits(scoredMatches(docs, cq),
+      cq.copy(limit = Some(window), from = 0), cfg, idCol)
+    val rqC = QueryCompiler.compile(bodyOf("query", rq).toString, Int.MaxValue, idCol,
+      schema = docs.schema)
     val orig = col("_score") * wq
     val rs = rqC.score * wr
     val combined = mode match {
@@ -996,9 +997,10 @@ object Search {
       case other => throw new IllegalArgumentException(
         s"rescore: unknown score_mode '$other' (total|multiply|avg|max|min)")
     }
-    hits.withColumn("_score", when(rqC.predicate, combined).otherwise(orig))
-      .orderBy(desc("_score"), asc(idCol))
-      .limit(size)
+    val rescored = hits.withColumn("_score", when(rqC.predicate, combined).otherwise(orig))
+    shapeHits(rankHits(rescored, CompiledQuery(lit(true), col("_score"), Some(size),
+        from = cq.from), cfg, idCol),
+      docs.columns.toSeq, QueryMeta(body), cq, Seq(idCol))
   }
 
   /** ES `_msearch`: several search bodies answered in one call. Each body
@@ -1151,7 +1153,6 @@ object Search {
     * Declared subset: numeric/boolean scripts (the mini-language has no
     * string literals), types double | long | boolean. */
   def withRuntimeFields(docs: DataFrame, body: String): (DataFrame, String) = {
-    import com.fasterxml.jackson.databind.node.ObjectNode
     val root = mapper.readTree(body)
     require(root != null && root.isObject, "search body must be a JSON object")
     val rm = Option(root.get("runtime_mappings")).filter(_.isObject)
@@ -1743,17 +1744,6 @@ object Search {
     completionOver(dict, prefix.toLowerCase, size, fuzziness, fuzzyPrefixLength)
   }
 
-  /** ES 8 `rrf` retriever: reciprocal rank fusion of several ranked hit
-    * lists — score(d) = Σ_r 1/(rank_constant + rank_r(d)), documents
-    * missing from a ranking contribute nothing for it (the ES window
-    * semantics). Each input frame must carry `idCol` and `_score`; its
-    * ranking order is (score desc, id asc) — the engine's deterministic
-    * hit order.
-    *
-    * 100 TB shape: every input is an already-capped top-k hit list (ES
-    * caps at rank_window_size; ours at maxResults), so the per-ranking
-    * row_number window runs on k rows, and the fusion is a union +
-    * one hash aggregate over ≤ Σk rows — never corpus-sized. */
   /** ES 8.14+ retriever tree: `{"retriever": {…}, "size": N}` — the
     * modern search-API composition surface. Declared subset of retriever
     * types: `standard` (a query body over the doc frame), `knn` (the ES-8
@@ -1785,17 +1775,11 @@ object Search {
             s"unsupported standard retriever key(s): ${unknownS.mkString(", ")}")
           val q = Option(spec.get("query")).getOrElse(
             throw new IllegalArgumentException("standard retriever needs 'query'"))
-          val w = mapper.createObjectNode()
-          w.set[JsonNode]("query", q)
-          w.put("size", cap)
-          search(docs, w.toString, cfg, pkCols)
+          search(docs, bodyOf("query", q).put("size", cap).toString, cfg, pkCols)
             .select(col(pkCols.head), col("_score"))
         case "knn" =>
-          val w = mapper.createObjectNode()
-          w.set[JsonNode]("knn", spec)
-          knnSearch(docs, w.toString, cfg, pkCols.head)
+          knnSearch(docs, bodyOf("knn", spec).put("size", cap).toString, cfg, pkCols.head)
             .select(col(pkCols.head), col("_score"))
-            .limit(cap)
         case "rrf" =>
           val unknownR = spec.fieldNames.asScala.toSet --
             Set("retrievers", "rank_window_size", "rank_constant")
@@ -1911,24 +1895,33 @@ object Search {
       graft.plans.GlobalRankPlan(sortOrders, rankAttr, Bridge.logicalPlan(df)))
   }
 
+  /** ES 8 `rrf` retriever: reciprocal rank fusion of several ranked hit
+    * lists — score(d) = Σ_r 1/(rank_constant + rank_r(d)), documents
+    * missing from a ranking contribute nothing for it (the ES window
+    * semantics). Each input frame must carry `idCol` and `_score`; its
+    * ranking order is [[relevanceOrder]] — the engine's deterministic hit
+    * order — and the fused list is ranked by [[rankHits]] under the
+    * default max-results cap.
+    *
+    * 100 TB shape: every input is an already-capped top-k hit list (ES
+    * caps at rank_window_size; ours at maxResults), so the per-ranking
+    * [[globalRank]] runs on k rows, and the fusion is a union +
+    * one hash aggregate over ≤ Σk rows — never corpus-sized. */
   def rrf(rankings: Seq[DataFrame], idCol: String = "doc_id",
           rankConstant: Int = 60, size: Int = 10): DataFrame = {
     require(rankings.size >= 2, "rrf needs at least two rankings")
     require(rankConstant >= 1, s"rrf rank_constant must be >= 1, got $rankConstant")
     require(size >= 1, s"rrf size must be >= 1, got $size")
     val contribs = rankings.map { r =>
-      globalRank(r.select(col(idCol), col("_score")),
-          Seq(desc("_score"), asc(idCol)), "_rrf_rank")
+      globalRank(r.select(col(idCol), col("_score")), relevanceOrder(idCol), "_rrf_rank")
         .select(col(idCol),
           (lit(1.0) / (lit(rankConstant.toDouble) + col("_rrf_rank")))
             .as("_rrf_contrib"))
     }
-    contribs.reduce(_ unionAll _)
+    rankHits(contribs.reduce(_ unionAll _)
       .groupBy(col(idCol))
       .agg(sum(col("_rrf_contrib")).as("_score"),
-        count(lit(1)).cast("int").as("_rrf_matched"))
-      .orderBy(desc("_score"), asc(idCol))
-      .limit(size)
+        count(lit(1)).cast("int").as("_rrf_matched")), size, IndexConfig(), idCol)
   }
 
   /** ES `_rank_eval`: relevance evaluation of a query battery against
@@ -1959,10 +1952,9 @@ object Search {
       // docs lexicographically). Only the top-k matter, so the cut is a
       // distributed TakeOrderedAndProject and the rank runs on ≤ k rows —
       // never a corpus-sized single-partition window.
-      val topK = search(docs, query, cfg, pkCols)
-        .select(col(pk), col("_score"))
-        .orderBy(desc("_score"), asc(pk)).limit(k)
-      val hits = globalRank(topK, Seq(desc("_score"), asc(pk)), "_re_rank")
+      val topK = rankHits(search(docs, query, cfg, pkCols).select(col(pk), col("_score")),
+        k, cfg, pk)
+      val hits = globalRank(topK, relevanceOrder(pk), "_re_rank")
         .select(col(pk).cast("string").as("_re_hit"), col("_re_rank"))
       val joined = hits.join(broadcast(rated),
           hits("_re_hit") === rated("_re_id"), "left")

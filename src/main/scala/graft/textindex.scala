@@ -1045,14 +1045,12 @@ object TextIndex {
     val exact =
       if (!pureIndex || q.startsWith("{") || pkCols.size != 1) None
       else try {
-        val ast = LuceneLite.ast(q, None, dOr)
-        if (cover(ast, indexedFields).isDefined) exactLeavesOf(ast, indexedFields)
-          .map(ls => (ast, ls))
-        else None
+        Some(LuceneLite.ast(q, None, dOr)).filter(ast =>
+          cover(ast, indexedFields).isDefined && allExact(ast, indexedFields))
       } catch { case _: Exception => None }
     exact match {
-      case Some((ast, leaves)) =>
-        runPureIndex(docs, postings, ast, leaves, meta, cfg, pkCols.head, nBuckets)
+      case Some(ast) =>
+        runPureIndex(docs, postings, ast, meta, cfg, pkCols.head, nBuckets)
       case None =>
         Search.search(
           prefilter(docs, postings, query, pkCols.head, indexedFields, nBuckets,
@@ -1061,22 +1059,23 @@ object TextIndex {
     }
   }
 
-  /** Leaves of the AST in traversal order, IF every leaf is exactly
-    * postings-decidable: a word term (Eq probe ⟺ match) or a trailing-`*`
-    * word prefix (StartsWith probe ⟺ match). Any other leaf → None. */
-  private def exactLeavesOf(n: Node, fields: Set[String]): Option[Seq[Probe]] = n match {
-    case t: Term if fields.contains(t.field) =>
-      t.value.toLowerCase match {
-        case WordTerm() => Some(Seq(EqProbe(t.field, t.value.toLowerCase)))
-        case StarPrefixTerm(p) => Some(Seq(PrefixProbe(t.field, p)))
-        case _ => None
-      }
-    case And(l, r) =>
-      for { a <- exactLeavesOf(l, fields); b <- exactLeavesOf(r, fields) } yield a ++ b
-    case Or(l, r) =>
-      for { a <- exactLeavesOf(l, fields); b <- exactLeavesOf(r, fields) } yield a ++ b
-    case Not(x) => exactLeavesOf(x, fields)
+  /** The probe whose postings membership decides `t` exactly: a word term
+    * (Eq probe ⟺ match) or a trailing-`*` word prefix (StartsWith probe
+    * ⟺ match). Any other term → None. */
+  private def exactProbe(t: Term): Option[Probe] = t.value.toLowerCase match {
+    case WordTerm() => Some(EqProbe(t.field, t.value.toLowerCase))
+    case StarPrefixTerm(p) => Some(PrefixProbe(t.field, p))
     case _ => None
+  }
+
+  /** Whether every leaf of the AST is an indexed term with an
+    * [[exactProbe]], under AND/OR/NOT only. */
+  private def allExact(n: Node, fields: Set[String]): Boolean = n match {
+    case t: Term => fields.contains(t.field) && exactProbe(t).isDefined
+    case And(l, r) => allExact(l, fields) && allExact(r, fields)
+    case Or(l, r) => allExact(l, fields) && allExact(r, fields)
+    case Not(x) => allExact(x, fields)
+    case _ => false
   }
 
   /** Pure-index execution: one tagged, pruned postings scan per leaf; a
@@ -1084,35 +1083,29 @@ object TextIndex {
     * over flags (flags are never null, and a missing posting reproduces
     * termMatch-on-null = no-match and NOT-on-null = match); index-side
     * top-k; docs joined back (broadcast — the hit list is capped) only when
-    * rows or `_source` are requested. */
+    * rows or `_source` are requested, then re-ranked so the loaded rows
+    * come back in rank order. */
   private def runPureIndex(docs: DataFrame, postings: DataFrame, ast: Node,
-                           leaves: Seq[Probe], meta: QueryMeta, cfg: IndexConfig,
+                           meta: QueryMeta, cfg: IndexConfig,
                            idCol: String, nBuckets: Int): DataFrame = {
-    val scans = leaves.zipWithIndex.map { case (p, i) =>
+    // the compile path's own evaluator over flags: leaf i's match is the
+    // flag of the i-th probe, collected in the same traversal
+    val probes = scala.collection.mutable.ArrayBuffer[Probe]()
+    val (pred, score) = LuceneLite.evaluate(ast) {
+      case t: Term =>
+        probes += exactProbe(t).getOrElse(
+          throw new IllegalStateException(s"non-exact leaf: $t"))
+        col(s"_f${probes.size - 1}") === 1
+      case other => throw new IllegalStateException(s"non-exact leaf: $other")
+    }
+    val scans = probes.toSeq.zipWithIndex.map { case (p, i) =>
       postingsFor(postings, Set(p), nBuckets)
         .select(col("doc_id"), lit(i).as("_leaf"))
     }
-    val flagCols = leaves.indices.map(i =>
+    val flagCols = probes.indices.map(i =>
       max(when(col("_leaf") === i, 1).otherwise(0)).as(s"_f$i"))
     val flags = scans.reduce(_.union(_))
       .groupBy("doc_id").agg(flagCols.head, flagCols.tail: _*)
-    // rebuild predicate + score over flags, mirroring LuceneLite.compile's
-    // traversal (leaf order identical to exactLeavesOf)
-    var k = -1
-    val scoreLeaves = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Column]()
-    def toCol(n: Node, pos: Boolean): org.apache.spark.sql.Column = n match {
-      case t: Term =>
-        k += 1
-        val f = col(s"_f$k") === 1
-        if (pos) scoreLeaves += when(f, t.boost).otherwise(0)
-        f
-      case And(l, r) => toCol(l, pos) && toCol(r, pos)
-      case Or(l, r)  => toCol(l, pos) || toCol(r, pos)
-      case Not(x)    => !toCol(x, pos = false)
-      case other => throw new IllegalStateException(s"non-exact leaf: $other")
-    }
-    val pred = toCol(ast, pos = true)
-    val score = if (scoreLeaves.isEmpty) lit(0) else scoreLeaves.reduce(_ + _)
     // the scan path's ranking and shaping: Lucene-lite carries no paging
     // or shaping fields, so the ranking is relevance order capped at
     // max-results
@@ -1121,11 +1114,12 @@ object TextIndex {
       flags.where(pred).withColumn("_score", score)
         .select(col("doc_id").as(idCol), col("_score")), q, cfg, idCol)
     // docs are read only when rows or `_source` are requested (broadcast —
-    // the hit list is capped)
+    // the hit list is capped); the join keeps the doc side's order, so the
+    // ≤ cap loaded rows are ranked again
     val rows =
       if (!meta.loadRows && !meta.loadSource) hits
-      else docs.join(broadcast(hits), Seq(idCol), "inner")
-        .select(docs.columns.map(col).toSeq :+ col("_score"): _*)
+      else Search.rankHits(docs.join(broadcast(hits), Seq(idCol), "inner")
+        .select(docs.columns.map(col).toSeq :+ col("_score"): _*), q, cfg, idCol)
     Search.shapeHits(rows, docs.columns.toSeq, meta, q, Seq(idCol))
   }
 }

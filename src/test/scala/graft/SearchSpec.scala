@@ -921,6 +921,31 @@ class SearchSpec extends AnyFunSuite {
           "rescore": {"window_size": 3,
             "query": {"rescore_query": {"match_all": {}}}}}"""))
       .getMessage.contains("window_size"))
+    // paging and shaping ride the rescored window: spark|batch|streaming
+    // scores {1: 2, 2: 1, 3: 2, 4: 1}; + 2·streaming → 3 (4), 2 (3), 1 (2),
+    // 4 (1)
+    val numbered = docs.withColumn("n", col("doc_id").cast("long"))
+    def paged(extra: String) = Search.rescore(numbered,
+      s"""{"query": {"match": {"text": "spark batch streaming"}}, $extra
+           "rescore": {"window_size": 4, "query": {
+             "rescore_query": {"match": {"text": "streaming"}},
+             "rescore_query_weight": 2.0}}}""")
+    def ids(extra: String) = paged(extra).select("doc_id").as[String].collect().toSeq
+    assert(ids(""""size": 2,""") == Seq("3", "2"))
+    assert(ids(""""from": 2, "size": 2,""") == Seq("1", "4"))
+    val shaped = paged(""""from": 2, "size": 2, "_source": ["lang"],
+        "script_fields": {"n10": {"script": "doc.n * 10"}},""")
+    assert(shaped.columns.toSeq == Seq("doc_id", "lang", "_score", "n10"))
+    assert(shaped.collect().map(r => (r.getString(0), r.getString(1),
+        r.getDouble(2), r.getLong(3))).toSeq ==
+      Seq(("1", "en", 2.0, 10L), ("4", "de", 1.0, 40L)))
+    // the window must hold the whole page; a body sort is rejected, not
+    // silently replaced by the rescored order
+    assert(intercept[IllegalArgumentException](paged(""""from": 3, "size": 2,"""))
+      .getMessage.contains("window_size"))
+    assert(intercept[IllegalArgumentException](
+      paged(""""size": 2, "sort": [{"doc_id": "asc"}],"""))
+      .getMessage.contains("sort"))
   }
 
   test("terms lookup: array and scalar paths splice literal lists; missing doc matches nothing") {

@@ -9,7 +9,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * store-lifecycle kernel ([[StoreFs]]); parquet data (stores and fixture
   * tables alike) opens through [[StoreFs.read]]; "term matches" has one
   * definition, [[QueryCompiler.termMatch]]; the index analyzer has one,
-  * [[graft.functions.WordRuns]]; and the multiset compare of the append
+  * [[graft.functions.WordRuns]]; the relevance order has one,
+  * [[Search.relevanceOrder]]; and the multiset compare of the append
   * contract, `exceptAll`, lives only in [[StoreFs.appendNeeded]]. Over
   * `src/main/scala` and `src/test/scala`: sessions are built only by
   * [[SparkEntry.localSession]], and the append contract has no conf
@@ -124,15 +125,13 @@ class SourceLintSpec extends AnyFunSuite {
         s"${f.getPath}: ${text.slice(at - 40, at + 40)}"
     }
     assert(okapi.size == 1, okapi.mkString("\n"))
+    // the relevance order is spelled once, in Search.relevanceOrder: every
+    // scored operator ranks through Search.rankHits, which uses it
     val relevance = java.util.regex.Pattern.quote("desc(\"_score\")").r
-    val inTextIndex = calls(relevance).collect {
-      case (f, at, text) if f.getName == "textindex.scala" => text.slice(at, at + 60)
+    val found = calls(relevance).map { case (f, at, text) =>
+      val owner = text.lastIndexOf(" def ", at) + " def ".length
+      s"${f.getName}: ${text.slice(owner, text.indexOf('(', owner))}"
     }
-    assert(inTextIndex.isEmpty, inTextIndex.mkString("\n"))
-    val search = sources.find(_.getName == "search.scala").get
-    val text = new String(java.nio.file.Files.readAllBytes(search.toPath), "UTF-8")
-    val from = text.indexOf("def searchWithTotal(")
-    val body = text.substring(from, text.indexOf("\n  def ", from + 1))
-    assert(from >= 0 && relevance.findFirstIn(body).isEmpty, body)
+    assert(found == Seq("search.scala: relevanceOrder"), found.mkString("\n"))
   }
 }

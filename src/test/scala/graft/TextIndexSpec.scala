@@ -111,6 +111,9 @@ class TextIndexSpec extends AnyFunSuite {
     "#options:load-rows=false#text:batch",
     "#options:load-source=true#text:batch AND NOT lang:de",
     "#options:load-rows=false,load-source=true#text:batch AND NOT lang:de",
+    // rank order differs from doc order: the boosted doc 4 ranks first
+    "text:batch OR text:streaming^3",
+    "#options:load-source=true#text:batch OR text:streaming^3",
     // literal-run covers: phrase, punctuated term, proximity, '?' wildcard
     "text:\"batch fast\"",
     "text:sp?rk",
@@ -140,8 +143,10 @@ class TextIndexSpec extends AnyFunSuite {
         Seq("doc_id"), fields, 8, pureIndex = pure)
       assert(indexed.schema.map(f => (f.name, f.dataType)) ==
         scan.schema.map(f => (f.name, f.dataType)), s"schema for: $q (pure=$pure)")
-      val a = scan.collect().map(_.toSeq).toSet
-      val b = indexed.collect().map(_.toSeq).toSet
+      // ordered: every path returns its hits in rank order, the pure
+      // path's loaded rows and `_source` included
+      val a = scan.collect().map(_.toSeq).toSeq
+      val b = indexed.collect().map(_.toSeq).toSeq
       assert(a == b, s"result mismatch for: $q (pure=$pure)")
     }
   }
@@ -159,9 +164,9 @@ class TextIndexSpec extends AnyFunSuite {
     // load-source parity through the pure path
     val qs = "#options:load-rows=false,load-source=true#text:batch"
     val a = Search.search(docs, qs, IndexConfig(), Seq("doc_id"))
-      .collect().map(_.toSeq).toSet
+      .collect().map(_.toSeq).toSeq
     val b = TextIndex.searchIndexed(docs, postings, qs, IndexConfig(),
-      Seq("doc_id"), fields, 8, pureIndex = true).collect().map(_.toSeq).toSet
+      Seq("doc_id"), fields, 8, pureIndex = true).collect().map(_.toSeq).toSeq
     assert(a == b)
   }
 
