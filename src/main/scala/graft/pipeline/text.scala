@@ -597,11 +597,10 @@ object TextStats {
     // partitioner re-executed the gram aggregate for its sampling pass);
     // doc_id order within each bucket keeps the min/max row-group pruning
     // the probes rely on
-    byDocCounts(df, idCol, gram, key)
-      .withColumn("bucket", ledgerBucket(LedgerBuckets))
-      .repartition(col("bucket"))
-      .sortWithinPartitions("doc_id", key)
-      .write.mode("overwrite").partitionBy("bucket").parquet(s"$path/bydoc")
+    ledgerWriter(byDocCounts(df, idCol, gram, key)
+        .withColumn("bucket", ledgerBucket(LedgerBuckets))
+        .repartition(col("bucket")), key)
+      .mode("overwrite").parquet(s"$path/bydoc")
     graft.StoreFs.writeMarker(spark, s"$path/bydoc", "_graft_buckets",
       LedgerBuckets.toString)
     // agg derives from the written ledger — one ledger read instead of a
@@ -610,6 +609,11 @@ object TextStats {
       .groupBy(col(key)).agg(sum(col("c")).cast("long").as(cnt))
       .sort(key).write.mode("overwrite").parquet(s"$path/agg")
   }
+
+  /** Every ledger write — build, append and sweep — partitioned by
+    * `bucket` and `(doc_id, key)`-sorted within files. */
+  private def ledgerWriter(rows: DataFrame, key: String) =
+    graft.StoreFs.sortedWrite(rows, Seq("bucket"), Seq("doc_id", key))
 
   /** The keyed ledger opened for a probe or a sweep: a previous sweep's
     * crashed bucket swap is recovered first. */
@@ -687,8 +691,8 @@ object TextStats {
         }
       return
     }
-    delta.withColumn("bucket", ledgerBucket(b))
-      .write.mode("append").partitionBy("bucket").parquet(bydoc)
+    ledgerWriter(delta.withColumn("bucket", ledgerBucket(b)), key)
+      .mode("append").parquet(bydoc)
     if (batchId.exists(countStoreHoldsBatch(spark, s"$path/agg", _)))
       return // replayed batch: the agg fold already landed
     // the agg fold is a batch-sized DELTA segment, not a store rewrite —
@@ -739,9 +743,9 @@ object TextStats {
     //    then the kernel's per-bucket swap
     graft.StoreFs.swapPartitions(spark, s"$path/bydoc",
         touched.map(t => s"bucket=$t")) { tmp =>
-      rows.join(broadcast(ids), Seq("doc_id"), "left_anti")
-        .repartition(col("bucket")).sortWithinPartitions("doc_id", key)
-        .write.mode("overwrite").partitionBy("bucket").parquet(tmp)
+      ledgerWriter(rows.join(broadcast(ids), Seq("doc_id"), "left_anti")
+          .repartition(col("bucket")), key)
+        .mode("overwrite").parquet(tmp)
     }
   }
 

@@ -945,7 +945,8 @@ object Search {
     * runs on `window_size` rows, not the corpus; that bound is the whole
     * point of the operator. The re-scored window is then ranked, paged
     * (`from`/`size`) and shaped (`_source`, `script_fields`) like
-    * [[search]]'s hits; a body `sort` is rejected, as in ES. Declared
+    * [[search]]'s hits; a body `sort` or `collapse` is rejected, as in
+    * ES, and so is `search_after` (the window is paged by `from`). Declared
     * subset: `from + size` must fit inside `window_size` (fail-loud
     * otherwise) — ES's below-window splice (original-order hits after the
     * rescored window) is not modeled. */
@@ -978,6 +979,10 @@ object Search {
       schema = docs.schema)
     require(cq.sort.isEmpty, "rescore: a body 'sort' cannot be combined with " +
       "rescore (ES rejects it) — the rescored window is ranked by _score")
+    require(cq.collapseField.isEmpty, "rescore: a body 'collapse' cannot be " +
+      "combined with rescore (ES rejects it)")
+    require(cq.searchAfter.isEmpty, "rescore: a body 'search_after' cannot be " +
+      "combined with rescore — page the rescored window with from/size")
     val size = cq.limit.getOrElse(10)
     require(cq.from.toLong + size <= window,
       s"rescore: from + size (${cq.from} + $size) must fit window_size ($window) — " +
@@ -1674,14 +1679,15 @@ object Search {
         explode(array_distinct(WordRuns.column(col(field)))).as("suggestion"): _*)
       .groupBy((contextCols :+ "suggestion").map(col): _*)
       .agg(count(lit(1)).as("freq"))
-    val clustered =
-      if (contextCols.nonEmpty) dict.repartition(contextCols.map(col): _*)
-      else dict
-    val writer = clustered.sortWithinPartitions("suggestion")
-      .write.mode("overwrite")
-    (if (contextCols.nonEmpty) writer.partitionBy(contextCols: _*) else writer)
-      .parquet(path)
+    completionWriter(dict, contextCols).mode("overwrite").parquet(path)
   }
+
+  /** A completion dictionary's write: clustered by its context columns and
+    * term-sorted within files. */
+  private def completionWriter(dict: DataFrame, contextCols: Seq[String]) =
+    StoreFs.sortedWrite(
+      if (contextCols.nonEmpty) dict.repartition(contextCols.map(col): _*) else dict,
+      contextCols, Seq("suggestion"))
 
   /** Incremental maintenance for [[writeCompletionStore]]: per-context
     * doc-count delta over ONLY the new docs, merged into the stored
@@ -1711,12 +1717,7 @@ object Search {
       val merged = store.unionByName(delta)
         .groupBy((contextCols :+ "suggestion").map(col): _*)
         .agg(sum(col("freq")).cast("long").as("freq"))
-      val clustered =
-        if (contextCols.nonEmpty) merged.repartition(contextCols.map(col): _*)
-        else merged
-      val writer = clustered.sortWithinPartitions("suggestion").write
-      (if (contextCols.nonEmpty) writer.partitionBy(contextCols: _*) else writer)
-        .parquet(tmp)
+      completionWriter(merged, contextCols).parquet(tmp)
     }
   }
 
@@ -1793,7 +1794,7 @@ object Search {
           val window = Option(spec.get("rank_window_size")).map(_.asInt)
             .getOrElse(math.max(cap, 10))
           val rc = Option(spec.get("rank_constant")).map(_.asInt).getOrElse(60)
-          rrf(children.map(eval(_, window)), pkCols.head, rc, cap)
+          rrf(children.map(eval(_, window)), pkCols.head, rc, cap, cfg)
         case other => throw new IllegalArgumentException(
           s"unsupported retriever type '$other' (standard/knn/rrf — declared subset)")
       }
@@ -1900,15 +1901,16 @@ object Search {
     * missing from a ranking contribute nothing for it (the ES window
     * semantics). Each input frame must carry `idCol` and `_score`; its
     * ranking order is [[relevanceOrder]] — the engine's deterministic hit
-    * order — and the fused list is ranked by [[rankHits]] under the
-    * default max-results cap.
+    * order — and the fused list is ranked by [[rankHits]] under `cfg`'s
+    * max-results cap.
     *
     * 100 TB shape: every input is an already-capped top-k hit list (ES
     * caps at rank_window_size; ours at maxResults), so the per-ranking
     * [[globalRank]] runs on k rows, and the fusion is a union +
     * one hash aggregate over ≤ Σk rows — never corpus-sized. */
   def rrf(rankings: Seq[DataFrame], idCol: String = "doc_id",
-          rankConstant: Int = 60, size: Int = 10): DataFrame = {
+          rankConstant: Int = 60, size: Int = 10,
+          cfg: IndexConfig = IndexConfig()): DataFrame = {
     require(rankings.size >= 2, "rrf needs at least two rankings")
     require(rankConstant >= 1, s"rrf rank_constant must be >= 1, got $rankConstant")
     require(size >= 1, s"rrf size must be >= 1, got $size")
@@ -1921,7 +1923,7 @@ object Search {
     rankHits(contribs.reduce(_ unionAll _)
       .groupBy(col(idCol))
       .agg(sum(col("_rrf_contrib")).as("_score"),
-        count(lit(1)).cast("int").as("_rrf_matched")), size, IndexConfig(), idCol)
+        count(lit(1)).cast("int").as("_rrf_matched")), size, cfg, idCol)
   }
 
   /** ES `_rank_eval`: relevance evaluation of a query battery against

@@ -3,8 +3,8 @@ package graft
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.functions.{broadcast, col}
 import org.apache.spark.sql.graft.Bridge
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 
 /** The store-lifecycle kernel: the ONE place that knows the on-disk swap
   * protocol every materialized store shares (Krypton's base + deltas +
@@ -258,6 +258,29 @@ private[graft] object StoreFs {
           s"with DIFFERENT $differs than this batch — an exact self-replay " +
           s"would match row for row, so this is an edit, not redelivery; $edits.")
     false
+  }
+
+  /** The one partitioned write of a store whose files promise an order:
+    * `df`'s rows sorted within each task by `partitionCols ++ order`, and
+    * a writer partitioned by `partitionCols` (none: a flat store). Spark's
+    * planned write sorts by the partition columns itself unless the plan
+    * already leads with them, and the optimizer then drops any narrower
+    * sort beneath it — so `sortWithinPartitions(order)` alone leaves files
+    * in write order. Leading with the partition columns keeps `order`.
+    * A nullable string partition column is sorted in the form the write
+    * partitions by (`""` read as null — Spark's own rewrite), so the plan's
+    * order is the one the write asks for. Clustering (`repartition`) stays
+    * the caller's choice. */
+  def sortedWrite(df: DataFrame, partitionCols: Seq[String],
+                  order: Seq[String]): DataFrameWriter[Row] = {
+    val keyed = partitionCols.foldLeft(df) { (d, p) =>
+      val f = d.schema(p)
+      if (f.dataType == StringType && f.nullable)
+        d.withColumn(p, Bridge.emptyToNull(col(p)))
+      else d
+    }
+    val writer = keyed.sortWithinPartitions((partitionCols ++ order).map(col): _*).write
+    if (partitionCols.isEmpty) writer else writer.partitionBy(partitionCols: _*)
   }
 
   /** Add a NEW directory `name` under the existing `path` (a delta

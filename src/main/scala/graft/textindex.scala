@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.WordRuns
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Materialized inverted text index: the scale path for the read side.
@@ -18,9 +18,10 @@ import org.apache.spark.sql.functions._
   *  - '''Build''': tokenize indexed fields into `(token, field, doc_id)`
   *    postings — one narrow explode+distinct, no joins. The store is
   *    written `partitionBy(bucket)` where `bucket = xxhash64(token) mod N`,
-  *    sorted by `(token, field)` inside each partition, so a term lookup
-  *    [[prunes]] to one directory of N and its parquet row-group stats are
-  *    tight (the `token=` pushed filter skips most pages).
+  *    sorted by `(token, field, doc_id)` inside each file, so a term lookup
+  *    prunes to one directory of N and its parquet row-group stats are
+  *    tight (the `token=` pushed filter skips most pages); the sorted
+  *    `doc_id` runs are delta-coded ([[postingsWriter]]).
   *  - '''Query''': a Lucene-lite query is answered as *candidate retrieval +
   *    exact re-verification*. The AST is walked for a "cover": a set of
   *    token probes whose postings union is PROVABLY a superset of the
@@ -132,11 +133,20 @@ object TextIndex {
     val tf = count(lit(1)).cast("int").as("tf")
     val grouped = tokenized
       .groupBy((Seq("token", "field", "doc_id") ++ segNames).map(col): _*)
+    // the build's parameters ride on `bucket`'s metadata, so
+    // [[writePostings]] describes the store without reading it back
+    val stamp = new org.apache.spark.sql.types.MetadataBuilder()
+      .putLong(StampBuckets, nBuckets)
+      .putStringArray(StampFields, fields.distinct.sorted.toArray).build()
     (if (positional)
        grouped.agg(tf, sort_array(collect_list(col("pos"))).as("positions"))
      else grouped.agg(tf))
       .withColumn("bucket", pmod(xxhash64(col("token")), lit(nBuckets)).cast("int"))
+      .withMetadata("bucket", stamp)
   }
+
+  private[graft] val StampBuckets = "graft.postings.nBuckets"
+  private[graft] val StampFields = "graft.postings.fields"
 
   /** Token-level terms aggregation served from the postings store ALONE —
     * the index-side analog of an ES terms agg over an analyzed text field
@@ -328,40 +338,66 @@ object TextIndex {
 
   private val MetaFile = "_graft_index.json"
 
-  /** Write the postings store: clustered by bucket (one file per partition
-    * dir, not tasks×buckets), sorted by `(token, field)` within files so
-    * parquet min/max stats make the pushed token filter skip most
-    * row groups. */
+  /** Row order within every postings file: `token` leads, so the pushed
+    * token filter skips row groups by their min/max stats, and each
+    * `(token, field)` run lists its doc ids in ascending order. */
+  private val PostingsOrder = Seq("token", "field", "doc_id")
+
+  /** The one postings file write ([[writePostings]], [[appendPostings]]
+    * and the [[rewritePostings]] behind compaction and purge): clustered by
+    * the partition columns (one file per partition dir, not tasks×buckets)
+    * and sorted by [[PostingsOrder]] within files, as Parquet v2 pages with
+    * no dictionary for `doc_id` — its sorted runs are then front-coded
+    * (`DELTA_BYTE_ARRAY`) as strings or delta-packed
+    * (`DELTA_BINARY_PACKED`) as integers. Every other column keeps its
+    * dictionary. Files written before this layout stay readable beside it:
+    * the encodings are per file. */
+  private def postingsWriter(postings: DataFrame,
+                             parts: Seq[String]): DataFrameWriter[Row] =
+    StoreFs.sortedWrite(postings.repartition(parts.map(col): _*), parts, PostingsOrder)
+      .option("parquet.writer.version", "PARQUET_2_0")
+      .option("parquet.enable.dictionary#doc_id", "false")
+
+  /** Write the postings store through [[postingsWriter]], then its
+    * `_graft_index.json` sidecar — from the build's own stamp on `bucket`
+    * ([[postingsOf]]), with no Spark job. A frame without the stamp falls
+    * back to reading the written store, as [[openPostings]] does for a
+    * store without a sidecar. The stamp names the build's fields, so a
+    * frame filtered to fewer fields after the build must not carry it
+    * (`withMetadata("bucket", Metadata.empty)`): a field the sidecar names
+    * but the store lacks serves no candidates. */
   def writePostings(postings: DataFrame, path: String,
                     segmentCol: Option[String] = None): Unit = {
     // segment (when present) leads the partition path so lifecycle ops stay
     // top-level directory ops; bucket pruning filters across segment dirs
-    val parts = segmentCol.toSeq :+ "bucket"
-    postings.repartition(parts.map(col): _*)
-      .sortWithinPartitions("token", "field")
-      .write.mode("overwrite").partitionBy(parts: _*).parquet(path)
-    // derive the sidecar from the WRITTEN data (not the build plan, which
-    // would re-run the tokenize+aggregate): bucket count from the hash
-    // domain actually used, fields from the postings rows
+    postingsWriter(postings, segmentCol.toSeq :+ "bucket")
+      .mode("overwrite").parquet(path)
     val spark = postings.sparkSession
+    val positional = postings.columns.contains("positions")
+    val stamp = postings.schema("bucket").metadata
     // an empty corpus writes no files at all (bootstrap: indexing an empty
     // table) — record an empty-store sidecar; openPostings/searchStore then
     // fall back to the scan executor, since nothing is indexed
     val meta =
       if (!StoreFs.hasDataFiles(spark, path))
-        IndexMeta(1, Seq.empty, postings.columns.contains("positions"), segmentCol)
-      else {
-        val written = StoreFs.read(spark, Seq(path), Some(path))
-        val fields = written.select("field").distinct()
-          .collect().map(_.getString(0)).sorted.toSeq
-        IndexMeta(inferBuckets(written), fields,
-          written.columns.contains("positions"), segmentCol)
-      }
+        IndexMeta(1, Seq.empty, positional, segmentCol)
+      else if (stamp.contains(StampBuckets) && stamp.contains(StampFields))
+        IndexMeta(stamp.getLong(StampBuckets).toInt,
+          stamp.getStringArray(StampFields).toSeq, positional, segmentCol)
+      else inferMeta(StoreFs.read(spark, Seq(path), Some(path)), segmentCol)
     val metaJson =
       s"""{"nBuckets":${meta.nBuckets},"fields":[${meta.fields.map("\"" + _ + "\"").mkString(",")}],""" +
       s""""positional":${meta.positional},"segmentCol":${meta.segmentCol.map("\"" + _ + "\"").getOrElse("null")}}"""
     StoreFs.writeMarker(spark, path, MetaFile, metaJson)
   }
+
+  /** A non-empty store's parameters read back from its rows (two Spark
+    * jobs) — exact for nBuckets, fields and positional; the segment column
+    * is not in the rows, so the caller names it. */
+  private def inferMeta(written: DataFrame, segmentCol: Option[String]): IndexMeta =
+    IndexMeta(inferBuckets(written),
+      written.select("field").distinct().collect().map(_.getString(0)).sorted.toSeq,
+      written.columns.contains("positions"), segmentCol)
 
   /** The bucket count is recoverable from any non-empty store because
     * `bucket = pmod(xxhash64(token), N)`: verify a candidate N by checking
@@ -407,10 +443,8 @@ object TextIndex {
         IndexMeta(1, Seq.empty, positional = false, None)
       case None =>
         // stores written before the sidecar (or by hand): reconstruct from
-        // the data — exact for nBuckets/fields/positional, unknown segment
-        IndexMeta(inferBuckets(df),
-          df.select("field").distinct().collect().map(_.getString(0)).sorted.toSeq,
-          df.columns.contains("positions"), None)
+        // the data, segment column unknown
+        inferMeta(df, None)
     }
     (df, meta)
   }
@@ -470,10 +504,7 @@ object TextIndex {
     val parts = segmentCol.toSeq :+ "bucket"
     val built0 = buildPostings(newDocs, idCol, fields, nBuckets, segmentCol)
     val built = gen.map(g => built0.withColumn("gen", lit(g))).getOrElse(built0)
-    built
-      .repartition(parts.map(col): _*)
-      .sortWithinPartitions("token", "field")
-      .write.mode("append").partitionBy(parts: _*).parquet(path)
+    postingsWriter(built, parts).mode("append").parquet(path)
   }
 
   /** Rebuild ONE segment's postings from the current store — the bounded
@@ -564,10 +595,8 @@ object TextIndex {
     }
     val parts = segCol.toSeq :+ "bucket"
     StoreFs.stagedRewrite(spark, path) { tmp =>
-      transform(StoreFs.read(spark, Seq(path), Some(path)))
-        .repartition(parts.map(col): _*)
-        .sortWithinPartitions("token", "field")
-        .write.mode("overwrite").partitionBy(parts: _*).parquet(tmp)
+      postingsWriter(transform(StoreFs.read(spark, Seq(path), Some(path))), parts)
+        .mode("overwrite").parquet(tmp)
       sidecars.foreach { case (n, raw) => StoreFs.writeMarker(spark, tmp, n, raw) }
     }
     (before, dataFiles(root))

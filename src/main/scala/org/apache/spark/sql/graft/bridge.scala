@@ -25,6 +25,13 @@ object Bridge {
   def catalystExpression(c: Column): Expression =
     org.apache.spark.sql.classic.ColumnNodeToExpressionConverter(c.node)
 
+  /** `c` with `""` read as null: the rewrite Spark's planned write applies
+    * to a nullable string partition column (`V1WritesUtils`), spelled in
+    * the plan so the write finds it there and adds no projection of its
+    * own. */
+  def emptyToNull(c: Column): Column =
+    column(org.apache.spark.sql.catalyst.expressions.Empty2Null(expression(c)))
+
   /** Render a Column's full Catalyst tree as SQL. */
   def sql(c: Column): String = catalystExpression(c).sql
 

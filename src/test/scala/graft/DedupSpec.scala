@@ -1036,6 +1036,27 @@ class DedupSpec extends AnyFunSuite {
     keyedServesLive(dir, docs.where(!col("id").isin(3, 6)))
   }
 
+  test("keyed ledger files are (doc_id, gram)-sorted after a build, an " +
+       "append and a delete sweep") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_ledger_order").toString
+    // ids out of row order, so a file in write order is not sorted by chance
+    val docs = (0 until 300).map(i => ((i * 37) % 300,
+      s"w${i % 11} w${i % 7} w${i % 5} w${i % 3} w${i % 13}")).toDF("id", "text")
+    def assertSorted(): Unit = SparkSpecBase.dataFiles(s"$dir/ng/bydoc").foreach { f =>
+      assert(SparkSpecBase.ascending(SparkSpecBase.fileRows(f, "doc_id", "g"),
+        numeric = Set(0)), s"${f.getPath} is not (doc_id, g)-sorted")
+    }
+    TextStats.writeNgramCountsKeyed(docs.where(col("id") < 200), "text", "id", 3,
+      s"$dir/ng")
+    assertSorted()
+    TextStats.appendNgramCountsKeyed(docs.where(col("id") >= 200), "text", "id", 3,
+      s"$dir/ng")
+    assertSorted()
+    TextStats.subtractNgramCounts(spark, s"$dir/ng", (0 until 300 by 4).toDF("id"))
+    assertSorted()
+    keyedServesLive(dir, docs.where(col("id") % 4 =!= 0))
+  }
+
   test("keyed ledger: LongType delete ids (spark.range) against an " +
        "Int-keyed ledger really remove the docs") {
     val dir = java.nio.file.Files.createTempDirectory("graft_idtype").toString

@@ -556,6 +556,19 @@ class PlanSpec extends AnyFunSuite {
   private def tmpDir(name: String) =
     java.nio.file.Files.createTempDirectory(name).toString
 
+  test("bulk postings build: the sidecar comes from the build, not from " +
+       "jobs that read the written store back") {
+    import spark.implicits._
+    val path = tmpDir("graft_pin_postings")
+    val docs = Seq((1L, "spark makes batch fast", "en"),
+      (2L, "batch jobs filter rows", "de")).toDF("doc_id", "text", "lang")
+    val (_, jobs) = jobsDuring(TextIndex.writePostings(
+      TextIndex.buildPostings(docs, "doc_id", Seq("text", "lang"), 8), path))
+    assert(jobs == 3, s"writePostings(buildPostings(…)) launched $jobs job(s)")
+    assert(TextIndex.openPostings(spark, path)._2 ==
+      TextIndex.IndexMeta(8, Seq("lang", "text"), false, None))
+  }
+
   test("append-contract jobs: appendNorms on a fresh batch") {
     import spark.implicits._
     val path = s"${tmpDir("graft_pin_norms")}/norms"

@@ -946,6 +946,14 @@ class SearchSpec extends AnyFunSuite {
     assert(intercept[IllegalArgumentException](
       paged(""""size": 2, "sort": [{"doc_id": "asc"}],"""))
       .getMessage.contains("sort"))
+    // so are collapse (ES rejects it with rescore) and search_after (the
+    // window pages by from/size)
+    assert(intercept[IllegalArgumentException](
+      paged(""""size": 2, "collapse": {"field": "lang"},"""))
+      .getMessage.contains("collapse"))
+    assert(intercept[IllegalArgumentException](
+      paged(""""size": 2, "search_after": [2.0, "1"],"""))
+      .getMessage.contains("search_after"))
   }
 
   test("terms lookup: array and scalar paths splice literal lists; missing doc matches nothing") {
@@ -1061,6 +1069,19 @@ class SearchSpec extends AnyFunSuite {
     assert(intercept[IllegalArgumentException](Search.retriever(docs,
       """{"retriever": {"linear": {}}}""", IndexConfig(), Seq("doc_id")))
       .getMessage.contains("unsupported retriever type"))
+    // the fused list ranks under the caller's max-results cap, like its
+    // legs: 3 docs fuse, a cap of 2 keeps 2 whatever the body's size
+    val capped = IndexConfig(maxResults = 2)
+    val fused = Search.retriever(docs,
+      """{"retriever": {"rrf": {"retrievers": [
+            {"standard": {"query": {"match": {"text": "spark"}}}},
+            {"standard": {"query": {"match": {"text": "flink"}}}}],
+          "rank_window_size": 2}}, "size": 3}""", capped, Seq("doc_id"))
+    assert(fused.count() == 2)
+    val legs = Seq("spark", "flink").map(t => Search.search(docs,
+      s"""{"query": {"match": {"text": "$t"}}}""", IndexConfig(), Seq("doc_id")))
+    assert(Search.rrf(legs, size = 3).count() == 3)
+    assert(Search.rrf(legs, size = 3, cfg = capped).count() == 2)
   }
 
   test("sparse_vector: literal query vector dot doc weight maps") {
@@ -1412,6 +1433,28 @@ class SearchSpec extends AnyFunSuite {
     assert(Search.completionSuggestFromStore(spark, path, "zzz", 5).count() == 0)
     assert(Search.completionSuggestFromStore(spark, path, "sca", 5,
       contexts = Map("lang" -> Seq("xx"))).count() == 0)
+  }
+
+  test("completion store files are context-partitioned and term-sorted, " +
+       "after a build and after an append") {
+    val words = (0 until 60).map(i => s"t${(i * 17) % 60}")
+    def corpus(from: Int, n: Int) = (from until from + n).map { i =>
+      (s"$i", Seq("en", "de", "")(i % 3),
+        Seq(words(i % 60), words((i * 7) % 60), words((i * 11) % 60)).mkString(" "))
+    }.toDF("doc_id", "lang", "text")
+    val path = java.nio.file.Files.createTempDirectory("graft_compl_order").toString
+    def assertSorted(): Unit = {
+      val files = SparkSpecBase.dataFiles(path)
+      assert(files.size >= 3, files.mkString(", "))
+      files.foreach { f =>
+        assert(SparkSpecBase.ascending(SparkSpecBase.fileRows(f, "suggestion")),
+          s"${f.getPath} is not term-sorted")
+      }
+    }
+    Search.writeCompletionStore(corpus(0, 300), "text", path, contextCols = Seq("lang"))
+    assertSorted()
+    Search.appendCompletionStore(corpus(300, 90), "text", path)
+    assertSorted()
   }
 
   test("r11: termSuggestFromStore equals the direct term suggester — the " +

@@ -10,8 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * tables alike) opens through [[StoreFs.read]]; "term matches" has one
   * definition, [[QueryCompiler.termMatch]]; the index analyzer has one,
   * [[graft.functions.WordRuns]]; the relevance order has one,
-  * [[Search.relevanceOrder]]; and the multiset compare of the append
-  * contract, `exceptAll`, lives only in [[StoreFs.appendNeeded]]. Over
+  * [[Search.relevanceOrder]]; the multiset compare of the append
+  * contract, `exceptAll`, lives only in [[StoreFs.appendNeeded]]; and a
+  * sort that a partitioned write must keep is declared only through
+  * [[StoreFs.sortedWrite]]. Over
   * `src/main/scala` and `src/test/scala`: sessions are built only by
   * [[SparkEntry.localSession]], and the append contract has no conf
   * switch. */
@@ -133,5 +135,21 @@ class SourceLintSpec extends AnyFunSuite {
       s"${f.getName}: ${text.slice(owner, text.indexOf('(', owner))}"
     }
     assert(found == Seq("search.scala: relevanceOrder"), found.mkString("\n"))
+  }
+
+  test("a sorted partitioned write goes through StoreFs.sortedWrite") {
+    // Spark's planned write sorts by the partition columns and drops a
+    // narrower sortWithinPartitions beneath it, so a sort chained into a
+    // partitionBy write leaves unsorted files. The chain is followed to the
+    // end of its method; a Window spec's partitionBy is not a write.
+    val writerPartitionBy = """(?<!Window ?\.)partitionBy\(""".r
+    val bad = calls("""sortWithinPartitions\(""".r).collect {
+      case (f, at, text) if f.getName != Kernel && {
+            val next = text.indexOf(" def ", at)
+            val chain = text.slice(at, if (next < 0) text.length else next)
+            writerPartitionBy.findFirstIn(chain).isDefined
+          } => s"${f.getPath}: ${text.slice(at, at + 80)}"
+    }
+    assert(bad.isEmpty, bad.mkString("\n"))
   }
 }

@@ -356,10 +356,20 @@ class TextIndexSpec extends AnyFunSuite {
 
   test("self-describing store: openPostings/searchStore recover the write params") {
     val dir = java.nio.file.Files.createTempDirectory("graft-meta").toString
-    TextIndex.writePostings(
-      TextIndex.buildPostings(docs, "doc_id", Seq("text", "lang"), 32), dir)
+    val built = TextIndex.buildPostings(docs, "doc_id", Seq("text", "lang"), 32)
+    // the build stamps its parameters on `bucket`: the sidecar is written
+    // from the stamp, with no read-back of the store
+    val stamp = built.schema("bucket").metadata
+    assert(stamp.getLong(TextIndex.StampBuckets) == 32L &&
+      stamp.getStringArray(TextIndex.StampFields).toSeq == Seq("lang", "text"))
+    TextIndex.writePostings(built, dir)
     val (_, meta) = TextIndex.openPostings(spark, dir)
     assert(meta == TextIndex.IndexMeta(32, Seq("lang", "text"), false, None))
+    // a frame without the stamp (read back from a store) gets its sidecar
+    // from the written rows instead
+    val copy = java.nio.file.Files.createTempDirectory("graft-meta-copy").toString
+    TextIndex.writePostings(StoreFs.read(spark, Seq(dir), Some(dir)), copy)
+    assert(TextIndex.openPostings(spark, copy)._2 == meta)
     // searchStore needs no caller-supplied parameters and matches the scan
     val q = "text:spark OR text:batch"
     val scan = Search.search(docs, q, IndexConfig(), Seq("doc_id"))
@@ -382,6 +392,91 @@ class TextIndexSpec extends AnyFunSuite {
       dir2, Some("seg"))
     val (_, m2) = TextIndex.openPostings(spark, dir2)
     assert(m2 == TextIndex.IndexMeta(8, Seq("text"), true, Some("seg")))
+  }
+
+  /** A corpus large enough that no postings file comes out sorted by
+    * chance: 400 docs, 37 tokens, ids not in row order. */
+  private def wideDocs = (0 until 400).map { i =>
+    def w(k: Int) = s"w${(i * 7 + k * 13) % 37}"
+    ((i * 919L) % 1000, Seq(w(0), w(1), w(2), w(3)).mkString(" "),
+      if (i % 3 == 0) "de" else "en", s"s${i % 2}")
+  }.toDF("doc_id", "text", "lang", "segment")
+
+  /** Every file under `dir` is `(token, field, doc_id)`-sorted and its
+    * `doc_id` chunks are `encoding`, with no dictionary. */
+  private def assertPostingsLayout(dir: String, files: Seq[java.io.File],
+                                   encoding: String,
+                                   numericIds: Boolean = true): Unit = {
+    assert(files.nonEmpty, s"no postings files under $dir")
+    files.foreach { f =>
+      val rows = SparkSpecBase.fileRows(f, "token", "field", "doc_id")
+      assert(SparkSpecBase.ascending(rows, if (numericIds) Set(2) else Set.empty),
+        s"${f.getPath} is not (token, field, doc_id)-sorted")
+      val enc = SparkSpecBase.chunkEncodings(f, "doc_id")
+      assert(enc.contains(encoding) && !enc.exists(_.contains("DICTIONARY")),
+        s"${f.getPath}: doc_id encodings $enc")
+    }
+  }
+
+  test("postings files are (token, field, doc_id)-sorted with a delta-coded, " +
+       "dictionary-free doc_id: build, append, compaction, segments") {
+    val d = wideDocs
+    val dir = java.nio.file.Files.createTempDirectory("graft-sorted").toString
+    TextIndex.writePostings(TextIndex.buildPostings(d.where($"doc_id" < 600L),
+      "doc_id", Seq("text", "lang"), 4), dir)
+    val built = SparkSpecBase.dataFiles(dir)
+    assertPostingsLayout(dir, built, "DELTA_BINARY_PACKED")
+    TextIndex.appendPostings(d.where($"doc_id" >= 600L), "doc_id",
+      Seq("text", "lang"), dir, 4)
+    assertPostingsLayout(dir,
+      SparkSpecBase.dataFiles(dir).filterNot(built.toSet), "DELTA_BINARY_PACKED")
+    TextIndex.compactPostings(spark, dir)
+    assertPostingsLayout(dir, SparkSpecBase.dataFiles(dir), "DELTA_BINARY_PACKED")
+    // a string partition column ahead of the bucket keeps the order too
+    val seg = java.nio.file.Files.createTempDirectory("graft-sorted-seg").toString
+    TextIndex.writePostings(TextIndex.buildPostings(d, "doc_id", Seq("text"), 4,
+      Some("segment")), seg, Some("segment"))
+    assertPostingsLayout(seg, SparkSpecBase.dataFiles(seg), "DELTA_BINARY_PACKED")
+    // string ids are front-coded
+    val str = java.nio.file.Files.createTempDirectory("graft-sorted-str").toString
+    TextIndex.writePostings(TextIndex.buildPostings(
+      d.withColumn("doc_id", format_string("d%04d", $"doc_id")), "doc_id",
+      Seq("text"), 4), str)
+    assertPostingsLayout(str, SparkSpecBase.dataFiles(str), "DELTA_BYTE_ARRAY",
+      numericIds = false)
+  }
+
+  test("a store written in the earlier layout serves appends in the sorted " +
+       "v2 layout exactly like a rebuild") {
+    val d = wideDocs
+    val mixed = java.nio.file.Files.createTempDirectory("graft-v1").toString
+    // the earlier layout: v1 pages, a dictionary-coded doc_id, no sidecar
+    TextIndex.buildPostings(d.where($"doc_id" < 600L), "doc_id",
+        Seq("text", "lang"), 4)
+      .write.mode("overwrite").partitionBy("bucket").parquet(mixed)
+    val v1 = SparkSpecBase.dataFiles(mixed)
+    assert(v1.nonEmpty && v1.forall(f =>
+      SparkSpecBase.chunkEncodings(f, "doc_id").exists(_.contains("DICTIONARY"))))
+    TextIndex.appendPostings(d.where($"doc_id" >= 600L), "doc_id",
+      Seq("text", "lang"), mixed, 4)
+    assertPostingsLayout(mixed,
+      SparkSpecBase.dataFiles(mixed).filterNot(v1.toSet), "DELTA_BINARY_PACKED")
+    val rebuilt = java.nio.file.Files.createTempDirectory("graft-v2").toString
+    TextIndex.writePostings(
+      TextIndex.buildPostings(d, "doc_id", Seq("text", "lang"), 4), rebuilt)
+    assert(TextIndex.openPostings(spark, mixed)._2 ==
+      TextIndex.openPostings(spark, rebuilt)._2)
+    for {
+      q <- Seq("text:w3", "text:w1 OR text:w20", "text:w1* AND lang:de",
+        "#options:load-rows=false#text:w5 AND NOT lang:de")
+      pure <- Seq(false, true)
+    } {
+      def hits(p: String) = TextIndex.searchStore(d, p, q, IndexConfig(),
+        Seq("doc_id"), pure).collect().map(_.toSeq).toSeq
+      val want = hits(rebuilt)
+      assert(want.nonEmpty, q)
+      assert(hits(mixed) == want, s"$q (pure = $pure)")
+    }
   }
 
   test("empty corpus: store writes cleanly, searches fall back to scan") {
